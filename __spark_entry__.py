@@ -1560,14 +1560,24 @@ def _drain_streaming_seq(
 
 def q_streaming_seq_followed_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming funnel: signup FOLLOWED BY purchase matched incrementally
-    with applyInPandasWithState (per-link state = still-unmatched As;
-    streaming/sequence.py). Server-assigned timestamps arrive in order,
-    so the drain equals the batch as-of join — the oracle. Cross-batch
-    incrementality is pinned by tests/test_streaming.py."""
-    from sneldb_spark.streaming.sequence import streaming_followed_by
+    as a 2-step streaming_chain (streaming/sequence.py), its s0_/s1_
+    columns renamed to the a_/b_ pair shape. Server-assigned timestamps
+    arrive in order, so the drain equals the batch as-of join — the
+    oracle. Cross-batch incrementality is pinned by
+    tests/test_streaming.py."""
+    from sneldb_spark.streaming.sequence import streaming_chain
+
+    def matcher(ev, head, tail, link_field):
+        return streaming_chain(ev, [head, tail], link_field).select(
+            "link",
+            F.col("s0_event_id").alias("a_event_id"),
+            F.col("s0_timestamp").alias("a_timestamp"),
+            F.col("s1_event_id").alias("b_event_id"),
+            F.col("s1_timestamp").alias("b_timestamp"),
+        )
 
     return _drain_streaming_seq(
-        spark, sf_dir, streaming_followed_by, "signup", "purchase", "ssq_gate"
+        spark, sf_dir, matcher, "signup", "purchase", "ssq_gate"
     )
 
 
@@ -1590,8 +1600,8 @@ FROM m WHERE NOT is_b AND mt IS NOT NULL"""
 
 def q_streaming_seq_preceded_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming PRECEDED BY: each arriving error pairs with the latest
-    click strictly before it — O(1) state per link key (one (ts, id)
-    pair; streaming/sequence.py). The drain over append-ordered server
+    click strictly before it — at most two clicks of state per link
+    (streaming/sequence.py). The drain over append-ordered server
     timestamps equals the batch as-of join, which is the oracle."""
     from sneldb_spark.streaming.sequence import streaming_preceded_by
 
@@ -1603,7 +1613,7 @@ def q_streaming_seq_preceded_by(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_streaming_seq_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming multi-step funnel: signup FOLLOWED BY purchase FOLLOWED BY
     click matched incrementally (streaming/sequence.py streaming_chain;
-    state per link key = incomplete chains, flat-encoded). Over
+    hash-bucketed state = incomplete chains, flat-encoded). Over
     server-timestamp-ordered arrival the drain equals the batch
     sequence_match_chain — the unrolled two-as-of-window oracle below.
     Batch parity + cross-batch incrementality pinned in
@@ -1615,25 +1625,6 @@ def q_streaming_seq_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return _drain_streaming_seq(
         spark, sf_dir, matcher, "signup", "click", "ssc_gate"
-    )
-
-
-def q_streaming_seq_chain_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same streaming 3-step chain through the COARSE-GROUPED state
-    layout (key_buckets > 0, round-6 dispatch optimization): one pandas
-    call and one flat-encoded state row per hash bucket instead of per
-    link key, with per-link semantics preserved exactly — so the drain
-    must equal the per-key layout's result and the same unrolled
-    two-as-of-window oracle."""
-    from sneldb_spark.streaming.sequence import streaming_chain
-
-    def matcher(ev, _head, _tail, link_field):
-        return streaming_chain(
-            ev, ["signup", "purchase", "click"], link_field, key_buckets=64
-        )
-
-    return _drain_streaming_seq(
-        spark, sf_dir, matcher, "signup", "click", "sscb_gate"
     )
 
 
@@ -5109,7 +5100,6 @@ def _queries_unordered() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "streaming_seq_followed_by": q_streaming_seq_followed_by,
         "streaming_seq_preceded_by": q_streaming_seq_preceded_by,
         "streaming_seq_chain": q_streaming_seq_chain,
-        "streaming_seq_chain_bucketed": q_streaming_seq_chain_bucketed,
         # --- training-data pipeline extensions ---
         "dedup_exact": q_dedup_exact,
         "dedup_clusters": q_dedup_clusters,
@@ -5422,7 +5412,6 @@ FROM p FULL OUTER JOIN c ON p.bucket = c.bucket""",
         "streaming_seq_followed_by": _STREAMING_SEQ_SQL,
         "streaming_seq_preceded_by": _STREAMING_SEQ_PRECEDED_SQL,
         "streaming_seq_chain": _STREAMING_SEQ_CHAIN_SQL,
-        "streaming_seq_chain_bucketed": _STREAMING_SEQ_CHAIN_SQL,
         "streaming_dedup": _STREAMING_DEDUP_SQL,
         "events_sessionize": _EVENTS_SESSIONIZE_SQL,
         "dedup_exact": "SELECT md5(text) AS content_hash, min(doc_id) AS keep_id, "

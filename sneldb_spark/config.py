@@ -116,9 +116,6 @@ class EngineConfig:
     approx_percentiles: bool = False
     sequence_slices: int = 0
     multi_link: bool = False
-    # stream_sequence chain state layout: 0 = one state row per link key;
-    # >0 = hash-bucketed vectorized matcher (streaming/sequence.py)
-    stream_key_buckets: int = 0
     # [materialize] serve_first: SHOW on append-only segment shapes
     # returns `stored ∪ delta` immediately (first frames stream at
     # storage-read latency — reference StoredFrameStreamer parity,
@@ -204,7 +201,6 @@ def load_config(path_or_dict) -> EngineConfig:
     cfg.approx_percentiles = ext.get("approx_percentiles", False)
     cfg.sequence_slices = int(ext.get("sequence_slices", 0))
     cfg.multi_link = ext.get("multi_link", False)
-    cfg.stream_key_buckets = int(ext.get("stream_key_buckets", 0))
 
     sc = doc.get("schema", {})
     cfg.allow_core_shadow = sc.get("allow_core_shadow", False)
@@ -263,7 +259,6 @@ def create_engine(spark: SparkSession, config) -> SnelDB:
                   approx_percentiles=cfg.approx_percentiles,
                   sequence_slices=cfg.sequence_slices,
                   multi_link=cfg.multi_link,
-                  stream_key_buckets=cfg.stream_key_buckets,
                   allow_core_shadow=cfg.allow_core_shadow,
                   materialize_serve_first=cfg.materialize_serve_first,
                   memtable_capacity=cfg.memtable_capacity)

@@ -57,7 +57,6 @@ class SnelDB:
         bloom_filters: bool = True,
         auto_compact_files: int | None = None,
         compaction_interval: int | None = None,
-        stream_key_buckets: int = 0,
         storage=None,
         allow_core_shadow: bool = False,
         materialize_serve_first: bool = True,
@@ -78,13 +77,6 @@ class SnelDB:
             from sneldb_spark.store.storage import grace_local_storage
 
             storage = grace_local_storage(root)
-        # [extensions] stream_key_buckets: coarse stateful grouping for
-        # stream_sequence chains (streaming/sequence.py `key_buckets`) —
-        # 0 keeps the one-state-row-per-link layout; >0 multiplexes links
-        # through hash buckets + the vectorized matcher (pick ~4-8x your
-        # parallelism). Changing it changes the checkpoint state schema:
-        # use a fresh checkpoint dir when flipping.
-        self.stream_key_buckets = stream_key_buckets
         self.store = EventStore(spark, root, clock=clock, wal=wal,
                                 wal_archive_dir=wal_archive_dir,
                                 bloom_filters=bloom_filters,
@@ -228,8 +220,9 @@ class SnelDB:
     ) -> DataFrame:
         """Compile the SAME sequence-QUERY text against the live store:
         `A FOLLOWED BY B [FOLLOWED BY C ...] LINKED BY k` runs the
-        incremental chain matcher, `A PRECEDED BY B LINKED BY k` the O(1)
-        latest-before matcher, over a union of the involved types'
+        incremental chain matcher, `A PRECEDED BY B LINKED BY k` the
+        latest-before matcher (streaming/sequence.py: one hash-bucketed
+        state layout for both), over a union of the involved types'
         parquet streams (new FLUSH commits arrive as files). WHERE sides,
         FOR, SINCE/UNTIL and WITHIN apply; aggregates / ORDER / LIMIT and
         USING TIME are batch-only here. Output is the matcher schema
@@ -290,10 +283,7 @@ class SnelDB:
                 ev, types[0], types[1], cmd.link_field, max_gap_s=gap
             )
         if all(k == FOLLOWED_BY for k in kinds):
-            return streaming_chain(
-                ev, types, cmd.link_field, max_gap_s=gap,
-                key_buckets=self.stream_key_buckets,
-            )
+            return streaming_chain(ev, types, cmd.link_field, max_gap_s=gap)
         raise SnelDBError(
             "streaming chains support FOLLOWED BY links (single-link "
             "PRECEDED BY aside); mixed chains are batch-only"
@@ -314,8 +304,7 @@ class SnelDB:
             raise SnelDBError("ORDER BY / LIMIT / OFFSET are batch-only")
         if cmd.is_sequence:
             raise SnelDBError(
-                "sequence queries over streams: use streaming_followed_by / "
-                "streaming_preceded_by"
+                "sequence queries over streams: use stream_sequence"
             )
         if any(a.op == "count_unique" for a in cmd.aggs):
             # Exact distinct aggregation is not expressible incrementally;

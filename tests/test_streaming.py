@@ -127,117 +127,47 @@ def test_streaming_restart_exactly_once(ingest):
 
 
 def test_streaming_followed_by_matches_across_batches(spark, tmp_path):
-    """Stateful funnel matching: pending As persist across micro-batches and
-    match the first B at-or-after; matched As leave the state."""
-    import json as _json
-    import os
-
-    from pyspark.sql import types as T
-
-    from sneldb_spark.streaming.sequence import streaming_followed_by
-
-    in_dir = str(tmp_path / "in")
-    os.makedirs(in_dir)
-    schema = T.StructType(
+    """Stateful funnel matching (A FOLLOWED BY B = a 2-step chain): pending
+    As persist across micro-batches and match the first B at-or-after;
+    matched As leave the state."""
+    got = _chain_harness(
+        spark,
+        tmp_path,
         [
-            T.StructField("event_type", T.StringType()),
-            T.StructField("timestamp", T.LongType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("session", T.StringType()),
-        ]
+            # batch 1: two As (s1, s2), one B for s1 only
+            [("view", 10, 1, "s1"), ("view", 11, 2, "s2"), ("buy", 12, 3, "s1")],
+            # batch 2: B for s2 arrives later (state carried across
+            # batches); another B for s1 must NOT rematch the already-
+            # matched A; same-ts A/B pair (s3) matches within one batch.
+            [("buy", 20, 4, "s2"), ("buy", 21, 5, "s1"),
+             ("view", 30, 6, "s3"), ("buy", 30, 7, "s3")],
+        ],
+        ["view", "buy"],
+        "funnel_matches",
     )
-
-    def write_batch(name, rows):
-        with open(os.path.join(in_dir, name), "w") as f:
-            for et, ts, eid, sess in rows:
-                f.write(
-                    _json.dumps(
-                        {"event_type": et, "timestamp": ts, "event_id": eid, "session": sess}
-                    )
-                    + "\n"
-                )
-
-    # batch 1: two As (s1, s2), one B for s1 only
-    write_batch(
-        "b1.jsonl",
-        [("view", 10, 1, "s1"), ("view", 11, 2, "s2"), ("buy", 12, 3, "s1")],
-    )
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(in_dir)
-    matches = streaming_followed_by(stream, "view", "buy", "session")
-    q = (
-        matches.writeStream.format("memory")
-        .queryName("funnel_matches")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            (r["link"], r["a_event_id"], r["b_event_id"])
-            for r in spark.sql("SELECT * FROM funnel_matches").collect()
-        }
-        assert got == {("s1", 1, 3)}
-        # batch 2: B for s2 arrives later (state carried across batches);
-        # another B for s1 must NOT rematch the already-matched A; same-ts
-        # A/B pair (s3) matches within one batch.
-        write_batch(
-            "b2.jsonl",
-            [
-                ("buy", 20, 4, "s2"),
-                ("buy", 21, 5, "s1"),
-                ("view", 30, 6, "s3"),
-                ("buy", 30, 7, "s3"),
-            ],
-        )
-        q.processAllAvailable()
-        got = {
-            (r["link"], r["a_event_id"], r["b_event_id"])
-            for r in spark.sql("SELECT * FROM funnel_matches").collect()
-        }
-        assert got == {("s1", 1, 3), ("s2", 2, 4), ("s3", 6, 7)}
-    finally:
-        q.stop()
+    assert got == {("s1", 1, 3), ("s2", 2, 4), ("s3", 6, 7)}
 
 
 def test_streaming_preceded_by_latest_before(spark, tmp_path):
-    import json as _json
-    import os
-
-    from pyspark.sql import types as T
-
-    from sneldb_spark.streaming.sequence import streaming_preceded_by
-
-    in_dir = str(tmp_path / "in")
-    os.makedirs(in_dir)
-    schema = T.StructType(
+    """Each A pairs with the latest B strictly before it, across
+    micro-batches. The latest B of an earlier micro-batch can tie a later
+    A's timestamp (s3); the A then pairs with the B before it, which state
+    must still hold."""
+    got = _preceded_harness(
+        spark,
+        tmp_path,
         [
-            T.StructField("event_type", T.StringType()),
-            T.StructField("timestamp", T.LongType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("session", T.StringType()),
-        ]
+            [("pay", 10, 1, "s1"), ("pay", 12, 2, "s1"), ("ship", 15, 3, "s1"),
+             ("ship", 5, 4, "s2"),  # s2: ship with no prior pay -> no match
+             ("pay", 10, 8, "s3"), ("pay", 12, 9, "s3")],
+            [("ship", 20, 5, "s1"),  # still pairs with latest pay (id 2)
+             # same ts: strict < -> no match
+             ("pay", 30, 6, "s2"), ("ship", 30, 7, "s2"),
+             ("ship", 12, 10, "s3")],
+        ],
+        "ship", "pay", "preceded_matches",
     )
-    rows1 = [("pay", 10, 1, "s1"), ("pay", 12, 2, "s1"), ("ship", 15, 3, "s1"),
-             ("ship", 5, 4, "s2")]   # s2: ship with no prior pay -> no match
-    rows2 = [("ship", 20, 5, "s1"),  # still pairs with latest pay (id 2)
-             ("pay", 30, 6, "s2"), ("ship", 30, 7, "s2")]  # same ts: strict < -> no match
-    for name, rows in (("b1.jsonl", rows1), ("b2.jsonl", rows2)):
-        with open(os.path.join(in_dir, name), "w") as f:
-            for et, ts, eid, sess in rows:
-                f.write(_json.dumps({"event_type": et, "timestamp": ts,
-                                     "event_id": eid, "session": sess}) + "\n")
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(in_dir)
-    matches = streaming_preceded_by(stream, "ship", "pay", "session")
-    q = (matches.writeStream.format("memory").queryName("preceded_matches")
-         .outputMode("append").option("checkpointLocation", str(tmp_path / "ckpt")).start())
-    try:
-        q.processAllAvailable()
-        got = {(r["link"], r["a_event_id"], r["b_event_id"])
-               for r in spark.sql("SELECT * FROM preceded_matches").collect()}
-        assert got == {("s1", 3, 2), ("s1", 5, 2)}
-    finally:
-        q.stop()
+    assert got == {("s1", 3, 2), ("s1", 5, 2), ("s3", 10, 8)}
 
 
 def test_query_stream_live_aggregate(spark, tmp_path):
@@ -783,72 +713,36 @@ def test_streaming_followed_by_conversion_window(spark, tmp_path):
     """max_gap_s: only in-window Bs pair, the FIRST B settles an A even
     when out-of-window (no fallback — batch parity), and As older than
     the window relative to the newest event are expired from state."""
-    import json as _json
-    import os
-
-    from pyspark.sql import types as T
-
-    from sneldb_spark.streaming.sequence import streaming_followed_by
-
-    in_dir = str(tmp_path / "in")
-    os.makedirs(in_dir)
-    schema = T.StructType(
+    got = _chain_harness(
+        spark,
+        tmp_path,
         [
-            T.StructField("event_type", T.StringType()),
-            T.StructField("timestamp", T.LongType()),
-            T.StructField("event_id", T.LongType()),
-            T.StructField("session", T.StringType()),
-        ]
+            # s1 converts in-window; s2's first B is out of window (gap
+            # 50); s3's A expires silently (newest key event moves past
+            # the horizon)
+            [("view", 10, 1, "s1"), ("buy", 12, 2, "s1"),
+             ("view", 10, 3, "s2"),
+             ("view", 10, 5, "s3")],
+            [("buy", 60, 4, "s2"),
+             ("view", 100, 6, "s3"),  # advances s3's horizon; old A expired
+             ("buy", 101, 7, "s3")],  # only the NEW A should pair
+        ],
+        ["view", "buy"],
+        "funnel_window",
+        max_gap_s=10,
     )
-
-    def write_batch(name, rows):
-        with open(os.path.join(in_dir, name), "w") as f:
-            for et, ts, eid, sess in rows:
-                f.write(_json.dumps({
-                    "event_type": et, "timestamp": ts, "event_id": eid,
-                    "session": sess}) + "\n")
-
-    # s1 converts in-window; s2's first B is out of window (gap 50);
-    # s3's A expires silently (newest key event moves past the horizon)
-    write_batch("b1.jsonl", [
-        ("view", 10, 1, "s1"), ("buy", 12, 2, "s1"),
-        ("view", 10, 3, "s2"),
-        ("view", 10, 5, "s3"),
-    ])
-    write_batch("b2.jsonl", [
-        ("buy", 60, 4, "s2"),
-        ("view", 100, 6, "s3"),  # advances s3's horizon; old A expired
-        ("buy", 101, 7, "s3"),   # only the NEW A should pair
-    ])
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(in_dir)
-    matches = streaming_followed_by(stream, "view", "buy", "session", max_gap_s=10)
-    q = (
-        matches.writeStream.format("memory")
-        .queryName("funnel_window")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            (r["link"], r["a_event_id"], r["b_event_id"])
-            for r in spark.sql("SELECT * FROM funnel_window").collect()
-        }
-        assert got == {("s1", 1, 2), ("s3", 6, 7)}
-    finally:
-        q.stop()
+    assert got == {("s1", 1, 2), ("s3", 6, 7)}
 
 
-def _chain_harness(spark, tmp_path, batches, step_types, qname, **kw):
-    """Feed jsonl micro-batches (one file each) through streaming_chain and
-    return the set of (link, s0_id, s1_id, ..., sN_id) emitted tuples."""
+def _drain_batches(spark, tmp_path, batches, qname, build, cols, start=0, got=None):
+    """Feed jsonl micro-batches (one file each) of (event_type, timestamp,
+    event_id, session) rows through `build(stream)` and return the set
+    (`got`, if given) of emitted `cols` tuples. A restart on the same
+    checkpoint passes a `start` past the files the earlier run wrote."""
     import json as _json
     import os
 
     from pyspark.sql import types as T
-
-    from sneldb_spark.streaming.sequence import streaming_chain
 
     in_dir = str(tmp_path / "in")
     os.makedirs(in_dir, exist_ok=True)
@@ -861,7 +755,7 @@ def _chain_harness(spark, tmp_path, batches, step_types, qname, **kw):
         ]
     )
     def write_batch(i, rows):
-        with open(os.path.join(in_dir, f"b{i}.jsonl"), "w") as f:
+        with open(os.path.join(in_dir, f"b{start + i}.jsonl"), "w") as f:
             for et, ts, eid, sess in rows:
                 f.write(_json.dumps({
                     "event_type": et, "timestamp": ts, "event_id": eid,
@@ -869,10 +763,12 @@ def _chain_harness(spark, tmp_path, batches, step_types, qname, **kw):
 
     write_batch(0, batches[0])
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(in_dir)
-    matches = streaming_chain(stream, step_types, "session", **kw)
+    got = set() if got is None else got
+    # foreachBatch rather than the memory sink: it supports restarting
+    # from a checkpoint
     q = (
-        matches.writeStream.format("memory")
-        .queryName(qname)
+        build(stream).writeStream.queryName(qname)
+        .foreachBatch(lambda df, _: got.update(tuple(r) for r in df.select(*cols).collect()))
         .outputMode("append")
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
@@ -884,13 +780,54 @@ def _chain_harness(spark, tmp_path, batches, step_types, qname, **kw):
         for i, rows in enumerate(batches[1:], start=1):
             write_batch(i, rows)
             q.processAllAvailable()
-        n = len(step_types)
-        cols = ", ".join(["link"] + [f"s{i}_event_id" for i in range(n)])
-        return {
-            tuple(r) for r in spark.sql(f"SELECT {cols} FROM {qname}").collect()
-        }
+        return got
     finally:
         q.stop()
+
+
+def _chain_harness(spark, tmp_path, batches, step_types, qname, **kw):
+    """streaming_chain over `batches`: the set of (link, s0_id, s1_id, ...,
+    sN_id) emitted tuples."""
+    from sneldb_spark.streaming.sequence import streaming_chain
+
+    cols = ["link"] + [f"s{i}_event_id" for i in range(len(step_types))]
+    return _drain_batches(
+        spark, tmp_path, batches, qname,
+        lambda stream: streaming_chain(stream, step_types, "session", **kw), cols,
+    )
+
+
+def _preceded_harness(spark, tmp_path, batches, head, tail, qname, **kw):
+    """streaming_preceded_by over `batches`: the set of (link, a_id, b_id)
+    emitted tuples."""
+    from sneldb_spark.streaming.sequence import streaming_preceded_by
+
+    return _drain_batches(
+        spark, tmp_path, batches, qname,
+        lambda stream: streaming_preceded_by(stream, head, tail, "session", **kw),
+        ["link", "a_event_id", "b_event_id"],
+    )
+
+
+def _link_buckets(spark, *links):
+    """The set of state buckets the links hash to."""
+    from pyspark.sql import functions as F
+
+    from sneldb_spark.streaming.sequence import STATE_BUCKETS
+
+    return {
+        r[0]
+        for r in spark.createDataFrame([(x,) for x in links], "link string")
+        .select(F.pmod(F.xxhash64("link"), F.lit(STATE_BUCKETS)))
+        .collect()
+    }
+
+
+def _same_bucket(spark, *links):
+    """Assert the links share one state bucket, so a test exercises
+    several links multiplexed through one state row."""
+    buckets = _link_buckets(spark, *links)
+    assert len(buckets) == 1, buckets
 
 
 def test_streaming_chain_three_steps_across_batches(spark, tmp_path):
@@ -954,38 +891,39 @@ def test_streaming_chain_conversion_window(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "seed,gap,buckets",
-    [(7, None, 0), (23, None, 4), (5, 30, 4), (13, None, 1)],
+    "seed,gap,links",
+    [(7, None, 6), (23, None, 6), (5, 30, 6), (13, None, 6), (11, None, 400)],
 )
-def test_streaming_chain_matches_batch_chain(spark, tmp_path, seed, gap, buckets):
+def test_streaming_chain_matches_batch_chain(spark, tmp_path, seed, gap, links):
     """Parity: draining an in-timestamp-order stream equals the batch
     sequence_match_chain over the same events (the gate's oracle shape).
     With a conversion window, streaming's during-match gap check equals
     the batch WITHIN post-filter (first-at-or-after out of window kills
-    the chain in both: later candidates are only farther). The
-    `buckets>0` cases pin the coarse-grouped layout (several links
-    multiplexed through one state row — incl. the degenerate single
-    bucket) to the same results."""
+    the chain in both: later candidates are only farther). The 400-link
+    case has more links than state buckets, so several links share a
+    bucket's state row."""
     import random
 
     from pyspark.sql import functions as F
 
     from sneldb_spark.plans.sequence import sequence_match_chain
+    from sneldb_spark.streaming.sequence import STATE_BUCKETS
 
     rng = random.Random(seed)
     rows, ts, eid = [], 100, 0
-    for _ in range(120):
+    for _ in range(max(120, 8 * links)):
         ts += rng.randint(1, 3)
         eid += 1
         rows.append((
             rng.choice(["view", "cart", "buy", "other"]),
-            ts, eid, f"s{rng.randint(1, 6)}",
+            ts, eid, f"s{rng.randint(1, links)}",
         ))
+    assert links <= 6 or len({r[3] for r in rows}) > STATE_BUCKETS
     # three micro-batches, order preserved (server-ts arrival order)
-    batches = [rows[:40], rows[40:80], rows[80:]]
+    third = len(rows) // 3
+    batches = [rows[:third], rows[third:2 * third], rows[2 * third:]]
     got = _chain_harness(spark, tmp_path, batches, ["view", "cart", "buy"],
-                         f"chain_parity_{seed}_{buckets}", max_gap_s=gap,
-                         key_buckets=buckets)
+                         f"chain_parity_{seed}_{links}", max_gap_s=gap)
 
     ev = spark.createDataFrame(
         rows, "event_type string, timestamp long, event_id long, session string"
@@ -1009,55 +947,177 @@ def test_streaming_chain_matches_batch_chain(spark, tmp_path, seed, gap, buckets
     assert got == want and len(want) > 0
 
 
-@pytest.mark.parametrize("buckets", [0, 1])
-def test_streaming_chain_ttl_cap_keeps_newest(spark, tmp_path, buckets):
+@pytest.mark.parametrize("shared", [0, 1])
+def test_streaming_chain_ttl_cap_keeps_newest(spark, tmp_path, shared):
     """state_ttl_rows caps PENDING chains per link at batch end, keeping
     the NEWEST (documented output contract: oldest silently dropped on
-    hot keys). Pinned on both the per-key loop layout (buckets=0) and
-    the bucketed vectorized matcher (buckets=1, numpy cap path): 5 heads
-    on the hot link, cap 2 -> only the newest two complete; the cold
-    link (1 chain, under cap) is untouched."""
+    hot keys): 5 heads on the hot link, cap 2 -> only the newest two
+    complete; the cold link (1 chain, under cap) is untouched. Pinned
+    with the cold link in a state bucket of its own (shared=0) and in
+    the hot link's bucket (shared=1), where one state row holds both."""
+    cold = "c70" if shared else "c"
+    assert len(_link_buckets(spark, "h", cold)) == 2 - shared
     got = _chain_harness(
         spark,
         tmp_path,
         [
-            # 5 pending heads on h (cap drops ids 1-3 at batch end), 1 on c
+            # 5 pending heads on h (cap drops ids 1-3 at batch end), 1 on cold
             [("view", 10, 1, "h"), ("view", 11, 2, "h"), ("view", 12, 3, "h"),
-             ("view", 13, 4, "h"), ("view", 14, 5, "h"), ("view", 10, 6, "c")],
+             ("view", 13, 4, "h"), ("view", 14, 5, "h"), ("view", 10, 6, cold)],
             [("cart", 20, 7, "h"), ("buy", 21, 8, "h"),
-             ("cart", 20, 9, "c"), ("buy", 21, 10, "c")],
+             ("cart", 20, 9, cold), ("buy", 21, 10, cold)],
         ],
         ["view", "cart", "buy"],
-        f"chain_ttl_{buckets}",
+        f"chain_ttl_{shared}",
         state_ttl_rows=2,
-        key_buckets=buckets,
     )
-    assert got == {("h", 4, 7, 8), ("h", 5, 7, 8), ("c", 6, 9, 10)}
+    assert got == {("h", 4, 7, 8), ("h", 5, 7, 8), (cold, 6, 9, 10)}
 
 
 def test_streaming_chain_expiry_horizon_is_per_link(spark, tmp_path):
     """Expiry horizons are PER LINK, from each link's own batch-max ts —
     a link that saw no events this batch must keep its pending chains
     even when another link in the same bucket moved time far forward
-    (bucketed layout: both links share one state row, so a global-max
-    horizon would wrongly evict b's chain in batch 2)."""
+    (both links share one state row, so a bucket-max horizon would
+    wrongly evict c5's chain in batch 2)."""
+    _same_bucket(spark, "a", "c5")
     got = _chain_harness(
         spark,
         tmp_path,
         [
-            [("view", 10, 1, "a"), ("view", 10, 2, "b")],
+            [("view", 10, 1, "a"), ("view", 10, 2, "c5")],
             # only a sees events; its chain expires (cursor 10 < 100-10).
-            # b is untouched: horizon must not move for it.
+            # c5 is untouched: horizon must not move for it.
             [("cart", 100, 3, "a")],
-            [("cart", 15, 4, "b"), ("buy", 20, 5, "b"),
+            [("cart", 15, 4, "c5"), ("buy", 20, 5, "c5"),
              ("cart", 110, 6, "a"), ("buy", 115, 7, "a")],
         ],
         ["view", "cart", "buy"],
         "chain_perlink_horizon",
         max_gap_s=10,
-        key_buckets=1,
     )
-    assert got == {("b", 2, 4, 5)}
+    assert got == {("c5", 2, 4, 5)}
+
+
+@pytest.mark.parametrize("gap", [None, 3])
+def test_streaming_preceded_by_matches_board_oracle(spark, tmp_path, gap):
+    """Parity with the correctness board's as-of oracle SQL (DuckDB) over
+    three micro-batches. Timestamps repeat, so batch boundaries split
+    equal-ts runs (cross-batch ties); with a window the oracle's pairs
+    are post-filtered on the gap (the latest B is the closest)."""
+    import random
+
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as entry
+
+    rng = random.Random(26)
+    rows, ts = [], 100
+    for eid in range(1, 241):
+        ts += rng.randint(0, 2)
+        rows.append((rng.choice(["error", "click", "click", "other"]),
+                     ts, eid, f"s{rng.randint(1, 3)}"))
+    assert rows[79][1] == rows[80][1]  # a batch boundary splits a ts run
+    got = _preceded_harness(
+        spark, tmp_path, [rows[:80], rows[80:160], rows[160:]],
+        "error", "click", f"preceded_parity_{gap}", max_gap_s=gap,
+    )
+
+    events = pd.DataFrame(rows, columns=["event_type", "t", "event_id", "user_id"])
+    events["ts"] = pd.to_datetime(events["t"], unit="s")
+    events["props"] = "{}"
+    events["value"] = 0.0
+    con = duckdb.connect()
+    con.register("events", events)
+    oracle = con.execute(entry.oracle_sql()["streaming_seq_preceded_by"]).fetchall()
+    want = {
+        (link, a_id, b_id)
+        for link, a_id, a_ts, b_id, b_ts in oracle
+        if gap is None or a_ts - b_ts <= gap
+    }
+    assert got == want and len(want) > 0
+
+
+@pytest.mark.parametrize("layout", ["per_link_key", "unstamped_buckets"])
+def test_streaming_chain_rejects_old_layout_checkpoint(spark, tmp_path, layout):
+    """Checkpoints of the earlier layouts fail Spark's state schema check
+    on restart instead of emitting rows from mismatched state: the
+    per-link-key layout (state grouped by a string `__link`) on its key
+    schema, the bucketed layout without the bucket-count stamp on its
+    value schema."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from sneldb_spark.streaming.sequence import streaming_chain
+
+    flat = [
+        T.StructField("steps", T.ArrayType(T.IntegerType())),
+        T.StructField("flat_ts", T.ArrayType(T.LongType())),
+        T.StructField("flat_id", T.ArrayType(T.LongType())),
+    ]
+    if layout == "per_link_key":
+        key_name, key, fields = "__link", F.col("session"), flat
+        error = "STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE"
+    else:
+        key_name, key = "__bucket", F.pmod(F.xxhash64("session"), F.lit(256))
+        fields = [T.StructField("links", T.ArrayType(T.StringType())), *flat]
+        error = "STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"
+
+    def old_matcher(_key, pdfs, state):
+        for pdf in pdfs:
+            row = ([1], [int(pdf["timestamp"].max())], [1])
+            state.update(row if layout == "per_link_key" else ([pdf["link"].iloc[0]], *row))
+        return iter(())
+
+    def build(stream):
+        return (
+            stream.select(key.alias(key_name), F.col("session").alias("link"), "timestamp")
+            .groupBy(key_name)
+            .applyInPandasWithState(
+                old_matcher,
+                outputStructType="link string",
+                stateStructType=T.StructType(fields),
+                outputMode="append",
+                timeoutConf=GroupStateTimeout.NoTimeout,
+            )
+        )
+
+    _drain_batches(spark, tmp_path, [[("view", 10, 1, "s1")]], "old_layout",
+                   build, ["link"])
+    emitted = set()
+    with pytest.raises(Exception, match=error):
+        _drain_batches(
+            spark, tmp_path, [[("cart", 20, 2, "s1")]], "new_layout",
+            lambda st: streaming_chain(st, ["view", "cart"], "session"),
+            ["link"], start=1, got=emitted,
+        )
+    assert not emitted
+
+
+def test_streaming_chain_rejects_other_bucket_count(spark, tmp_path, monkeypatch):
+    """State rows are stamped with the bucket count: a restart under a
+    different count raises a RuntimeError naming both counts instead of
+    reading pending chains from the wrong buckets."""
+    from sneldb_spark.streaming import sequence
+
+    def build(stream):
+        return sequence.streaming_chain(stream, ["view", "cart"], "session")
+
+    # s13 hashes below 8 under 256 buckets, so it keeps its bucket key
+    # under 8 buckets and the restart finds the stamped state row
+    assert sequence.STATE_BUCKETS == 256
+    _drain_batches(spark, tmp_path, [[("view", 10, 1, "s13")]], "stamp_256",
+                   build, ["link"])
+    monkeypatch.setattr(sequence, "STATE_BUCKETS", 8)
+    with pytest.raises(
+        Exception,
+        match=r"RuntimeError.*written with 256 key buckets but this engine "
+              r"uses 8: delete the checkpoint and re-drain",
+    ):
+        _drain_batches(spark, tmp_path, [[("cart", 20, 2, "s13")]], "stamp_8",
+                       build, ["link"], start=1)
 
 
 def test_streaming_chain_over_live_store_stream(spark, tmp_path):

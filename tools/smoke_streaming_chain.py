@@ -5,11 +5,10 @@ split them into T time-ordered parquet files, drain them as T micro-batches
 time order), and compare match count + wall time against the batch
 sequence_match_chain over the same events.
 
-Usage: python tools/smoke_streaming_chain.py [n_events] [n_keys] [n_batches] [key_buckets]
+Usage: python tools/smoke_streaming_chain.py [n_events] [n_keys] [n_batches]
 
-key_buckets > 0 (default 256) runs the coarse-grouped matcher: one
-Python dispatch per hash bucket instead of per link key (VERDICT r5 #3);
-0 runs the one-group-per-key layout.
+The matcher runs one Python dispatch per hash bucket
+(streaming/sequence.py STATE_BUCKETS), not per link key.
 """
 
 from __future__ import annotations
@@ -27,7 +26,7 @@ from pyspark.sql import functions as F
 from sneldb_spark.commands.ast import FOLLOWED_BY
 from sneldb_spark.plans.sequence import sequence_match_chain
 from sneldb_spark.session import get_spark
-from sneldb_spark.streaming.sequence import streaming_chain
+from sneldb_spark.streaming.sequence import STATE_BUCKETS, streaming_chain
 
 TYPES = ["t0", "t1", "t2"]
 
@@ -36,7 +35,6 @@ def main():
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
     keys = int(sys.argv[2]) if len(sys.argv) > 2 else 100_000
     n_batches = int(sys.argv[3]) if len(sys.argv) > 3 else 4
-    key_buckets = int(sys.argv[4]) if len(sys.argv) > 4 else 256
     spark = get_spark(app_name="smoke-streaming-chain")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -77,7 +75,7 @@ def main():
             .format("parquet")
             .load(in_dir)
         )
-        matches = streaming_chain(stream, TYPES, "link", key_buckets=key_buckets)
+        matches = streaming_chain(stream, TYPES, "link")
         t0 = time.perf_counter()
         q = (
             matches.writeStream.format("memory")
@@ -100,7 +98,7 @@ def main():
         t2 = time.perf_counter()
         assert streamed == batch, (streamed, batch)
         print(
-            f"events={n} keys={keys} batches={n_batches} buckets={key_buckets} "
+            f"events={n} keys={keys} batches={n_batches} buckets={STATE_BUCKETS} "
             f"chains={streamed} "
             f"stream_drain={t1 - t0:.1f}s batch_chain={t2 - t1:.1f}s"
         )
