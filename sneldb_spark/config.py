@@ -116,13 +116,6 @@ class EngineConfig:
     approx_percentiles: bool = False
     sequence_slices: int = 0
     multi_link: bool = False
-    # [materialize] serve_first: SHOW on append-only segment shapes
-    # returns `stored ∪ delta` immediately (first frames stream at
-    # storage-read latency — reference StoredFrameStreamer parity,
-    # src/command/handlers/show/orchestrator.rs:123-170) and folds the
-    # delta into the stored layout on a background thread; false =
-    # refresh-then-serve (SHOW blocks on the full delta persist)
-    materialize_serve_first: bool = True
     # [schema] allow_core_shadow: accept payload fields named after core
     # columns (timestamp/event_id/...) by storing them under
     # "payload_<name>" — reference-compat for scenarios whose payloads
@@ -193,9 +186,6 @@ def load_config(path_or_dict) -> EngineConfig:
         )
     cfg.gc_grace_versions = int(st.get("gc_grace_versions", 1))
 
-    mat = doc.get("materialize", {})
-    cfg.materialize_serve_first = mat.get("serve_first", True)
-
     ext = doc.get("extensions", {})
     cfg.approx_count_unique = ext.get("approx_count_unique", False)
     cfg.approx_percentiles = ext.get("approx_percentiles", False)
@@ -260,7 +250,6 @@ def create_engine(spark: SparkSession, config) -> SnelDB:
                   sequence_slices=cfg.sequence_slices,
                   multi_link=cfg.multi_link,
                   allow_core_shadow=cfg.allow_core_shadow,
-                  materialize_serve_first=cfg.materialize_serve_first,
                   memtable_capacity=cfg.memtable_capacity)
 
 

@@ -59,7 +59,6 @@ class SnelDB:
         compaction_interval: int | None = None,
         storage=None,
         allow_core_shadow: bool = False,
-        materialize_serve_first: bool = True,
         memtable_capacity: int | None = None,
     ):
         self.spark = spark
@@ -103,9 +102,7 @@ class SnelDB:
         # for a lake deployment. The EVENT segment store stays on its own
         # append-only layout (Spark reads it like any lake prefix); only
         # the swap-published materialization dirs need the protocol.
-        self.materializer = Materializer(
-            self, root, storage=storage, serve_first=materialize_serve_first
-        )
+        self.materializer = Materializer(self, root, storage=storage)
         self.auth = auth
         # Write commands are serialized: their work (parse, validate,
         # WAL append, memtable insert) is pure Python, and concurrent

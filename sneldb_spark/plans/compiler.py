@@ -292,43 +292,16 @@ class QueryCompiler:
             approx_unique=self.approx_count_unique,
         )
 
-    def compile_sequence_aggregate_partial(
-        self, q: ast.QueryCommand, matched: DataFrame
-    ) -> tuple[DataFrame, list[str]]:
-        """Mergeable per-group partial state for a SEQUENCE aggregate,
-        computed over an (already matched) pair frame — the materializer
-        feeds either the full match (REMEMBER) or just the delta pairs
-        (SHOW refresh). Field resolution and bucketing mirror
-        _compile_sequence's aggregate path exactly, so finalize produces
-        the same columns as a direct compile."""
+    def compile_chain_aggregate_partial(self, q: ast.QueryCommand, chain: DataFrame):
+        """Partial (mergeable) aggregation over an s-prefixed chain frame
+        of any length (a single link is a 2-step chain): the materializer
+        feeds the full match at REMEMBER and only DELTA chains at SHOW,
+        then merges state. Field resolution and bucketing mirror the
+        direct sequence compiles (head first, qualified names pick the
+        first step of that type), so finalize yields the same columns.
+        Returns (state_frame, group_key_names)."""
         if not (q.is_aggregate and q.is_sequence):
             raise QueryError("needs a sequence aggregate query")
-        head_type = q.sequence.head
-        _, tail_type = q.sequence.links[0]
-        resolve = self._seq_resolver(matched, head_type, tail_type)
-        bucket = None
-        if q.time_bucket:
-            tcol = resolve(q.time_field)[0].cast("long") if q.time_field else F.col(
-                A_PREFIX + "timestamp"
-            ).cast("long")
-            tc = self.time_config
-            bucket = bucket_column(
-                tcol, q.time_bucket, mode=tc.mode, timezone=tc.timezone,
-                week_start=tc.week_start,
-            )
-        return apply_partial_aggregation(
-            matched, q.aggs, q.group_by, resolve, bucket,
-            approx_unique=self.approx_count_unique,
-        )
-
-    def compile_chain_aggregate_partial(self, q: ast.QueryCommand, chain: DataFrame):
-        """Partial (mergeable) aggregation over a completed-chain frame —
-        the multi-link analogue of compile_sequence_aggregate_partial;
-        the materializer aggregates only DELTA chains and merges state.
-        Returns (state_frame, group_key_names); finalize yields the same
-        columns as the direct chain-aggregate compile."""
-        if not (q.is_aggregate and q.is_sequence and len(q.sequence.links) > 1):
-            raise QueryError("needs a multi-link chain aggregate query")
         types = q.sequence.event_types
         resolve = self._chain_resolver(chain, types)
         bucket = None

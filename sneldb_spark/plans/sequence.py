@@ -36,8 +36,6 @@ parallelism per key.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -425,48 +423,57 @@ def sequence_match_chain(
     if not kinds:
         raise ValueError("chain needs at least one link")
 
-    def match(a, b, kind, **kw):
-        if n_slices >= 2:
-            return sequence_match_sliced(a, b, link_field, kind,
-                                         n_slices=n_slices, **kw)
-        return sequence_match(a, b, link_field, kind, **kw)
+    chain = frames[0]
+    for i, (kind, nxt) in enumerate(zip(kinds, frames[1:])):
+        chain = chain_link(chain, nxt, link_field, kind, i, ts=ts, tie=tie,
+                           n_slices=n_slices)
+        if step_hook is not None:
+            chain = step_hook(chain, i + 1)
+    return chain
 
-    step_cols = [list(f.columns) for f in frames]
-    chain = match(frames[0], frames[1], kinds[0])
-    # single-selectExpr renames: per-column F.col/alias construction is a
-    # py4j round trip each, and these wide chain projections rebuild on
-    # every incremental refresh (round 12 driver-latency fix)
-    chain = chain.selectExpr(
-        *[f"{_bq(A_PREFIX + c)} AS {_bq(f's0_{c}')}" for c in step_cols[0]],
-        *[f"{_bq(B_PREFIX + c)} AS {_bq(f's1_{c}')}" for c in step_cols[1]],
-    )
-    if step_hook is not None:
-        chain = step_hook(chain, 1)
-    for i, (kind, nxt) in enumerate(zip(kinds[1:], frames[2:]), start=1):
+
+def chain_link(
+    chain: DataFrame,
+    nxt: DataFrame,
+    link_field: str,
+    kind: str,
+    i: int,
+    *,
+    ts: str = "timestamp",
+    tie: str = "event_id",
+    n_slices: int = 0,
+) -> DataFrame:
+    """One link of a stepwise chain match: link i joins step i to step
+    i+1. For i == 0, `chain` is the unprefixed head frame and the result
+    is an s0_/s1_ chain; for i >= 1, `chain` is an s-prefixed chain whose
+    cursor is step i and the result gains s{i+1}_ columns. The
+    materializer runs the same call over carried state ∪ delta, so a
+    refresh step is pair-for-pair the batch chain's."""
+    if i == 0:
+        a = chain
+        keep = [f"{_bq(A_PREFIX + c)} AS {_bq(f's0_{c}')}" for c in chain.columns]
+    else:
         # Cursor view: expose plain link/ts/tie names (s-prefixed chain
         # columns can't collide) so the pairwise matcher applies as-is.
-        cursor = chain.selectExpr(
+        a = chain.selectExpr(
             f"{_bq(f's0_{link_field}')} AS {_bq(link_field)}",
             f"{_bq(f's{i}_{ts}')} AS {_bq(ts)}",
             f"{_bq(f's{i}_{tie}')} AS {_bq(tie)}",
             *[_bq(c) for c in chain.columns],
         )
-        matched = match(cursor, nxt, kind, ts_a=ts, ts_b=ts, tie=tie)
-        step_re = re.compile(r"^s\d+_")
-        chain = matched.selectExpr(
-            *[
-                f"{_bq(A_PREFIX + c)} AS {_bq(c)}"
-                for c in cursor.columns
-                if step_re.match(c)
-            ],
-            *[
-                f"{_bq(B_PREFIX + c)} AS {_bq(f's{i + 1}_{c}')}"
-                for c in step_cols[i + 1]
-            ],
-        )
-        if step_hook is not None:
-            chain = step_hook(chain, i + 1)
-    return chain
+        keep = [f"{_bq(A_PREFIX + c)} AS {_bq(c)}" for c in chain.columns]
+    if n_slices >= 2:
+        matched = sequence_match_sliced(a, nxt, link_field, kind, n_slices=n_slices,
+                                        ts_a=ts, ts_b=ts, tie=tie)
+    else:
+        matched = sequence_match(a, nxt, link_field, kind, ts_a=ts, ts_b=ts, tie=tie)
+    # single-selectExpr renames: per-column F.col/alias construction is a
+    # py4j round trip each, and these wide chain projections rebuild on
+    # every incremental refresh (round 12 driver-latency fix)
+    return matched.selectExpr(
+        *keep,
+        *[f"{_bq(B_PREFIX + c)} AS {_bq(f's{i + 1}_{c}')}" for c in nxt.columns],
+    )
 
 
 def funnel_report(

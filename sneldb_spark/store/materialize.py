@@ -14,9 +14,11 @@ plus a high-water mark `(timestamp, event_id)` over the *source* events.
   incremental touch-up and a full rescan. Plain aggregate queries merge
   a delta partial aggregate into the stored state (reference:
   src/command/handlers/show/delta/refresher.rs) — a delta scan plus a
-  state-sized shuffle, never a history rescan. Sequence results and
-  group-LIMIT aggregates (where new rows can change WHICH groups
-  qualify) recompute when (and only when) the high-water mark moved.
+  state-sized shuffle, never a history rescan. Sequence results (one
+  link or a chain, events or aggregates) advance a stepwise match over
+  small carried per-step state plus the delta. Group-LIMIT aggregates
+  (where new rows can change WHICH groups qualify) recompute when (and
+  only when) the high-water mark moved.
 """
 
 from __future__ import annotations
@@ -41,23 +43,12 @@ from sneldb_spark.errors import MaterializationError
 
 
 class Materializer:
-    def __init__(self, engine, root: str, storage=None, serve_first: bool = True):
+    def __init__(self, engine, root: str, storage=None):
         from sneldb_spark.store.storage import LOCAL
 
         self.engine = engine
         self.root = os.path.join(root, "materialized")
         self.storage = storage if storage is not None else LOCAL
-        # serve-then-refresh SHOW (reference parity:
-        # src/command/handlers/show/orchestrator.rs:123-170 — the
-        # StoredFrameStreamer spawns BEFORE the delta pipeline, so
-        # time-to-first-frame is a storage read, not a refresh): for the
-        # append-only segment shapes (plain / sequence / chain event
-        # results) SHOW returns `stored-segments ∪ lazily-computed-delta`
-        # immediately and folds the delta into the stored layout on a
-        # background thread. Aggregate/COMPARE shapes stay synchronous —
-        # their result is a state MERGE, not an append, so there is no
-        # stored-first stream to serve.
-        self.serve_first = serve_first
         # Fold-side segment-count bound: every refresh appends one
         # interval dir, and the serve path's stored-plan cost (file
         # listing + mergeSchema footer reads) is linear in the dir
@@ -350,93 +341,52 @@ class Materializer:
             )
         )
 
-    def _seq_incrementable(self, q, manifest: dict) -> bool:
-        """Non-aggregate single-link sequence results refresh by matching
-        only the delta against small carried state (see _refresh_sequence).
-        Excluded: USING TIME (a user field is not append-ordered, so the
-        'new events have the highest ts' invariant the delta logic rests
-        on would not hold), LIMIT (caps matched sequences — a delta pair
-        could displace a stored one), and retention options."""
-        return (
-            isinstance(q, ast.QueryCommand)
-            and not q.is_aggregate
-            and self._seq_delta_safe(q, manifest)
-        )
-
-    def _seq_agg_incrementable(self, q, manifest: dict) -> bool:
-        """Sequence AGGREGATES refresh by aggregating only the DELTA
-        PAIRS into mergeable per-group state (pairs are append-only under
-        server timestamps, so the same merge the plain aggregates use is
-        exact over them)."""
+    def _sequence_incrementable(self, q, manifest: dict) -> bool:
+        """Whether a sequence materialization (events or aggregates, one
+        link or a chain) refreshes by stepwise delta match against
+        carried per-step state — one predicate for every step count, a
+        single link being a 2-step chain. Each step carries what a future
+        delta event can still reach (see _chain_advance). Chains take
+        FOLLOWED BY links only (and need multi_link); a single link may
+        also be PRECEDED BY. WITHIN is delta-safe: the stepwise match
+        runs UNFILTERED (an advance with a too-wide gap still consumes
+        the step) and every adjacent gap filters at emission only.
+        ORDER BY without LIMIT is accepted: segment layouts serve rows in
+        no fixed order, as plain ORDER BY materializations always have.
+        Excluded: USING TIME (a user field is not append-ordered, so 'new
+        events have the highest ts' would not hold), LIMIT/OFFSET (a
+        delta chain could displace a stored one), retention options and
+        the approx-percentile sketch (no merge)."""
+        from sneldb_spark.commands.ast import FOLLOWED_BY
         from sneldb_spark.plans.aggregates import is_percentile
 
         return (
             isinstance(q, ast.QueryCommand)
-            and q.is_aggregate
-            and self._seq_delta_safe(q, manifest)
-            # same rule as _agg_incrementable: only the approx-percentile
-            # sketch lacks a merge
+            and q.is_sequence
+            and (
+                len(q.sequence.links) == 1
+                or self.engine.compiler.multi_link
+                and all(k == FOLLOWED_BY for k, _ in q.sequence.links)
+            )
+            and q.limit is None
+            and q.offset is None
+            and q.sequence_time_field is None
+            and manifest.get("max_rows") is None
+            and manifest.get("max_age_seconds") is None
             and not (
-                self.engine.compiler.approx_percentiles
+                q.is_aggregate
+                and self.engine.compiler.approx_percentiles
                 and any(is_percentile(a.op) for a in q.aggs)
             )
         )
 
     @staticmethod
-    def _seq_delta_safe(q, manifest: dict) -> bool:
-        return (
-            isinstance(q, ast.QueryCommand)
-            and q.is_sequence
-            and len(q.sequence.links) == 1
-            and q.limit is None
-            and q.offset is None
-            and q.sequence_time_field is None
-            # WITHIN is delta-safe: the as-of match runs UNFILTERED (so
-            # consumed-A state stays exact) and the window filter applies
-            # to emitted pairs only — see _within_pairs
-            and manifest.get("max_rows") is None
-            and manifest.get("max_age_seconds") is None
-        )
-
-    def _chain_incrementable(self, q, manifest: dict) -> bool:
-        """Multi-link FOLLOWED BY chains refresh by stepwise delta match
-        against carried per-step state: pending chains (matched through
-        step i, awaiting i+1 — identity is the head event, chains are
-        one-per-head) plus boundary events of each step type at the
-        high-water second. WITHIN is delta-safe the same way the single
-        link's is: the stepwise match runs UNFILTERED (state bookkeeping
-        stays exact — an advance with a too-wide gap still consumes the
-        step) and every adjacent gap filters at EMISSION only; a pending
-        chain whose cursor is older than hwm-W can never emit (its next
-        gap will exceed the window) and is pruned. Excluded: PRECEDED BY
-        links (a backward link's candidate set is not append-bounded the
-        same way), USING TIME, LIMIT/OFFSET, aggregates, retention."""
-        return self._chain_delta_safe(q, manifest) and not q.is_aggregate
-
-    def _chain_delta_safe(self, q, manifest: dict) -> bool:
-        from sneldb_spark.commands.ast import FOLLOWED_BY
-
-        return (
-            isinstance(q, ast.QueryCommand)
-            and q.is_sequence
-            and len(q.sequence.links) > 1
-            and all(k == FOLLOWED_BY for k, _ in q.sequence.links)
-            and q.limit is None
-            and q.offset is None
-            and q.sequence_time_field is None
-            and q.order_by is None
-            and manifest.get("max_rows") is None
-            and manifest.get("max_age_seconds") is None
-            and self.engine.compiler.multi_link
-        )
-
-    @staticmethod
-    def _within_chain(q, chain: DataFrame, n_steps: int) -> DataFrame:
+    def _within_chain(q, chain: DataFrame) -> DataFrame:
         """WITHIN over a completed chain: every adjacent gap bounded —
-        the same emission filter compile_chain applies."""
+        the same emission filter the direct compiles apply."""
         if q.sequence_within is None:
             return chain
-        for i in range(n_steps - 1):
+        for i in range(len(q.sequence.links)):
             gap = F.abs(
                 F.col(f"s{i + 1}_timestamp").cast("long")
                 - F.col(f"s{i}_timestamp").cast("long")
@@ -444,75 +394,49 @@ class Materializer:
             chain = chain.where(gap <= F.lit(int(q.sequence_within)))
         return chain
 
-    def _chain_first(self, heads: DataFrame, nxt: DataFrame, link: str,
-                     cols0: list[str], cols1: list[str]) -> DataFrame:
-        """Heads (unprefixed side rows) + first link -> s0_/s1_ chain."""
-        from sneldb_spark.commands.ast import FOLLOWED_BY
-        from sneldb_spark.plans.sequence import A_PREFIX, B_PREFIX, sequence_match
+    def _chain_rows(self, q, chain: DataFrame) -> DataFrame:
+        """The event rows a sequence materialization stores and serves:
+        the WITHIN-filtered completed chains, with a single link's
+        s0_/s1_ columns renamed ONCE to the pair shape's a_/b_ — so SHOW
+        columns and stored segments are those of a direct single-link
+        QUERY (one selectExpr: a py4j call for the whole rename)."""
+        from sneldb_spark.plans.sequence import A_PREFIX, B_PREFIX, _bq
 
-        from sneldb_spark.plans.sequence import _bq
-
-        pairs = sequence_match(heads, nxt, link, FOLLOWED_BY)
-        # one selectExpr py4j call for the whole rename (round-12 driver
-        # latency: these wide projections rebuild on every refresh)
-        return pairs.selectExpr(
-            *[f"{_bq(A_PREFIX + c)} AS {_bq(f's0_{c}')}" for c in cols0],
-            *[f"{_bq(B_PREFIX + c)} AS {_bq(f's1_{c}')}" for c in cols1],
-        )
-
-    def _chain_step(self, chain: DataFrame, nxt: DataFrame, link: str,
-                    i: int, cols_next: list[str]) -> DataFrame:
-        """Advance an s-prefixed chain (cursor at step i) by one link —
-        the same cursor-view trick plans/sequence.py sequence_match_chain
-        uses, so refresh steps are pair-for-pair the batch chain's."""
-        import re as _re
-
-        from sneldb_spark.commands.ast import FOLLOWED_BY
-        from sneldb_spark.plans.sequence import A_PREFIX, B_PREFIX, sequence_match
-
-        from sneldb_spark.plans.sequence import _bq
-
-        ts, tie = "timestamp", "event_id"
-        cursor = chain.selectExpr(
-            f"{_bq(f's0_{link}')} AS {_bq(link)}",
-            f"{_bq(f's{i}_{ts}')} AS {_bq(ts)}",
-            f"{_bq(f's{i}_{tie}')} AS {_bq(tie)}",
-            *[_bq(c) for c in chain.columns],
-        )
-        matched = sequence_match(
-            cursor, nxt, link, FOLLOWED_BY, ts_a=ts, ts_b=ts, tie=tie
-        )
-        step_re = _re.compile(r"^s\d+_")
-        return matched.selectExpr(
-            *[
-                f"{_bq(A_PREFIX + c)} AS {_bq(c)}"
-                for c in cursor.columns
-                if step_re.match(c)
-            ],
-            *[
-                f"{_bq(B_PREFIX + c)} AS {_bq(f's{i + 1}_{c}')}"
-                for c in cols_next
-            ],
+        chain = self._within_chain(q, chain)
+        if len(q.sequence.links) != 1:
+            return chain
+        side = {"s0_": A_PREFIX, "s1_": B_PREFIX}
+        return chain.selectExpr(
+            *[f"{_bq(c)} AS {_bq(side[c[:3]] + c[3:])}" for c in chain.columns]
         )
 
     # -- batched multi-part state (round 12) --------------------------------
-    # The per-step carry frames (chain pending_s{i}/boundary_{j}, sequence
-    # pending_a/boundary_b) used to be one parquet directory — and one Spark
-    # job + commit — EACH. At tiny-delta scale the lifecycle cost IS that
-    # job count (guide §2.6/§6), so they now land in ONE partitioned write:
-    # state/parts/__part=<name>/... plus a sidecar recording each part's
-    # exact schema (parts may differ in schema — the union null-fills to the
-    # superset and readers select the original columns back; an EMPTY part
-    # writes no partition directory at all, so readers reconstruct it from
-    # the sidecar schema). Legacy per-directory layouts remain readable.
+    # The per-step carry frames (pending_s{i}/boundary_{j}) land in ONE
+    # partitioned write: state/parts/__part=<name>/... plus a sidecar
+    # recording each part's exact schema (parts may differ in schema — the
+    # union null-fills to the superset and readers select the original
+    # columns back; an EMPTY part writes no partition directory at all, so
+    # readers reconstruct it from the sidecar schema). At tiny-delta scale
+    # the lifecycle cost IS the job count, so one job + one commit for
+    # every part. The sidecar is authoritative: a part exists iff it names
+    # it.
     _PART_COL = "__part"
     _PARTS_SUBDIR = "parts"
     _PARTS_SIDECAR = "_state_parts.json"
+    # Single-link state written before single links ran as 2-step chains
+    # named its two parts after the pair sides; read as the n=2 chain it
+    # is (the next refresh rewrites it under the step names).
+    _PAIR_PART_NAMES = {"pending_s0": "pending_a", "boundary_1": "boundary_b"}
+
+    @staticmethod
+    def _carry_parts(n: int) -> list[str]:
+        return [f"pending_s{i}" for i in range(n - 1)] + [
+            f"boundary_{j}" for j in range(1, n)
+        ]
 
     def _write_state_parts(self, state_dir: str, parts: dict[str, DataFrame]):
         """One Spark job + one commit for every carry-state part. Callers
-        guarantee the parts' shared inputs are already materialized (the
-        same contract the per-directory parallel writes had)."""
+        guarantee the parts' shared inputs are already materialized."""
         d = self._live(state_dir)
         os.makedirs(d, exist_ok=True)
         tagged = None
@@ -532,322 +456,286 @@ class Materializer:
             json.dump(schemas, f)
         os.replace(tmp, os.path.join(d, self._PARTS_SIDECAR))
 
-    def _state_part_schema_at(self, d: str, part: str):
+    def _state_part_at(self, d: str, part: str):
+        """(stored part name, schema) of one carry-state part in a
+        RESOLVED state dir, or None when the state holds no such part.
+        Raises MaterializationError for the per-directory carry layout
+        (one parquet dir per part, no sidecar) that predates the
+        partitioned state: this version does not read it."""
+        from pyspark.sql.types import StructType
+
+        aliases = (part, self._PAIR_PART_NAMES.get(part))
         p = os.path.join(d, self._PARTS_SIDECAR)
         if not os.path.exists(p):
+            if any(a and os.path.isdir(os.path.join(d, a)) for a in aliases):
+                raise MaterializationError(
+                    f"materialization state under {d} uses the per-directory "
+                    "carry layout, which this version no longer reads; FORGET "
+                    "the materialization and REMEMBER it again"
+                )
             return None
         with open(p) as f:
             schemas = json.load(f)
-        if part not in schemas:
-            return None
-        from pyspark.sql.types import StructType
-
-        return StructType.fromJson(schemas[part])
+        for stored in aliases:
+            if stored in schemas:
+                return stored, StructType.fromJson(schemas[stored])
+        return None
 
     def _state_part_exists_at(self, d: str, part: str) -> bool:
-        if os.path.isdir(
-            os.path.join(d, self._PARTS_SUBDIR, f"{self._PART_COL}={part}")
-        ):
-            return True
-        if self._state_part_schema_at(d, part) is not None:
-            return True  # written empty: no partition dir, sidecar only
-        return os.path.isdir(os.path.join(d, part))  # legacy layout
+        return self._state_part_at(d, part) is not None
 
-    def _read_state_part_at(self, d: str, part: str) -> DataFrame:
-        """Read one carry-state part from a RESOLVED state dir: batched
-        layout first (original schema restored via the sidecar; an empty
-        part reconstructs as an empty local relation), then the legacy
-        per-directory layout."""
+    def _read_carry(self, name: str, n: int) -> dict[str, DataFrame]:
+        """Every carry part of an n-step sequence from the PUBLISHED
+        state (the original schema restored via the sidecar; an empty
+        part reconstructs as an empty local relation)."""
         spark = self.engine.spark
-        pdir = os.path.join(d, self._PARTS_SUBDIR, f"{self._PART_COL}={part}")
-        schema = self._state_part_schema_at(d, part)
-        if os.path.isdir(pdir):
-            df = spark.read.parquet(pdir)
-            if schema is not None:
-                df = df.select(*[f.name for f in schema.fields])
-            return df
-        legacy = os.path.join(d, part)
-        if os.path.isdir(legacy):
-            return spark.read.parquet(legacy)
-        if schema is not None:
-            return spark.createDataFrame([], schema)
-        raise FileNotFoundError(
-            f"state part {part!r} does not exist under {d}"
-        )
-
-    def _read_state_part(self, state_dir: str, part: str) -> DataFrame:
-        return self._read_state_part_at(self._live(state_dir), part)
-
-    def _remember_chain(self, name: str, q, path: str) -> tuple[int, int]:
-        """Initial chain materialization: stepwise match, store completed
-        chains as the segment base, carry per-step state."""
-        completed, n, hwm, cleanup, write_state = self._chain_initial_match(
-            name, q
-        )
-        # base FIRST: it materializes every persisted chain step, so the
-        # parallel state writes below are pure cached-read jobs
-        self._within_chain(q, completed, n).write.mode("overwrite").parquet(
-            os.path.join(path, "base")
-        )
-        write_state()
-        cleanup()
-        return hwm
-
-    def _remember_chain_agg(self, name: str, q, manifest: dict,
-                            path: str) -> tuple[int, int]:
-        """Initial chain-AGGREGATE materialization: the stepwise match
-        once, mergeable partial state over the (window-filtered)
-        completed chains, result from the state's finalize — the same
-        one-estimator rule every aggregate materialization follows."""
-        from sneldb_spark.plans.aggregates import finalize_partial_state
-
-        approx = self.engine.compiler.approx_count_unique
-        completed, n, hwm, cleanup, write_state = self._chain_initial_match(
-            name, q
-        )
-        state, keys = self.engine.compiler.compile_chain_aggregate_partial(
-            q, self._within_chain(q, completed, n)
-        )
-        spath = self._seq_agg_state_path(name)
-        # Materialize the agg state ONCE (eager localCheckpoint — this
-        # also materializes the persisted chain steps), then run the
-        # state write, the finalize write, and the per-step carry state
-        # all concurrently: every write consumes already-materialized
-        # rows, and finalize reads the same rows the state dir holds
-        # (one-estimator rule), just without the write -> read-back leg.
-        state_ck = state.localCheckpoint(eager=True)
-        manifest["state_keys"] = keys
-
-        def _write_agg_state():
-            state_ck.write.mode("overwrite").parquet(spath)
-            self._write_state_hwm(spath, *hwm)
-
-        self._parallel_writes(
-            _write_agg_state,
-            lambda: finalize_partial_state(
-                state_ck, q.aggs, keys, approx_unique=approx
-            ).write.mode("overwrite").parquet(path),
-            write_state,
-        )
-        cleanup()
-        return hwm
-
-    def _chain_initial_match(self, name: str, q):
-        """Stepwise full match (capturing every intermediate); returns
-        (completed chains [persisted], n_steps, hwm, cleanup,
-        write_state). `write_state` writes the per-step pending/boundary
-        state dirs CONCURRENTLY (they are mutually independent small
-        frames off the persisted chain steps) — callers invoke it after
-        their own result write has materialized the persisted chains, so
-        the parallel writes are pure cached-read jobs."""
-        hwm_ts, hwm_id = self._pin_snapshot(q)
-        frames, types, kinds, link = self.engine.compiler.chain_parts(
-            q, upper=(hwm_ts, hwm_id)
-        )
-        n = len(frames)
-        cols = [f.columns for f in frames]
-        chains = [
-            self._chain_first(frames[0], frames[1], link, cols[0], cols[1]).persist()
-        ]
-        for i in range(1, n - 1):
-            chains.append(
-                self._chain_step(chains[-1], frames[i + 1], link, i, cols[i + 1])
-                .persist()
+        d = self._live(self._state_path(name))
+        out = {}
+        for part in self._carry_parts(n):
+            found = self._state_part_at(d, part)
+            if found is None:
+                raise FileNotFoundError(
+                    f"state part {part!r} does not exist under {d}"
+                )
+            stored, schema = found
+            pdir = os.path.join(
+                d, self._PARTS_SUBDIR, f"{self._PART_COL}={stored}"
             )
+            cols = [f.name for f in schema.fields]
+            out[part] = (
+                spark.read.parquet(pdir).select(*cols)
+                if os.path.isdir(pdir)
+                else spark.createDataFrame([], schema)
+            )
+        return out
+
+    # -- sequence materialization: one stepwise chain for every n ----------
+    # A single link is a 2-step chain. REMEMBER runs the stepwise match
+    # over frames closed at the probed mark; a refresh runs the SAME
+    # advance over carried state ∪ the (lower, cur] delta. Each link is
+    # plans/sequence.py chain_link — the call the batch chain compile
+    # makes — so a refresh step is pair-for-pair the direct query's.
+    def _chain_advance(self, q, parts, pin, hwm_ts: int, state=None,
+                       lower=None):
+        """Stepwise match over `parts` (compiler.chain_parts). With
+        `state` (carried parts) and `lower`, each step's candidates are
+        carried rows ∪ the delta past `lower`. `pin` materializes each
+        link's output once: it feeds the next link, the pending anti-join
+        and, for the last link, the emitted rows. Returns (chains, carry):
+        the link outputs and the per-step state a future delta can still
+        reach, chosen by the step's link kind (server timestamps are
+        append-ordered):
+
+        - FOLLOWED BY: the inputs that did NOT advance (identity is the
+          head event — chains are one-per-head; with WITHIN, only those
+          whose cursor is within the window of the mark: any later
+          candidate would miss it) plus the next step's rows ON the
+          high-water second (a delta cursor landing on that second may
+          tie them). A carried input had no eligible candidate at the old
+          mark, so its first at-or-after among boundary ∪ delta IS its
+          first overall.
+        - PRECEDED BY (a single link only): no pending rows — an old
+          cursor can never gain a strictly-earlier event — and two rows
+          of the next step per link group (_preceded_state)."""
+        from sneldb_spark.commands.ast import FOLLOWED_BY
+        from sneldb_spark.plans.sequence import chain_link
+
+        frames, _types, kinds, link = parts
+        if lower is not None:
+            frames = [self._delta_slice(f, *lower) for f in frames]
+
+        def carried(part: str, df: DataFrame) -> DataFrame:
+            if state is None:
+                return df
+            return state[part].unionByName(df, allowMissingColumns=True)
+
         gap = q.sequence_within
-
-        def _pend(i: int) -> DataFrame:
-            if i == 0:
-                pend = frames[0].join(
-                    chains[0].select(F.col("s0_event_id").alias("event_id")),
-                    "event_id", "left_anti",
+        chain, chains, carry = frames[0], [], {}
+        for i, kind in enumerate(kinds):
+            awaiting = carried(f"pending_s{i}", chain)
+            cand = carried(f"boundary_{i + 1}", frames[i + 1])
+            chain = pin(chain_link(awaiting, cand, link, kind, i))
+            chains.append(chain)
+            if kind == FOLLOWED_BY:
+                key = "event_id" if i == 0 else "s0_event_id"
+                pend = awaiting.join(
+                    chain.select(F.col("s0_event_id").alias(key)),
+                    key, "left_anti",
                 )
-                cursor_ts = "timestamp"
-            else:
-                pend = chains[i - 1].join(
-                    chains[i].select("s0_event_id"), "s0_event_id", "left_anti"
-                )
-                cursor_ts = f"s{i}_timestamp"
-            if gap is not None:
-                pend = pend.where(
-                    F.col(cursor_ts).cast("long") >= F.lit(hwm_ts - int(gap))
-                )
-            return pend
-
-        def write_state():
-            # every per-step carry frame in ONE partitioned write (one
-            # Spark job + one commit instead of 2n-2 of each)
-            parts: dict[str, DataFrame] = {
-                f"pending_s{i}": _pend(i) for i in range(n - 1)
-            }
-            for j in range(1, n):
-                parts[f"boundary_{j}"] = frames[j].where(
+                if gap is not None:
+                    cursor_ts = "timestamp" if i == 0 else f"s{i}_timestamp"
+                    pend = pend.where(
+                        F.col(cursor_ts).cast("long") >= F.lit(hwm_ts - int(gap))
+                    )
+                boundary = cand.where(
                     F.col("timestamp").cast("long") == F.lit(hwm_ts)
                 )
-            self._write_state_parts(self._state_path(name), parts)
-            self._write_state_hwm(self._state_path(name), hwm_ts, hwm_id)
+            else:
+                pend = awaiting.where(F.lit(False))
+                boundary = self._preceded_state(cand, link, hwm_ts)
+            carry[f"pending_s{i}"] = pend
+            carry[f"boundary_{i + 1}"] = boundary
+        return chains, carry
 
-        def cleanup():
+    def _write_carry(self, state_dir: str, carry: dict, mark: tuple[int, int]):
+        """Every carry part in ONE partitioned write; the hwm marker
+        lands after it."""
+        self._write_state_parts(state_dir, carry)
+        self._write_state_hwm(state_dir, *mark)
+
+    def _seq_agg_partial(self, q, chain: DataFrame):
+        """Mergeable per-group state over WITHIN-filtered chains."""
+        return self.engine.compiler.compile_chain_aggregate_partial(
+            q, self._within_chain(q, chain)
+        )
+
+    def _remember_chain(self, name: str, q, manifest: dict,
+                        path: str) -> tuple[int, int]:
+        """Initial sequence materialization, any step count: the
+        stepwise match once over frames CLOSED at the probed mark (a row
+        racing in lands in the next delta exactly once), persisted per
+        step for the duration. Events store the completed chains as the
+        segment base; aggregates store mergeable partial state and derive
+        the visible result from its finalize — the one-estimator rule
+        every aggregate materialization follows. Both carry the per-step
+        state."""
+        from sneldb_spark.plans.aggregates import finalize_partial_state
+
+        hwm = self._pin_snapshot(q)
+        parts = self.engine.compiler.chain_parts(q, upper=hwm)
+        chains, carry = self._chain_advance(q, parts, DataFrame.persist, hwm[0])
+        state_dir = self._state_path(name)
+        try:
+            if not q.is_aggregate:
+                # base FIRST: it materializes every persisted step, so
+                # the carry write below is a pure cached-read job
+                self._chain_rows(q, chains[-1]).write.mode("overwrite").parquet(
+                    os.path.join(path, "base")
+                )
+                self._write_carry(state_dir, carry, hwm)
+                return hwm
+            approx = self.engine.compiler.approx_count_unique
+            state, keys = self._seq_agg_partial(q, chains[-1])
+            spath = self._seq_agg_state_path(name)
+            # Materialize the agg state ONCE (eager localCheckpoint — this
+            # also materializes the persisted steps), then run the state
+            # write, the finalize write and the carry write concurrently:
+            # every write consumes already-materialized rows, and finalize
+            # reads the rows the state dir holds without a read-back leg.
+            state_ck = state.localCheckpoint(eager=True)
+            manifest["state_keys"] = keys
+            self._parallel_writes(
+                lambda: state_ck.write.mode("overwrite").parquet(spath),
+                lambda: finalize_partial_state(
+                    state_ck, q.aggs, keys, approx_unique=approx
+                ).write.mode("overwrite").parquet(path),
+                lambda: self._write_carry(state_dir, carry, hwm),
+            )
+            return hwm
+        finally:
             for c in chains:
                 c.unpersist()
 
-        return chains[-1], n, (hwm_ts, hwm_id), cleanup, write_state
+    def _chain_delta(self, q, lower, cur, state):
+        """The stepwise delta advance over carried `state` (published
+        reads on the fold and aggregate paths, pinned snapshots on the
+        serve path) ∪ the (lower, cur] slice. Each link's output is lazily
+        localCheckpointed: it feeds the next link, the pending anti-join
+        AND, for the last link, the served rows and the fold's writes —
+        one computation for all. Returns (completed chains, carry state
+        at cur)."""
+        chains, carry = self._chain_advance(
+            q, self.engine.compiler.chain_parts(q, upper=cur),
+            lambda df: df.localCheckpoint(eager=False), cur[0], state, lower,
+        )
+        return chains[-1], carry
 
     def _refresh_chain(self, name: str, q, manifest: dict, path: str,
                        cur: tuple[int, int], served: dict | None = None):
-        """Incremental chain refresh: per-step delta candidates
-        (boundary ∪ (lower, cur] slice), stepwise advance of carried +
-        newly-formed chains, append completed chains as an interval
-        segment, swap the per-step state as one unit. A carried chain
-        awaiting step i had NO eligible candidate at the old mark (the
-        match is unconditional — no window), so its first at-or-after
-        among boundary ∪ delta IS its first overall; same-second ties
-        ride in via the boundary frames, exactly like the single link.
-        With a `served` bundle at the same lower bound, the fold writes
-        the serve path's checkpointed frames — no second advance."""
-        lower = self._published_lower(manifest, self._state_path(name))
-        if served is not None and tuple(served["lower"]) == tuple(lower):
-            completed, new_pend, cands, n = (
-                served["completed"], served["new_pend"],
-                served["cands"], served["n"],
-            )
-            cleanup = lambda: None  # noqa: E731
-        else:
-            lower, completed, new_pend, cands, n, cleanup = (
-                self._chain_delta_match(name, q, manifest, cur)
-            )
-        seg = os.path.join(self._live(path), f"d_{lower[0]}_{lower[1]}")
+        """Fold body of an event-shaped sequence materialization: append
+        the delta's completed chains as an interval segment, swap the
+        per-step state as one unit. With a `served` bundle at the same
+        lower bound, the fold writes the serve path's checkpointed frames
+        — no second advance."""
         state = self._state_path(name)
+        lower = self._published_lower(manifest, self._live(state))
+        if served is not None and tuple(served["lower"]) == tuple(lower):
+            rows, carry = served["rows"], served["carry"]
+        else:
+            chain, carry = self._chain_delta(
+                q, lower, cur, self._read_carry(name, len(q.sequence.event_types))
+            )
+            rows = self._chain_rows(q, chain)
+        # APPEND-ONLY result: the interval-named segment is deterministic
+        # for this (lower, cur] slice, so a crashed refresh that reruns
+        # OVERWRITES it instead of duplicating it; history is never read
+        # or rewritten.
+        seg = os.path.join(self._live(path), f"d_{lower[0]}_{lower[1]}")
         nxt = self.storage.stage_path(state)
         self.storage.remove_tree(nxt)
-        # segment FIRST; a crashed rerun overwrites the same slice
-        completed.write.mode("overwrite").parquet(seg)
-        self._write_chain_next_state(nxt, q, new_pend, cands, n, cur)
-        cleanup()
+        # segment FIRST (it also materializes the checkpointed advance the
+        # carry write reads); a crashed rerun overwrites the same slice
+        rows.write.mode("overwrite").parquet(seg)
+        self._write_carry(nxt, carry, cur)
+        # Publish the state as ONE unit (store/storage.py protocol).
+        # Before the publish everything is old and a rerun redoes the
+        # delta idempotently (in-state hwm marker + interval-named segment
+        # overwrite — there is NO row-level dedup, so that idempotence is
+        # load-bearing); a crash inside the publish is repaired by
+        # recover_dir in show(), restoring the OLD state.
         self.storage.publish_dir(state)
 
     def _refresh_chain_agg(self, name: str, q, manifest: dict, path: str,
                            cur: tuple[int, int]):
-        """Incremental chain-AGGREGATE refresh: partial-aggregate only
-        the delta's completed (window-filtered) chains, merge into stored
-        per-group state, finalize — plus the same per-step pending/
-        boundary swap the plain chain refresh does. Crash ordering
-        mirrors _refresh_sequence_agg: the visible result replaces
-        before the state swap flags complete, so a crash in between
-        reruns the same delta against the OLD state idempotently."""
+        """Incremental sequence-AGGREGATE refresh: partial-aggregate only
+        the delta's completed (window-filtered) chains, merge into the
+        stored per-group state, finalize — plus the per-step carry swap.
+        Exact because completed chains are append-only (one emission per
+        head) and every aggregate op merges over disjoint row sets. The
+        visible result replaces before the state publish, so a crash in
+        between reruns the same delta against the OLD state
+        idempotently; the in-state marker keeps a crash after the state
+        publish from re-merging."""
         from sneldb_spark.plans.aggregates import (
             finalize_partial_state,
             merge_partial_states,
         )
 
-        spark = self.engine.spark
         keys = manifest["state_keys"]
         approx = self.engine.compiler.approx_count_unique
-        lower, completed, new_pend, cands, n, cleanup = self._chain_delta_match(
-            name, q, manifest, cur
+        state = self._state_path(name)
+        lower = self._published_lower(manifest, self._live(state))
+        chain, carry = self._chain_delta(
+            q, lower, cur, self._read_carry(name, len(q.sequence.event_types))
         )
-        spath = self._seq_agg_state_path(name)
-        delta_state, _ = self.engine.compiler.compile_chain_aggregate_partial(
-            q, completed
-        )
+        delta_state, _ = self._seq_agg_partial(q, chain)
         merged = merge_partial_states(
-            spark.read.parquet(spath).unionByName(
-                delta_state, allowMissingColumns=True
-            ),
+            self.engine.spark.read.parquet(self._seq_agg_state_path(name))
+            .unionByName(delta_state, allowMissingColumns=True),
             q.aggs, keys, approx_unique=approx,
         )
-        state = self._state_path(name)
         nxt = self.storage.stage_path(state)
         self.storage.remove_tree(nxt)
         nxt_agg = os.path.join(nxt, "agg_state")
         # materialize the merge ONCE (eager localCheckpoint — this also
         # materializes the stepwise-advance checkpoints the carry state
         # reads), then stage the merged state, its finalize, and the
-        # per-step carry state concurrently; the state dir and the
-        # result derive from the same materialized rows (one-estimator
-        # rule), and nothing is visible until the publishes below
+        # carry state concurrently; the state dir and the result derive
+        # from the same materialized rows (one-estimator rule), and
+        # nothing is visible until the publishes below
         merged_ck = merged.localCheckpoint(eager=True)
-        final = finalize_partial_state(
-            merged_ck, q.aggs, keys, approx_unique=approx
-        )
+        final = finalize_partial_state(merged_ck, q.aggs, keys, approx_unique=approx)
         self._parallel_writes(
             lambda: merged_ck.write.mode("overwrite").parquet(nxt_agg),
             lambda: final.write.mode("overwrite").parquet(
                 self.storage.stage_path(path)
             ),
-            lambda: self._write_chain_next_state(nxt, q, new_pend, cands, n, cur),
+            lambda: self._write_carry(nxt, carry, cur),
         )
         self.storage.publish_dir(path)
-        cleanup()
         # state publish AFTER the data replace: a promoted new state must
         # imply the visible result already reflects the merged aggregate
         self.storage.publish_dir(state)
-
-    def _write_chain_next_state(self, nxt: str, q, new_pend, cands, n: int,
-                                cur: tuple[int, int]):
-        """Every per-step pending/boundary frame in ONE partitioned write
-        (their shared inputs — the stepwise advance checkpoints — were
-        materialized by the caller's segment write); the hwm marker lands
-        after it."""
-        cur_ts = cur[0]
-        gap = q.sequence_within
-        parts: dict[str, DataFrame] = {}
-        for i, p in enumerate(new_pend):
-            if gap is not None:
-                cursor_ts = "timestamp" if i == 0 else f"s{i}_timestamp"
-                p = p.where(
-                    F.col(cursor_ts).cast("long") >= F.lit(cur_ts - int(gap))
-                )
-            parts[f"pending_s{i}"] = p
-        for j in range(1, n):
-            parts[f"boundary_{j}"] = cands[j].where(
-                F.col("timestamp").cast("long") == F.lit(cur_ts)
-            )
-        self._write_state_parts(nxt, parts)
-        self._write_state_hwm(nxt, cur[0], cur[1])
-
-    def _chain_delta_match(self, name: str, q, manifest: dict,
-                           cur: tuple[int, int]):
-        """The stepwise delta advance against the PUBLISHED state paths
-        (fold/sync path — the serve path runs the same builder over
-        pinned snapshots); returns (lower, completed [window-filtered],
-        new_pend frames, cands, n, cleanup). cleanup is a no-op kept
-        for call-site symmetry: the per-step advances are GC-scoped
-        lazy localCheckpoints now, not persists."""
-        spark = self.engine.spark
-        lower = manifest["hwm_ts"], manifest["hwm_id"]
-        marker = self._read_state_hwm(self._state_path(name))
-        if marker is not None and tuple(marker) > tuple(lower):
-            lower = marker
-        parts = self.engine.compiler.chain_parts(q, upper=cur)
-        n = len(parts[0])
-        sd = self._state_path(name)
-        state = {
-            f"pending_s{i}": self._read_state_part(sd, f"pending_s{i}")
-            for i in range(n - 1)
-        }
-        for j in range(1, n):
-            state[f"boundary_{j}"] = self._read_state_part(sd, f"boundary_{j}")
-        completed, new_pend, cands, n = self._chain_delta_frames(
-            q, cur, lower, state, parts
-        )
-        return lower, completed, new_pend, cands, n, lambda: None
-
-    def _chain_agg_incrementable(self, q, manifest: dict) -> bool:
-        """Chain AGGREGATES: completed chains are append-only per refresh
-        (one emission per head, window filter applied pre-aggregation),
-        so delta chains partial-aggregate and merge exactly like the
-        single-link sequence aggregates."""
-        from sneldb_spark.plans.aggregates import is_percentile
-
-        return (
-            self._chain_delta_safe(q, manifest)
-            and q.is_aggregate
-            and not (
-                self.engine.compiler.approx_percentiles
-                and any(is_percentile(a.op) for a in q.aggs)
-            )
-        )
 
     def _agg_incrementable(self, q, manifest: dict) -> bool:
         """Plain aggregates refresh by partial-state merge. Excluded:
@@ -896,84 +784,11 @@ class Materializer:
     def _seq_agg_state_path(self, name: str) -> str:
         return os.path.join(self._live(self._state_path(name)), "agg_state")
 
-    def _within_pairs(self, q, pairs: DataFrame) -> DataFrame:
-        """The WITHIN conversion-window filter over a matched-pair frame
-        (exact: the as-of match picked the closest candidate). Applied to
-        EMITTED pairs only — carry state must come from the UNFILTERED
-        match, because an A whose first at-or-after B fell outside the
-        window is CONSUMED (every later B is farther), not pending."""
-        from sneldb_spark.plans.sequence import A_PREFIX, B_PREFIX
-
-        return self.engine.compiler._apply_within(pairs, q, A_PREFIX, B_PREFIX)
-
-    def _seq_carry_state(
-        self, a_frame: DataFrame, b_frame: DataFrame, kind: str, link: str,
-        pairs: DataFrame, hwm_ts: int, max_gap: int | None = None,
-    ) -> tuple[DataFrame, DataFrame]:
-        """(pending A's, boundary B's) to carry for the next delta match.
-        `pairs` must cover every A in `a_frame` that is matched —
-        UNFILTERED by any WITHIN window (full pairs at REMEMBER; just the
-        new pairs at refresh, where carried pending already excludes
-        previously-matched A's). With a window, pending A's older than
-        the window relative to the high-water mark are dropped: any
-        future B (ts > hwm) would miss their window, and dropping them
-        has the same outcome as the consumed-then-filtered path."""
-        from sneldb_spark.commands.ast import FOLLOWED_BY
-        from sneldb_spark.plans.sequence import A_PREFIX
-
-        if kind == FOLLOWED_BY:
-            pending = a_frame.join(
-                pairs.select(F.col(A_PREFIX + "event_id").alias("event_id")),
-                "event_id",
-                "left_anti",
-            )
-            if max_gap is not None:
-                pending = pending.where(
-                    F.col("timestamp").cast("long") >= F.lit(hwm_ts - max_gap)
-                )
-            boundary = b_frame.where(
-                F.col("timestamp").cast("long") == F.lit(hwm_ts)
-            )
-        else:
-            pending = a_frame.where(F.lit(False))
-            boundary = self._preceded_state(b_frame, link, hwm_ts)
-        return pending, boundary
-
     @staticmethod
     def _delta_slice(df: DataFrame, hwm_ts: int, hwm_id: int) -> DataFrame:
         from sneldb_spark.plans.filters import hwm_after
 
         return df.where(hwm_after(hwm_ts, hwm_id))
-
-    def _seq_sides(self, q, upper: tuple[int, int] | None = None):
-        """sequence_parts with the read side optionally CLOSED at the
-        just-probed high-water mark: rows racing in after the probe are
-        excluded from this materialization pass and picked up exactly
-        once by the next delta — this is what makes the agg-state merge
-        (pure addition, no dedup possible) race-safe."""
-        from sneldb_spark.plans.filters import hwm_at_or_before
-
-        a, b, kind, link, ts_a, ts_b = self.engine.compiler.sequence_parts(q)
-        if upper is not None:
-            bound = hwm_at_or_before(*upper)
-            a, b = a.where(bound), b.where(bound)
-        return a, b, kind, link, ts_a, ts_b
-
-    def _seq_delta_candidates(
-        self, name: str, q, lower: tuple[int, int], upper: tuple[int, int]
-    ):
-        """(a_cand, b_cand, kind, link): carried state unioned with the
-        (lower, upper]-bounded delta of each side — the full candidate
-        set for an incremental re-match."""
-        a, b, kind, link, _ts_a, _ts_b = self._seq_sides(q, upper=upper)
-        sd = self._state_path(name)
-        a_cand = self._read_state_part(sd, "pending_a").unionByName(
-            self._delta_slice(a, *lower), allowMissingColumns=True
-        )
-        b_cand = self._read_state_part(sd, "boundary_b").unionByName(
-            self._delta_slice(b, *lower), allowMissingColumns=True
-        )
-        return a_cand, b_cand, kind, link
 
     @staticmethod
     def _preceded_state(b: DataFrame, link_field: str, hwm_ts: int) -> DataFrame:
@@ -1096,6 +911,12 @@ class Materializer:
             manifest["hwm_ts"], manifest["hwm_id"] = hwm_ts, hwm_id
             self._write_manifest(name, manifest)
             return self.engine.spark.read.parquet(path).count()
+        if q.is_sequence and (
+            len(q.sequence.links) == 1 or self.engine.compiler.multi_link
+        ):
+            # the step count this engine matched: SHOW on an engine that
+            # cannot match as many refuses instead of recomputing empty
+            manifest["chain_steps"] = len(q.sequence.event_types)
         if self._agg_incrementable(q, manifest):
             # Materialize the RESULT from the partial state's finalize so
             # the remembered values and every later state-merge refresh go
@@ -1155,31 +976,13 @@ class Materializer:
             manifest["hwm_ts"], manifest["hwm_id"] = hwm_ts, hwm_id
             self._write_manifest(name, manifest)
             return self._read_segments(path).count()
-        elif self._chain_agg_incrementable(q, manifest):
-            hwm_ts, hwm_id = self._remember_chain_agg(name, q, manifest, path)
-            manifest["seq_state"] = True
-            manifest["chain_steps"] = len(q.sequence.event_types)
-            manifest["hwm_ts"], manifest["hwm_id"] = hwm_ts, hwm_id
-            self._write_manifest(name, manifest)
-            return self.engine.spark.read.parquet(path).count()
-        elif self._chain_incrementable(q, manifest):
-            hwm_ts, hwm_id = self._remember_chain(name, q, path)
-            manifest["seq_state"] = True
-            manifest["chain_steps"] = len(q.sequence.event_types)
-            manifest["hwm_ts"], manifest["hwm_id"] = hwm_ts, hwm_id
-            self._write_manifest(name, manifest)
-            return self._read_segments(path).count()
-        elif self._seq_agg_incrementable(q, manifest):
-            hwm_ts, hwm_id = self._remember_sequence_agg(name, q, manifest, path)
+        elif self._sequence_incrementable(q, manifest):
+            hwm_ts, hwm_id = self._remember_chain(name, q, manifest, path)
             manifest["seq_state"] = True
             manifest["hwm_ts"], manifest["hwm_id"] = hwm_ts, hwm_id
             self._write_manifest(name, manifest)
-            return self.engine.spark.read.parquet(path).count()
-        elif self._seq_incrementable(q, manifest):
-            hwm_ts, hwm_id = self._remember_sequence(name, q, path)
-            manifest["seq_state"] = True
-            manifest["hwm_ts"], manifest["hwm_id"] = hwm_ts, hwm_id
-            self._write_manifest(name, manifest)
+            if q.is_aggregate:
+                return self.engine.spark.read.parquet(path).count()
             return self._read_segments(path).count()
         else:
             # same probe-then-closed-read ordering as the COMPARE branch
@@ -1193,243 +996,6 @@ class Materializer:
         self._write_manifest(name, manifest)
         return self.engine.spark.read.parquet(path).count()
 
-    def _remember_sequence(self, name: str, q, path: str) -> tuple[int, int]:
-        """Initial sequence materialization: run the full match, then
-        carry (a) the A rows still awaiting a match (FOLLOWED BY — the
-        state the reference's delta refresher shape calls 'open heads';
-        PRECEDED BY needs none, an old A can never gain a strictly-earlier
-        B) and (b) the small boundary-B rows a future delta A could pair
-        with. The read side is CLOSED at the pre-probed high-water mark,
-        so a row racing in mid-materialization is excluded here and
-        picked up exactly once by the next delta (there is no row-level
-        dedup — the bounded slices are what keep pairs unique)."""
-        from sneldb_spark.plans.sequence import sequence_match
-
-        hwm_ts, hwm_id = self._pin_snapshot(q)
-        a, b, kind, link, ts_a, ts_b = self._seq_sides(q, upper=(hwm_ts, hwm_id))
-        # UNFILTERED match: WITHIN applies to the emitted pairs only;
-        # carry state needs the raw match (window-missed A's are consumed)
-        pairs = sequence_match(a, b, link, kind, ts_a=ts_a, ts_b=ts_b).persist()
-        self._within_pairs(q, pairs).write.mode("overwrite").parquet(
-            os.path.join(path, "base")
-        )
-        pending, boundary = self._seq_carry_state(
-            a, b, kind, link, pairs, hwm_ts, max_gap=q.sequence_within
-        )
-        # both carry frames read the persisted match (materialized by the
-        # base write above): one partitioned write, one job + commit
-        self._write_state_parts(
-            self._state_path(name),
-            {"pending_a": pending, "boundary_b": boundary},
-        )
-        pairs.unpersist()
-        self._write_state_hwm(self._state_path(name), hwm_ts, hwm_id)
-        return hwm_ts, hwm_id
-
-    def _remember_sequence_agg(self, name: str, q, manifest: dict,
-                               path: str) -> tuple[int, int]:
-        """Initial sequence-AGGREGATE materialization: run the full
-        match once (persisted for the duration), store mergeable partial
-        state over the pairs plus the sequence carry state, and derive
-        the visible result from the state's finalize — the same
-        one-estimator rule the plain aggregate path follows."""
-        from sneldb_spark.plans.aggregates import finalize_partial_state
-        from sneldb_spark.plans.sequence import sequence_match
-
-        approx = self.engine.compiler.approx_count_unique
-        hwm_ts, hwm_id = self._pin_snapshot(q)
-        a, b, kind, link, ts_a, ts_b = self._seq_sides(q, upper=(hwm_ts, hwm_id))
-        pairs = sequence_match(a, b, link, kind, ts_a=ts_a, ts_b=ts_b).persist()
-        try:
-            state, keys = self.engine.compiler.compile_sequence_aggregate_partial(
-                q, self._within_pairs(q, pairs)
-            )
-            spath = self._seq_agg_state_path(name)
-            # Materialize the partial state ONCE (eager localCheckpoint —
-            # this also materializes the persisted match), then run the
-            # state write, the finalize write, and both carry-state
-            # writes concurrently: all four consume materialized rows,
-            # and finalize reads exactly the rows the state dir holds
-            # (one-estimator rule) without the write -> read-back leg.
-            state_ck = state.localCheckpoint(eager=True)
-            manifest["state_keys"] = keys
-            pending, boundary = self._seq_carry_state(
-                a, b, kind, link, pairs, hwm_ts, max_gap=q.sequence_within
-            )
-
-            def _write_agg_state():
-                state_ck.write.mode("overwrite").parquet(spath)
-                self._write_state_hwm(spath, hwm_ts, hwm_id)
-
-            self._parallel_writes(
-                _write_agg_state,
-                lambda: finalize_partial_state(
-                    state_ck, q.aggs, keys, approx_unique=approx
-                ).write.mode("overwrite").parquet(path),
-                lambda: self._write_state_parts(
-                    self._state_path(name),
-                    {"pending_a": pending, "boundary_b": boundary},
-                ),
-            )
-        finally:
-            pairs.unpersist()
-        return hwm_ts, hwm_id
-
-    def _refresh_sequence(self, name: str, q, manifest: dict, path: str,
-                          cur: tuple[int, int], served: dict | None = None):
-        """Incremental sequence SHOW: match ONLY (pending A's + delta A's)
-        against (boundary B's + delta B's) — never the history. Append-
-        ordered server timestamps make this exact: a stored pair can
-        never be displaced by later events (FOLLOWED BY keeps the first
-        qualifying B; PRECEDED BY's strict 'before' excludes everything
-        new), so the delta can only ADD pairs for previously-unmatched or
-        new A's, whose candidate B's are exactly the carried state plus
-        the delta (boundary-second ties included). Every output plan
-        executes against the OLD directories; the result is then replaced
-        and the state dir published as one unit (storage.publish_dir)."""
-        from sneldb_spark.plans.sequence import sequence_match
-
-        cur_ts, _cur_id = cur
-        # The in-state marker overrides a manifest that a crash left stale
-        # (same recovery contract as the aggregate path).
-        lower = manifest["hwm_ts"], manifest["hwm_id"]
-        marker = self._read_state_hwm(self._state_path(name))
-        if marker is not None and tuple(marker) > tuple(lower):
-            lower = marker
-        if served is not None and tuple(served["lower"]) == tuple(lower):
-            # fold from the served bundle: the as-of match was built
-            # (and lazily checkpointed) by the serve path — write those
-            # rows instead of re-running the match
-            a_cand, b_cand = served["a_cand"], served["b_cand"]
-            kind, link = served["kind"], served["link"]
-            new_pairs = served["pairs"]
-        else:
-            a_cand, b_cand, kind, link = self._seq_delta_candidates(
-                name, q, lower, cur
-            )
-            new_pairs = sequence_match(a_cand, b_cand, link, kind).localCheckpoint(
-                eager=False
-            )
-
-        new_pending, new_boundary = self._seq_carry_state(
-            a_cand, b_cand, kind, link, new_pairs, cur_ts,
-            max_gap=q.sequence_within,
-        )
-
-        # APPEND-ONLY result: the delta pairs land in an interval-named
-        # segment dir (deterministic for this (lower, cur] slice, so a
-        # crashed refresh that reruns OVERWRITES the same segment instead
-        # of duplicating it) — refresh IO scales with the delta, never
-        # with the accumulated result. The stored history is never read
-        # or rewritten.
-        seg = os.path.join(self._live(path), f"d_{lower[0]}_{lower[1]}")
-        state = self._state_path(name)
-        nxt = self.storage.stage_path(state)
-        self.storage.remove_tree(nxt)
-        # segment FIRST: until the state publish lands, a rerun recomputes
-        # the same slice and overwrites this segment idempotently (it also
-        # materializes the checkpointed match the carry writes read)
-        self._within_pairs(q, new_pairs).write.mode("overwrite").parquet(seg)
-        self._write_state_parts(
-            nxt, {"pending_a": new_pending, "boundary_b": new_boundary}
-        )
-        self._write_state_hwm(nxt, cur[0], cur[1])
-        # Publish the state as ONE unit (store/storage.py protocol — the
-        # same swap every result dir uses; formerly a bespoke
-        # .next/_COMPLETE rename pair). Crash analysis: before the
-        # publish, everything is old and a rerun redoes the delta
-        # idempotently (the in-state hwm marker plus the interval-named
-        # segment overwrite make re-execution safe for every refresh
-        # shape — there is NO row-level dedup, so that idempotence is
-        # load-bearing); a crash inside the publish is repaired by
-        # recover_dir in show(), restoring the OLD state, and the same
-        # idempotent rerun re-derives the delta.
-        self.storage.publish_dir(state)
-
-    def _refresh_sequence_agg(self, name: str, q, manifest: dict, path: str,
-                              cur: tuple[int, int]):
-        """Incremental sequence-aggregate SHOW: compute the DELTA PAIRS
-        exactly as the event-shaped refresh does, partial-aggregate only
-        them, merge into the stored per-group state, finalize. Exact
-        because the pair set is append-only (see _refresh_sequence) and
-        every aggregate op merges over disjoint row sets."""
-        from sneldb_spark.plans.aggregates import (
-            finalize_partial_state,
-            merge_partial_states,
-        )
-        from sneldb_spark.plans.sequence import sequence_match
-
-        spark = self.engine.spark
-        approx = self.engine.compiler.approx_count_unique
-        cur_ts, _cur_id = cur
-        keys = manifest["state_keys"]
-        spath = self._seq_agg_state_path(name)
-
-        # Crash recovery: the hwm marker INSIDE the state dir swaps
-        # atomically with the state, so if a previous refresh died after
-        # the swap but before the manifest write, the marker is ahead of
-        # the manifest and the already-merged slice is NOT re-merged.
-        lower = manifest["hwm_ts"], manifest["hwm_id"]
-        marker = self._read_state_hwm(spath)
-        if marker is not None and marker > lower:
-            lower = marker
-        a_cand, b_cand, kind, link = self._seq_delta_candidates(
-            name, q, lower, cur
-        )
-        new_pairs = sequence_match(a_cand, b_cand, link, kind).persist()
-        try:
-            delta_state, _ = self.engine.compiler.compile_sequence_aggregate_partial(
-                q, self._within_pairs(q, new_pairs)
-            )
-            merged_state = merge_partial_states(
-                spark.read.parquet(spath).unionByName(
-                    delta_state, allowMissingColumns=True
-                ),
-                q.aggs, keys, approx_unique=approx,
-            )
-            # materialize the merge ONCE (eager localCheckpoint), and
-            # everything below still sees only pre-refresh directories
-            # until the publish
-            state = self._state_path(name)
-            nxt = self.storage.stage_path(state)
-            self.storage.remove_tree(nxt)
-            nxt_agg = os.path.join(nxt, "agg_state")
-            merged_ck = merged_state.localCheckpoint(eager=True)
-            final = finalize_partial_state(
-                merged_ck, q.aggs, keys, approx_unique=approx,
-            )
-            new_pending, new_boundary = self._seq_carry_state(
-                a_cand, b_cand, kind, link, new_pairs, cur_ts,
-                max_gap=q.sequence_within,
-            )
-
-            def _write_merged():
-                merged_ck.write.mode("overwrite").parquet(nxt_agg)
-                self._write_state_hwm(nxt_agg, cur[0], cur[1])
-
-            # three independent staged writes (BOTH carry frames in one
-            # partitioned write off the persisted match; the merged state
-            # and its finalize both off the one materialized merge — same
-            # rows in the state dir and under the result, one-estimator
-            # rule intact); nothing is visible until the publishes below
-            self._parallel_writes(
-                _write_merged,
-                lambda: self._write_state_parts(
-                    nxt,
-                    {"pending_a": new_pending, "boundary_b": new_boundary},
-                ),
-                lambda: final.write.mode("overwrite").parquet(
-                    self.storage.stage_path(path)
-                ),
-            )
-            self.storage.publish_dir(path)
-            # state publish AFTER the data replace: a promoted new state
-            # must imply the visible result already reflects the merged
-            # state
-            self.storage.publish_dir(state)
-        finally:
-            new_pairs.unpersist()
-
     def _write_state_hwm(self, state_dir: str, hwm_ts: int, hwm_id: int):
         """Underscore-prefixed so Spark's parquet listing ignores it;
         rides inside the state dir so it swaps atomically with it.
@@ -1437,7 +1003,7 @@ class Materializer:
         dirs alike (resolve is identity on the latter)."""
         d = self._live(state_dir)
         os.makedirs(d, exist_ok=True)
-        # atomic replace: the serve-first path reads this marker while a
+        # atomic replace: the serve path reads this marker while a
         # background fold advances it
         tmp = os.path.join(d, "_hwm.json.tmp")
         with open(tmp, "w") as f:
@@ -1713,14 +1279,6 @@ class Materializer:
             )
         return out
 
-    def _pin(self, p: str) -> DataFrame:
-        """Read a (small by design) state dir and eagerly localCheckpoint
-        it: the serve frame must not reference state FILES that the
-        background fold's state publish may GC before the frame is
-        consumed. Checkpoint blocks are reclaimed when the frame is
-        garbage-collected."""
-        return self.engine.spark.read.parquet(p).localCheckpoint(eager=True)
-
     @staticmethod
     def _is_missing_file_err(e: Exception) -> bool:
         s = str(e)
@@ -1731,79 +1289,53 @@ class Materializer:
             or "does not exist" in s
         )
 
-    def _pin_state_snapshot(self, name: str, manifest: dict,
-                            subdirs: list[str]):
-        """(resolved state dir, lower, {subdir: pinned frame}) from ONE
-        published state snapshot. A concurrent fold's publish can flip
-        the pointer and GC the copy we resolved mid-pin (the grace
-        window is a knob; gc_grace_versions=0 GCs immediately) — the
-        documented reader contract is re-resolve and retry
-        (docs/scale.md read-repair), which is exact here because marker
-        and state re-read together: a newer snapshot means a larger
-        lower and a correspondingly smaller delta."""
-        from concurrent.futures import ThreadPoolExecutor
-
+    def _pin_state_snapshot(self, name: str, manifest: dict, parts: list[str]):
+        """(resolved state dir, lower, {part: pinned frame}) from ONE
+        published state snapshot: one eager localCheckpoint of the
+        partitioned state (one Spark job) serves every part — the serve
+        frame must not reference state FILES a background fold's publish
+        may GC before the frame is consumed — and each part selects its
+        sidecar schema back off the checkpointed rows. A part that was
+        empty at write time has no partition dir (its filter matches
+        nothing); if EVERY part was empty there is nothing to read and
+        each pin reconstructs from the sidecar schema. A concurrent
+        fold's publish can flip the pointer and GC the copy we resolved
+        mid-pin (gc_grace_versions=0 GCs immediately) — the documented
+        reader contract is re-resolve and retry (docs/scale.md
+        read-repair), which is exact here because marker and state
+        re-read together: a newer snapshot means a larger lower and a
+        correspondingly smaller delta."""
+        spark = self.engine.spark
         last: Exception | None = None
         for _ in range(6):
             d = self._live(self._state_path(name))
             lower = self._published_lower(manifest, d)
             try:
-                parts_dir = os.path.join(d, self._PARTS_SUBDIR)
-                if os.path.isdir(parts_dir):
-                    # batched layout: ONE pinned read of the partitioned
-                    # state serves every part (one Spark job instead of
-                    # one per subdir); each part selects its sidecar
-                    # schema back off the checkpointed rows. A part that
-                    # was empty at write time has no partition dir (its
-                    # filter just matches nothing); if EVERY part was
-                    # empty there is nothing to read at all and each pin
-                    # reconstructs from the sidecar schema.
-                    has_files = any(
-                        e.startswith(f"{self._PART_COL}=")
-                        for e in os.listdir(parts_dir)
-                    )
-                    whole = (
-                        self.engine.spark.read.parquet(parts_dir).localCheckpoint(
-                            eager=True
+                found = {}
+                for p in parts:
+                    found[p] = self._state_part_at(d, p)
+                    if found[p] is None:
+                        raise FileNotFoundError(
+                            f"state part {p!r} does not exist under {d}"
                         )
-                        if has_files
-                        else None
+                parts_dir = os.path.join(d, self._PARTS_SUBDIR)
+                whole = None
+                if os.path.isdir(parts_dir) and any(
+                    e.startswith(f"{self._PART_COL}=")
+                    for e in os.listdir(parts_dir)
+                ):
+                    whole = spark.read.parquet(parts_dir).localCheckpoint(
+                        eager=True
                     )
-                    pins = {}
-                    for s in subdirs:
-                        schema = self._state_part_schema_at(d, s)
-                        if schema is None:
-                            raise FileNotFoundError(
-                                f"state part {s!r} does not exist under {d}"
-                            )
-                        if whole is None:
-                            pins[s] = self.engine.spark.createDataFrame(
-                                [], schema
-                            )
-                        else:
-                            pins[s] = whole.where(
-                                F.col(self._PART_COL) == s
-                            ).select(*[f.name for f in schema.fields])
-                    return d, lower, pins
-
-                # legacy per-directory layout: pin jobs are independent
-                # small reads — run them concurrently (each is a Spark
-                # job; serial pins were a measured second of serve-path
-                # latency under load)
-                def pin_in_pool(p: str):
-                    # fresh thread: re-tag the serve pool (local
-                    # properties are per-thread under pinned-thread mode)
-                    from sneldb_spark.session import set_scheduler_pool
-
-                    set_scheduler_pool(self.engine.spark, "sneldb-serve")
-                    return self._pin(p)
-
-                with ThreadPoolExecutor(max_workers=len(subdirs)) as px:
-                    futs = {
-                        s: px.submit(pin_in_pool, os.path.join(d, s))
-                        for s in subdirs
-                    }
-                    pins = {s: f.result() for s, f in futs.items()}
+                pins = {}
+                for p, (stored, schema) in found.items():
+                    pins[p] = (
+                        spark.createDataFrame([], schema)
+                        if whole is None
+                        else whole.where(F.col(self._PART_COL) == stored).select(
+                            *[f.name for f in schema.fields]
+                        )
+                    )
                 return d, lower, pins
             except Exception as e:  # noqa: BLE001 — retry only read races
                 if not self._is_missing_file_err(e):
@@ -1838,107 +1370,26 @@ class Materializer:
         serve = self._stored_union(path, lower, delta)
         return serve, {"lower": tuple(lower), "delta": delta}
 
-    def _serve_seq(self, name: str, q, manifest: dict, path: str, cur):
-        """(serve frame, fold bundle): the as-of match over pinned state
-        ∪ delta is built ONCE; the bundle hands the checkpointed pairs
-        (plus the candidate frames the carry-state derivation needs) to
-        the background fold so it never re-runs the match."""
-        from sneldb_spark.plans.sequence import sequence_match
-
-        _d, lower, pins = self._pin_state_snapshot(
-            name, manifest, ["pending_a", "boundary_b"]
-        )
-        a, b, kind, link, _ts_a, _ts_b = self._seq_sides(q, upper=cur)
-        a_cand = pins["pending_a"].unionByName(
-            self._delta_slice(a, *lower), allowMissingColumns=True
-        )
-        b_cand = pins["boundary_b"].unionByName(
-            self._delta_slice(b, *lower), allowMissingColumns=True
-        )
-        pairs = sequence_match(a_cand, b_cand, link, kind).localCheckpoint(
-            eager=False
-        )
-        serve = self._stored_union(path, lower, self._within_pairs(q, pairs))
-        bundle = {
-            "lower": tuple(lower), "a_cand": a_cand, "b_cand": b_cand,
-            "kind": kind, "link": link, "pairs": pairs,
-        }
-        return serve, bundle
-
-    def _chain_delta_frames(self, q, cur, lower, state, parts):
-        """Shared stepwise delta advance over carried state frames
-        (`state` maps pending_s{i}/boundary_{j} → DataFrame: published
-        reads on the fold path, pinned snapshots on the serve path;
-        `parts` is the precompiled chain_parts tuple). Returns
-        (completed [window-filtered], new_pend, cands, n). Each step's
-        advance output is lazily localCheckpointed: it feeds the next
-        step, the pending anti-join, AND (for the last step) the served
-        result and the fold's segment write — one computation for all."""
-        frames, _types, _kinds, link = parts
-        n = len(frames)
-        cols = [f.columns for f in frames]
-        deltas = [self._delta_slice(f, *lower) for f in frames]
-        cands = [None] * n
-        for j in range(1, n):
-            cands[j] = state[f"boundary_{j}"].unionByName(
-                deltas[j], allowMissingColumns=True
-            )
-        awaiting = state["pending_s0"].unionByName(
-            deltas[0], allowMissingColumns=True
-        )
-        advanced = self._chain_first(
-            awaiting, cands[1], link, cols[0], cols[1]
-        ).localCheckpoint(eager=False)
-        new_pend = [
-            awaiting.join(
-                advanced.select(F.col("s0_event_id").alias("event_id")),
-                "event_id", "left_anti",
-            )
-        ]
-        for i in range(1, n - 1):
-            await_i = state[f"pending_s{i}"].unionByName(
-                advanced, allowMissingColumns=True
-            )
-            advanced = self._chain_step(
-                await_i, cands[i + 1], link, i, cols[i + 1]
-            ).localCheckpoint(eager=False)
-            new_pend.append(
-                await_i.join(
-                    advanced.select("s0_event_id"), "s0_event_id", "left_anti"
-                )
-            )
-        return self._within_chain(q, advanced, n), new_pend, cands, n
-
     def _serve_chain(self, name: str, q, manifest: dict, path: str, cur):
-        """(serve frame, fold bundle): the stepwise chain advance over
-        pinned state ∪ delta is built once; completed chains serve
-        immediately while the bundle gives the fold the SAME frames to
-        persist (segment + next state) without a second advance."""
-        parts = self.engine.compiler.chain_parts(q, upper=cur)
-        n = len(parts[0])
+        """(serve frame, fold bundle): the stepwise advance over pinned
+        state ∪ delta is built once; completed chains serve immediately
+        while the bundle gives the fold the SAME frames to persist
+        (segment + next state) without a second advance."""
+        n = len(q.sequence.event_types)
         _d, lower, pins = self._pin_state_snapshot(
-            name,
-            manifest,
-            [f"pending_s{i}" for i in range(n - 1)]
-            + [f"boundary_{j}" for j in range(1, n)],
+            name, manifest, self._carry_parts(n)
         )
-        completed, new_pend, cands, n = self._chain_delta_frames(
-            q, cur, lower, pins, parts
-        )
-        serve = self._stored_union(path, lower, completed)
-        bundle = {
-            "lower": tuple(lower), "completed": completed,
-            "new_pend": new_pend, "cands": cands, "n": n,
-        }
-        return serve, bundle
+        chain, carry = self._chain_delta(q, lower, cur, pins)
+        rows = self._chain_rows(q, chain)
+        serve = self._stored_union(path, lower, rows)
+        return serve, {"lower": tuple(lower), "rows": rows, "carry": carry}
 
     def _refresh_plain_segments(self, name: str, q, manifest: dict, path: str,
                                 cur: tuple[int, int],
                                 served: dict | None = None):
-        """Fold the (lower, cur] slice of a plain segment-layout
-        materialization into an interval segment + advance the marker
-        (the body the first show() branch always ran; now also the
-        background fold for serve-first). With a `served` bundle whose
+        """Fold body of a plain segment-layout materialization: the
+        (lower, cur] slice into an interval segment + advance the
+        marker. With a `served` bundle whose
         lower bound still matches the published one, the fold writes the
         serve path's checkpointed delta instead of re-running the slice."""
         from sneldb_spark.plans.filters import hwm_at_or_before
@@ -1964,7 +1415,8 @@ class Materializer:
                          cur: tuple[int, int], refresh_fn, marker_dir: str,
                          served: dict | None = None):
         """Background-fold body: run the refresh, then commit the
-        manifest hwm — the same ordering the sync path uses. Folds are
+        manifest hwm — the same ordering every synchronous refresh
+        uses. Folds are
         serialized per name (one thread at a time), so re-reading the
         published lower here is authoritative: a SHOW that raced the
         previous fold's commit schedules a redundant fold, and this
@@ -2011,65 +1463,40 @@ class Materializer:
 
     def _try_serve_first(self, name: str, q, manifest: dict, path: str,
                          cur: tuple[int, int]):
-        """If (and only if) the stale materialization is one of the
-        append-only segment shapes, build the `stored ∪ delta` serve
-        frame, schedule the background fold, and return the frame;
-        None routes the caller to the synchronous ladder. The dispatch
-        predicates mirror show()'s ladder order exactly."""
+        """Serve-then-refresh SHOW (reference parity:
+        src/command/handlers/show/orchestrator.rs:123-170 — the
+        StoredFrameStreamer spawns BEFORE the delta pipeline, so
+        time-to-first-frame is a storage read, not a refresh). For the
+        append-only segment shapes (plain and sequence event results)
+        build the `stored ∪ delta` serve frame, schedule the background
+        fold, and return the frame. None routes the caller to the
+        synchronous ladder: aggregate/COMPARE results are a state MERGE,
+        not an append, so there is no stored-first stream to serve."""
         if self._incrementable(q) and manifest.get("segments"):
             lower = self._published_lower(manifest, path)
             serve, bundle = self._serve_plain(q, path, lower, cur)
-            self._register_serve(name, serve)
-            self._schedule_fold(
-                name,
-                lambda: self._fold_and_commit(
-                    name, q, dict(manifest), path, cur,
-                    self._refresh_plain_segments, path, bundle,
-                ),
+            refresh_fn, marker_dir = self._refresh_plain_segments, path
+        elif (
+            manifest.get("seq_state")
+            and manifest.get("state_keys") is None
+            and self._sequence_incrementable(q, manifest)
+            and self._state_part_exists_at(
+                self._live(self._state_path(name)), "pending_s0"
             )
-            return serve
-        if self._incrementable(q):
-            return None  # non-segment plain layout: replace semantics
-        # agg shapes (state merges) stay synchronous — ladder order:
-        # seq_agg and chain_agg are checked BEFORE chain/seq there, and
-        # both require state_keys, which the event-shaped layouts never
-        # set, so falling through on them is dispatch-equivalent.
-        if manifest.get("state_keys") is not None or manifest["query"].get(
-            "compare"
-        ):
-            return None
-        state_d = self._live(self._state_path(name))
-        if (
-            self._chain_incrementable(q, manifest)
-            and manifest.get("seq_state")
-            and self._state_part_exists_at(state_d, "pending_s0")
         ):
             serve, bundle = self._serve_chain(name, q, manifest, path, cur)
-            self._register_serve(name, serve)
-            self._schedule_fold(
-                name,
-                lambda: self._fold_and_commit(
-                    name, q, dict(manifest), path, cur, self._refresh_chain,
-                    self._state_path(name), bundle,
-                ),
-            )
-            return serve
-        if (
-            self._seq_incrementable(q, manifest)
-            and manifest.get("seq_state")
-            and self._state_part_exists_at(state_d, "pending_a")
-        ):
-            serve, bundle = self._serve_seq(name, q, manifest, path, cur)
-            self._register_serve(name, serve)
-            self._schedule_fold(
-                name,
-                lambda: self._fold_and_commit(
-                    name, q, dict(manifest), path, cur, self._refresh_sequence,
-                    self._state_path(name), bundle,
-                ),
-            )
-            return serve
-        return None
+            refresh_fn, marker_dir = self._refresh_chain, self._state_path(name)
+        else:
+            return None
+        self._register_serve(name, serve)
+        self._schedule_fold(
+            name,
+            lambda: self._fold_and_commit(
+                name, q, dict(manifest), path, cur, refresh_fn, marker_dir,
+                bundle,
+            ),
+        )
+        return serve
 
     def show(self, name: str) -> DataFrame:
         if not self.exists(name):
@@ -2080,6 +1507,14 @@ class Materializer:
             q = compare_from_json(manifest["query"])
         else:
             q = query_from_json(manifest["query"])
+        steps = manifest.get("chain_steps", 2)
+        if steps > 2 and not self.engine.compiler.multi_link:
+            # without multi_link a chain compiles to the reference's empty
+            # frame: any refresh would replace the stored chains with it
+            raise MaterializationError(
+                f"materialization '{name}' is a {steps}-step chain; SHOW "
+                "needs an engine opened with multi_link=True"
+            )
         path = os.path.join(self._dir(name), "data")
         # Recovery repairs a CRASHED publish — but an in-flight
         # background fold is legitimately staging the next data/state
@@ -2113,18 +1548,17 @@ class Materializer:
         cur_ts, cur_id = self._source_hwm(q)
         stale = (cur_ts, cur_id) != (manifest["hwm_ts"], manifest["hwm_id"])
 
-        if stale and self.serve_first:
+        if stale:
             served = self._try_serve_first(
                 name, q, manifest, path, (cur_ts, cur_id)
             )
             if served is not None:
                 return served
 
-        if stale and self._incrementable(q) and manifest.get("segments"):
-            self._refresh_plain_segments(
-                name, q, manifest, path, (cur_ts, cur_id)
-            )
-        elif stale and self._incrementable(q):
+        if stale and self._incrementable(q):
+            # retention-capped plain layout (segment layouts are served
+            # above): merge the delta into the stored rows and re-apply
+            # retention
             delta_df = self._delta_slice(
                 self.engine.compiler.compile_query(q),
                 manifest["hwm_ts"], manifest["hwm_id"],
@@ -2134,13 +1568,7 @@ class Materializer:
                 stored.unionByName(delta_df).dropDuplicates(["event_id"]), manifest
             )
             self._swap_in(merged, path)
-        elif stale and self._seq_agg_incrementable(q, manifest) and manifest.get(
-            "seq_state"
-        ) and manifest.get("state_keys") is not None and os.path.exists(
-            self._seq_agg_state_path(name)
-        ):
-            self._refresh_sequence_agg(name, q, manifest, path, (cur_ts, cur_id))
-        elif stale and self._chain_agg_incrementable(q, manifest) and manifest.get(
+        elif stale and self._sequence_incrementable(q, manifest) and manifest.get(
             "seq_state"
         ) and manifest.get("state_keys") is not None and os.path.exists(
             self._seq_agg_state_path(name)
@@ -2148,18 +1576,6 @@ class Materializer:
             self._live(self._state_path(name)), "pending_s0"
         ):
             self._refresh_chain_agg(name, q, manifest, path, (cur_ts, cur_id))
-        elif stale and self._chain_incrementable(q, manifest) and manifest.get(
-            "seq_state"
-        ) and self._state_part_exists_at(
-            self._live(self._state_path(name)), "pending_s0"
-        ):
-            self._refresh_chain(name, q, manifest, path, (cur_ts, cur_id))
-        elif stale and self._seq_incrementable(q, manifest) and manifest.get(
-            "seq_state"
-        ) and self._state_part_exists_at(
-            self._live(self._state_path(name)), "pending_a"
-        ):
-            self._refresh_sequence(name, q, manifest, path, (cur_ts, cur_id))
         elif stale and self._agg_incrementable(q, manifest) and manifest.get(
             "state_keys"
         ) is not None and self.storage.exists(self._state_path(name)):

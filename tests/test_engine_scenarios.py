@@ -821,18 +821,19 @@ def test_remember_show_sequence_incremental_followed_by(spark, tmp_path):
     state = tmp_path / "db" / "materialized" / "funnel" / "state"
     # round 12: carry parts land in ONE partitioned write + schema sidecar
     live = db.materializer._live(str(state))
-    assert db.materializer._state_part_exists_at(live, "pending_a")
-    assert db.materializer._state_part_exists_at(live, "boundary_b")
+    # a single link carries the state of a 2-step chain
+    assert db.materializer._state_part_exists_at(live, "pending_s0")
+    assert db.materializer._state_part_exists_at(live, "boundary_1")
 
     # prove SHOW goes through the delta path, never the full recompute
     refreshes = {"n": 0}
-    orig_refresh = db.materializer._refresh_sequence
+    orig_refresh = db.materializer._refresh_chain
 
     def spy(*args, **kw):
         refreshes["n"] += 1
         return orig_refresh(*args, **kw)
 
-    db.materializer._refresh_sequence = spy
+    db.materializer._refresh_chain = spy
 
     # phase 2: u7 signup lands ON the old hwm second (ties: B >= A holds);
     # u2's purchase completes the old pending A; u4 is a fresh pair; u5 pending
@@ -945,13 +946,13 @@ def test_remember_show_sequence_aggregate_incremental(spark, tmp_path):
     assert rows(db.execute("SHOW funnel_by_k").df) == rows(db.query(q))
 
     refreshes = {"n": 0}
-    orig = db.materializer._refresh_sequence_agg
+    orig = db.materializer._refresh_chain_agg
 
     def spy(*a, **k):
         refreshes["n"] += 1
         return orig(*a, **k)
 
-    db.materializer._refresh_sequence_agg = spy
+    db.materializer._refresh_chain_agg = spy
 
     # phase 2: u2's purchase completes the pending pair (k=1 count grows);
     # u3/u4 create a brand-new group k=7
@@ -1706,3 +1707,204 @@ def test_chain_aggregate_per_bucket_incremental(spark, tmp_path):
     got = sorted((r["bucket"], r["count"]) for r in db.execute("SHOW chday").df.collect())
     want = sorted((r["bucket"], r["count"]) for r in db.query(q).collect())
     assert got == want and len(got) == 2  # one chain per head DAY
+
+
+def _ticking_clock():
+    clock = {"now": 1_700_000_000}
+
+    def tick():
+        clock["now"] += 1
+        return clock["now"]
+
+    return clock, tick
+
+
+def test_chain_order_by_remember_refreshes_incrementally(spark, tmp_path):
+    """ORDER BY without LIMIT keeps a chain on the incremental path (the
+    segment layout serves rows in no fixed order, as plain ORDER BY
+    materializations always have): REMEMBER -> ingest -> SHOW equals the
+    direct query as a set."""
+    import json as _json
+
+    from sneldb_spark.engine import SnelDB
+
+    clock, tick = _ticking_clock()
+    db = SnelDB(spark, str(tmp_path / "db"), clock=tick, multi_link=True)
+    for et in ("v", "c", "b"):
+        db.execute(f'DEFINE {et} FIELDS {{ "u": "string" }}')
+
+    def store(et, u):
+        db.execute(f'STORE {et} FOR o-{u}-{clock["now"]} PAYLOAD {{ "u": "{u}" }}')
+
+    q = "QUERY v FOLLOWED BY c FOLLOWED BY b LINKED BY u ORDER BY u DESC"
+    store("v", "u1"); store("c", "u1"); store("b", "u1")
+    store("v", "u2"); store("c", "u2")
+    db.execute("FLUSH")
+    db.execute(f"REMEMBER {q} AS ordch")
+    m = _json.load(open(db.materializer._manifest_path("ordch")))
+    assert m.get("chain_steps") == 3 and m.get("seq_state")
+
+    store("b", "u2")
+    store("v", "u3"); store("c", "u3"); store("b", "u3")
+    db.execute("FLUSH")
+
+    def rows(df):
+        return {
+            (r["s0_u"], r["s0_event_id"], r["s1_event_id"], r["s2_event_id"])
+            for r in df.collect()
+        }
+
+    shown = rows(db.execute("SHOW ordch").df)
+    assert shown == rows(db.query(q)) and len(shown) == 3
+
+
+def test_chain_show_without_multi_link_refuses(spark, tmp_path):
+    """A chain REMEMBERed with multi_link must not be refreshed by an
+    engine opened without it: that engine compiles the chain to the
+    reference's empty frame, and the refresh would replace the stored
+    chains with it for good. SHOW refuses before any write, naming the
+    flag, and the materialization stays exact for a multi_link engine."""
+    from sneldb_spark.engine import SnelDB
+
+    clock, tick = _ticking_clock()
+    root = str(tmp_path / "db")
+    q = "QUERY v FOLLOWED BY c FOLLOWED BY b LINKED BY u"
+
+    def store_chain(eng, u):
+        for et in ("v", "c", "b"):
+            eng.execute(f'STORE {et} FOR m-{u}-{et} PAYLOAD {{ "u": "{u}" }}')
+        eng.execute("FLUSH")
+
+    db = SnelDB(spark, root, clock=tick, multi_link=True)
+    for et in ("v", "c", "b"):
+        db.execute(f'DEFINE {et} FIELDS {{ "u": "string" }}')
+    store_chain(db, "u1"); store_chain(db, "u2")
+    db.execute(f"REMEMBER {q} AS mlch")
+    assert db.execute("SHOW mlch").df.count() == 2
+    db.close()
+
+    plain = SnelDB(spark, root, clock=tick)
+    store_chain(plain, "u3")
+    manifest = plain.materializer._manifest_path("mlch")
+    before = open(manifest).read()
+    with pytest.raises(MaterializationError, match="multi_link"):
+        plain.execute("SHOW mlch")
+    assert open(manifest).read() == before
+    plain.close()
+
+    again = SnelDB(spark, root, clock=tick, multi_link=True)
+    assert again.execute("SHOW mlch").df.count() == again.query(q).count() == 3
+
+
+def _rewrite_to_pair_layout(db, name: str, aggregate: bool):
+    """Rewrite a single-link materialization's state into the layout
+    written before single links ran as 2-step chains: parts named after
+    the pair sides (partition dirs and sidecar keys), no chain_steps in
+    the manifest, and for aggregates no hwm marker beside the parts."""
+    import json as _json
+    import os
+
+    m = db.materializer
+    d = m._live(m._state_path(name))
+    names = {"pending_s0": "pending_a", "boundary_1": "boundary_b"}
+    for new, old in names.items():
+        src = os.path.join(d, "parts", f"__part={new}")
+        if os.path.isdir(src):
+            os.rename(src, os.path.join(d, "parts", f"__part={old}"))
+    sidecar = os.path.join(d, "_state_parts.json")
+    schemas = _json.load(open(sidecar))
+    with open(sidecar, "w") as f:
+        _json.dump({names.get(k, k): v for k, v in schemas.items()}, f)
+    if aggregate:
+        os.remove(os.path.join(d, "_hwm.json"))
+    path = m._manifest_path(name)
+    manifest = _json.load(open(path))
+    del manifest["chain_steps"]
+    with open(path, "w") as f:
+        _json.dump(manifest, f)
+
+
+@pytest.mark.parametrize(
+    "q",
+    [
+        "QUERY signup FOLLOWED BY purchase LINKED BY user_id",
+        "QUERY signup PRECEDED BY purchase LINKED BY user_id",
+        "QUERY signup FOLLOWED BY purchase LINKED BY user_id COUNT BY k",
+    ],
+    ids=["followed_by", "preceded_by", "followed_by_count"],
+)
+def test_single_link_pair_layout_state_still_refreshes(spark, tmp_path, q):
+    """Single-link state written as pending_a/boundary_b with no
+    chain_steps in the manifest reads as the 2-step chain it is: SHOW
+    after ingest equals the direct query, and again after the refresh
+    rewrote the state under the step names."""
+    from sneldb_spark.engine import SnelDB
+
+    clock, tick = _ticking_clock()
+    db = SnelDB(spark, str(tmp_path / "db"), clock=tick)
+    db.execute('DEFINE signup FIELDS { "user_id": "string", "k": "int" }')
+    db.execute('DEFINE purchase FIELDS { "user_id": "string" }')
+
+    def store(et, user):
+        payload = f'"user_id": "{user}"' + (', "k": 1' if et == "signup" else "")
+        db.execute(f'STORE {et} FOR c{clock["now"]}x{user} PAYLOAD {{ {payload} }}')
+
+    def rows(df):
+        return sorted(sorted(r.asDict().items()) for r in df.collect())
+
+    store("purchase", "u3"); store("signup", "u1"); store("purchase", "u1")
+    store("signup", "u2"); store("purchase", "u4")
+    db.execute("FLUSH")
+    db.execute(f"REMEMBER {q} AS legacy")
+    _rewrite_to_pair_layout(db, "legacy", aggregate="COUNT" in q)
+    live = db.materializer._live(db.materializer._state_path("legacy"))
+    assert db.materializer._state_part_exists_at(live, "pending_s0")
+
+    store("purchase", "u2"); store("signup", "u3"); store("signup", "u4")
+    store("signup", "u5"); store("purchase", "u5")
+    db.execute("FLUSH")
+    shown = db.execute("SHOW legacy").df
+    direct = db.query(q)
+    assert rows(shown) == rows(direct)
+    assert db.materializer.quiesce("legacy") == []
+
+    store("signup", "u6"); store("purchase", "u6")
+    db.execute("FLUSH")
+    assert rows(db.execute("SHOW legacy").df) == rows(db.query(q))
+
+
+def test_sequence_state_in_per_directory_layout_refuses(spark, tmp_path):
+    """The per-directory carry layout (one parquet dir per part, no
+    sidecar) is no longer read: SHOW names the way out — FORGET and
+    REMEMBER again — instead of guessing, and the re-REMEMBER works."""
+    import os
+    import shutil
+
+    from sneldb_spark.engine import SnelDB
+
+    clock, tick = _ticking_clock()
+    db = SnelDB(spark, str(tmp_path / "db"), clock=tick)
+    db.execute('DEFINE signup FIELDS { "user_id": "string" }')
+    db.execute('DEFINE purchase FIELDS { "user_id": "string" }')
+    q = "QUERY signup FOLLOWED BY purchase LINKED BY user_id"
+    for et, u in (("signup", "u1"), ("purchase", "u1"), ("signup", "u2")):
+        db.execute(f'STORE {et} FOR c-{et}-{u} PAYLOAD {{ "user_id": "{u}" }}')
+    db.execute("FLUSH")
+    db.execute(f"REMEMBER {q} AS olddirs")
+
+    m = db.materializer
+    d = m._live(m._state_path("olddirs"))
+    for part, df in m._read_carry("olddirs", 2).items():
+        old = {"pending_s0": "pending_a", "boundary_1": "boundary_b"}[part]
+        df.write.parquet(os.path.join(d, old))
+    shutil.rmtree(os.path.join(d, "parts"))
+    os.remove(os.path.join(d, "_state_parts.json"))
+
+    db.execute('STORE purchase FOR c-purchase-u2 PAYLOAD { "user_id": "u2" }')
+    db.execute("FLUSH")
+    with pytest.raises(MaterializationError, match="FORGET"):
+        db.execute("SHOW olddirs")
+
+    db.execute("FORGET olddirs")
+    db.execute(f"REMEMBER {q} AS olddirs")
+    assert db.execute("SHOW olddirs").df.count() == db.query(q).count() == 2

@@ -149,21 +149,6 @@ def test_serve_first_show_returns_while_fold_pending(spark, tmp_path):
     assert db.execute("SHOW mslow").df.count() == 7
 
 
-def test_sync_mode_opt_out(spark, tmp_path):
-    """materialize_serve_first=False restores refresh-then-serve: after
-    SHOW returns, the manifest is already advanced."""
-    db = _mk_db(spark, tmp_path, materialize_serve_first=False)
-    db.execute('DEFINE ev FIELDS { "u": "string" }')
-    _store(db, "ev", "c0", {"u": "u0"})
-    db.execute("FLUSH")
-    db.execute("REMEMBER QUERY ev AS msync")
-    _store(db, "ev", "c1", {"u": "u1"})
-    db.execute("FLUSH")
-    assert db.execute("SHOW msync").df.count() == 2
-    assert not db.materializer.describe("msync")["stale"]
-    assert not db.materializer.describe("msync")["fold_in_flight"]
-
-
 def test_embedded_default_storage_is_grace(spark, tmp_path):
     """VERDICT r8 #2: an embedded SnelDB / EventStore constructed without
     a storage argument defaults to the grace backend (versioned prefixes

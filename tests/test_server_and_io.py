@@ -305,6 +305,30 @@ def test_toml_config_serve_and_naive_time(spark, tmp_path):
             srv.stop()
 
 
+def test_toml_config_ignores_removed_serve_first_key(spark, tmp_path):
+    """`[materialize] serve_first` no longer exists (SHOW always serves
+    first on segment shapes): a config that still sets it loads, and
+    SHOW refreshes as usual."""
+    from sneldb_spark.config import create_engine, load_config
+
+    cfg = load_config(
+        {
+            "engine": {"data_dir": str(tmp_path / "db")},
+            "materialize": {"serve_first": False},
+        }
+    )
+    assert not hasattr(cfg, "materialize_serve_first")
+    db = create_engine(spark, cfg)
+    db.execute('DEFINE ev FIELDS { "u": "string" }')
+    db.execute('STORE ev FOR c0 PAYLOAD { "u": "u0" }')
+    db.execute("FLUSH")
+    db.execute("REMEMBER QUERY ev AS m")
+    db.execute('STORE ev FOR c1 PAYLOAD { "u": "u1" }')
+    db.execute("FLUSH")
+    assert db.execute("SHOW m").df.count() == 2
+    db.close()
+
+
 class _WsClient:
     """Minimal RFC 6455 client for tests: masked text frames."""
 
