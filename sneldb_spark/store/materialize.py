@@ -8,17 +8,18 @@ plus a high-water mark `(timestamp, event_id)` over the *source* events.
   Parquet, and records the high-water mark of the scanned source. For a
   plain aggregate query it ALSO persists mergeable per-group partial
   state (see plans/aggregates.py).
-- `SHOW name` refreshes first: for non-aggregate queries only the delta
-  (`ts > hwm OR (ts = hwm AND id > hwm_id)`) is scanned, appended, and
-  deduped by event_id — at 100 TB this is the difference between an
-  incremental touch-up and a full rescan. Plain aggregate queries merge
+- `SHOW name` refreshes first, by the shape REMEMBER recorded (see
+  shape_of): for plain event queries only the delta
+  (`ts > hwm OR (ts = hwm AND id > hwm_id)`) is scanned and appended —
+  at 100 TB this is the difference between an incremental touch-up and
+  a full rescan. Aggregates (plain, sequence, every COMPARE side) merge
   a delta partial aggregate into the stored state (reference:
   src/command/handlers/show/delta/refresher.rs) — a delta scan plus a
   state-sized shuffle, never a history rescan. Sequence results (one
-  link or a chain, events or aggregates) advance a stepwise match over
-  small carried per-step state plus the delta. Group-LIMIT aggregates
-  (where new rows can change WHICH groups qualify) recompute when (and
-  only when) the high-water mark moved.
+  link or a chain) advance a stepwise match over small carried per-step
+  state plus the delta. Group-LIMIT aggregates (where new rows can
+  change WHICH groups qualify) recompute when (and only when) the
+  high-water mark moved.
 """
 
 from __future__ import annotations
@@ -40,6 +41,34 @@ from sneldb_spark.commands.serde import (
     query_to_json,
 )
 from sneldb_spark.errors import MaterializationError
+
+# How a materialization refreshes, decided ONCE at REMEMBER with that
+# engine's flags; the manifest keys REMEMBER writes for it record the
+# choice, so a later engine's flags never re-route it:
+SEGMENTS = "segments"    # plain events: append delta interval segments
+RETAINED = "retained"    # plain events with retention: merge delta + trim
+SEQUENCE = "sequence"    # sequence events: stepwise match over carried state
+PARTIAL = "partial"      # aggregates and COMPARE: merge per-side partial state
+RECOMPUTE = "recompute"  # everything else: full recompute when stale
+
+
+def shape_of(manifest: dict) -> str:
+    """The refresh shape REMEMBER chose, read from the keys it wrote for
+    it; with none of them, a plain event query is retention-trimmed (its
+    retention-free form would carry `segments`) and anything else
+    recomputes."""
+    if manifest.get("segments"):
+        return SEGMENTS
+    if (manifest.get("state_keys") is not None
+            or manifest.get("compare_state_keys") is not None):
+        return PARTIAL
+    if manifest.get("seq_state"):
+        return SEQUENCE
+    if not manifest["query"].get("compare"):
+        q = query_from_json(manifest["query"])
+        if not (q.is_aggregate or q.is_sequence) and q.limit is None:
+            return RETAINED
+    return RECOMPUTE
 
 
 class Materializer:
@@ -95,7 +124,7 @@ class Materializer:
             json.dump(manifest, f, indent=1)
         os.replace(tmp, p)
 
-    def _parallel_writes(self, *thunks) -> None:
+    def _parallel_writes(self, *thunks) -> list:
         """Run independent write actions concurrently (each is a Spark
         job; actions are only sequential because the driver calls them
         sequentially — overlapping them back-fills the tail of one job
@@ -103,39 +132,43 @@ class Materializer:
         mutually independent AND whose shared inputs are already
         materialized (persisted / checkpointed / written), so no input
         is computed twice. Worker threads re-tag the caller's scheduler
-        pool (local properties are per-thread). First exception wins;
+        pool and job group (local properties are per-thread), so their
+        jobs are placed, cancelled and counted as the caller's own.
+        First exception wins;
         all writes are awaited either way so a failure never leaves a
         stray in-flight job writing into a directory the caller is
-        about to clean up."""
-        thunks = [t for t in thunks if t is not None]
+        about to clean up. Returns the thunks' results in order."""
         if len(thunks) <= 1:
-            for t in thunks:
-                t()
-            return
+            return [t() for t in thunks]
         from concurrent.futures import ThreadPoolExecutor
 
-        from sneldb_spark.session import set_scheduler_pool
-
         try:
-            pool = self.engine.spark.sparkContext.getLocalProperty(
-                "spark.scheduler.pool"
-            )
+            sc = self.engine.spark.sparkContext
+            tags = {
+                k: sc.getLocalProperty(k)
+                for k in ("spark.scheduler.pool", "spark.jobGroup.id",
+                          "spark.job.description",
+                          "spark.job.interruptOnCancel")
+            }
         except Exception:  # Spark Connect: server-side scheduling
-            pool = None
+            tags = {}
 
         def run(t):
-            if pool is not None:
-                set_scheduler_pool(self.engine.spark, pool)
-            t()
+            for k, v in tags.items():
+                if v is not None:
+                    sc.setLocalProperty(k, v)
+            return t()
 
         with ThreadPoolExecutor(
             max_workers=min(4, len(thunks)),
             thread_name_prefix="sneldb-mat-write",
         ) as ex:
-            errs = [f.exception() for f in [ex.submit(run, t) for t in thunks]]
+            futures = [ex.submit(run, t) for t in thunks]
+            errs = [f.exception() for f in futures]
         first = next((e for e in errs if e is not None), None)
         if first is not None:
             raise first
+        return [f.result() for f in futures]
 
     # -- background fold machinery (serve-then-refresh SHOW) ---------------
     def _register_serve(self, name: str, frame: DataFrame) -> None:
@@ -303,82 +336,51 @@ class Materializer:
                 hwm_id = max(hwm_id, row["id"])
         return hwm_ts, hwm_id
 
-    def _incrementable(self, q) -> bool:
-        return (
-            isinstance(q, ast.QueryCommand)
-            and not q.is_aggregate
-            and not q.is_sequence
-            and q.limit is None
-        )
-
-    def _compare_incrementable(self, c, manifest: dict) -> bool:
-        """A remembered COMPARE refreshes incrementally when every side is
-        a plain (non-sequence, uncapped) aggregate — each side then keeps
-        its own mergeable partial state, exactly like a standalone
-        aggregate REMEMBER, and only the full-outer side merge re-runs
-        (group-count-sized, not scan-sized)."""
-        from sneldb_spark.plans.aggregates import is_percentile
-
-        return (
-            isinstance(c, ast.CompareCommand)
-            and len(c.queries) > 0
-            and manifest.get("max_rows") is None
-            and manifest.get("max_age_seconds") is None
-            and all(
-                s.is_aggregate
-                and not s.is_sequence
-                and s.limit is None
-                and s.offset is None
-                for s in c.queries
-            )
-            # exact percentiles merge (value-multiset state); the approx
-            # sketch doesn't — route those to full recompute
-            and not (
-                self.engine.compiler.approx_percentiles
-                and any(
-                    is_percentile(a.op) for s in c.queries for a in s.aggs
-                )
-            )
-        )
-
-    def _sequence_incrementable(self, q, manifest: dict) -> bool:
-        """Whether a sequence materialization (events or aggregates, one
-        link or a chain) refreshes by stepwise delta match against
-        carried per-step state — one predicate for every step count, a
-        single link being a 2-step chain. Each step carries what a future
-        delta event can still reach (see _chain_advance). Chains take
-        FOLLOWED BY links only (and need multi_link); a single link may
-        also be PRECEDED BY. WITHIN is delta-safe: the stepwise match
-        runs UNFILTERED (an advance with a too-wide gap still consumes
-        the step) and every adjacent gap filters at emission only.
-        ORDER BY without LIMIT is accepted: segment layouts serve rows in
-        no fixed order, as plain ORDER BY materializations always have.
-        Excluded: USING TIME (a user field is not append-ordered, so 'new
-        events have the highest ts' would not hold), LIMIT/OFFSET (a
-        delta chain could displace a stored one), retention options and
-        the approx-percentile sketch (no merge)."""
+    def _choose_shape(self, q, retained: bool) -> str:
+        """The refresh shape of a new materialization, decided once with
+        this engine's flags (see shape_of). Plain event queries append
+        segments, or merge and trim when retention options are set.
+        Aggregates merge per-side partial state: a plain aggregate, a
+        sequence aggregate or every side of a COMPARE. Sequences match
+        stepwise over carried per-step state: one link (FOLLOWED BY or
+        PRECEDED BY) or a FOLLOWED BY chain on a multi_link engine;
+        WITHIN is delta-safe (the match runs unfiltered, gaps filter at
+        emission) and ORDER BY without LIMIT is accepted, as segment
+        layouts serve rows in no fixed order. Everything else
+        recomputes: LIMIT/OFFSET (a delta could displace stored rows or
+        groups), retention on anything but plain events, USING TIME (a
+        user field is not append-ordered) and the approx-percentile
+        sketch (no merge)."""
         from sneldb_spark.commands.ast import FOLLOWED_BY
         from sneldb_spark.plans.aggregates import is_percentile
 
-        return (
-            isinstance(q, ast.QueryCommand)
-            and q.is_sequence
-            and (
-                len(q.sequence.links) == 1
-                or self.engine.compiler.multi_link
-                and all(k == FOLLOWED_BY for k, _ in q.sequence.links)
-            )
-            and q.limit is None
-            and q.offset is None
-            and q.sequence_time_field is None
-            and manifest.get("max_rows") is None
-            and manifest.get("max_age_seconds") is None
-            and not (
-                q.is_aggregate
-                and self.engine.compiler.approx_percentiles
-                and any(is_percentile(a.op) for a in q.aggs)
-            )
+        if isinstance(q, ast.CompareCommand):
+            sides = q.queries
+        elif not (q.is_aggregate or q.is_sequence) and q.limit is None:
+            return RETAINED if retained else SEGMENTS
+        else:
+            sides = [q]
+        if (
+            retained
+            or not sides
+            or any(s.limit is not None or s.offset is not None for s in sides)
+            or self.engine.compiler.approx_percentiles
+            and any(is_percentile(a.op) for s in sides for a in s.aggs)
+        ):
+            return RECOMPUTE
+        if isinstance(q, ast.CompareCommand):
+            plain = all(s.is_aggregate and not s.is_sequence for s in sides)
+            return PARTIAL if plain else RECOMPUTE
+        if not q.is_sequence:
+            return PARTIAL
+        stepwise = q.sequence_time_field is None and (
+            len(q.sequence.links) == 1
+            or self.engine.compiler.multi_link
+            and all(k == FOLLOWED_BY for k, _ in q.sequence.links)
         )
+        if not stepwise:
+            return RECOMPUTE
+        return PARTIAL if q.is_aggregate else SEQUENCE
 
     @staticmethod
     def _within_chain(q, chain: DataFrame) -> DataFrame:
@@ -481,9 +483,6 @@ class Materializer:
                 return stored, StructType.fromJson(schemas[stored])
         return None
 
-    def _state_part_exists_at(self, d: str, part: str) -> bool:
-        return self._state_part_at(d, part) is not None
-
     def _read_carry(self, name: str, n: int) -> dict[str, DataFrame]:
         """Every carry part of an n-step sequence from the PUBLISHED
         state (the original schema restored via the sidecar; an empty
@@ -583,54 +582,22 @@ class Materializer:
         self._write_state_parts(state_dir, carry)
         self._write_state_hwm(state_dir, *mark)
 
-    def _seq_agg_partial(self, q, chain: DataFrame):
-        """Mergeable per-group state over WITHIN-filtered chains."""
-        return self.engine.compiler.compile_chain_aggregate_partial(
-            q, self._within_chain(q, chain)
-        )
-
-    def _remember_chain(self, name: str, q, manifest: dict,
-                        path: str) -> tuple[int, int]:
-        """Initial sequence materialization, any step count: the
-        stepwise match once over frames CLOSED at the probed mark (a row
-        racing in lands in the next delta exactly once), persisted per
-        step for the duration. Events store the completed chains as the
-        segment base; aggregates store mergeable partial state and derive
-        the visible result from its finalize — the one-estimator rule
-        every aggregate materialization follows. Both carry the per-step
-        state."""
-        from sneldb_spark.plans.aggregates import finalize_partial_state
-
+    def _remember_chain(self, name: str, q, path: str) -> tuple[int, int]:
+        """Initial event-shaped sequence materialization, any step count:
+        the stepwise match once over frames CLOSED at the probed mark (a
+        row racing in lands in the next delta exactly once), persisted
+        per step for the duration. The completed chains are the segment
+        base; the per-step carry is the state."""
         hwm = self._pin_snapshot(q)
         parts = self.engine.compiler.chain_parts(q, upper=hwm)
         chains, carry = self._chain_advance(q, parts, DataFrame.persist, hwm[0])
-        state_dir = self._state_path(name)
         try:
-            if not q.is_aggregate:
-                # base FIRST: it materializes every persisted step, so
-                # the carry write below is a pure cached-read job
-                self._chain_rows(q, chains[-1]).write.mode("overwrite").parquet(
-                    os.path.join(path, "base")
-                )
-                self._write_carry(state_dir, carry, hwm)
-                return hwm
-            approx = self.engine.compiler.approx_count_unique
-            state, keys = self._seq_agg_partial(q, chains[-1])
-            spath = self._seq_agg_state_path(name)
-            # Materialize the agg state ONCE (eager localCheckpoint — this
-            # also materializes the persisted steps), then run the state
-            # write, the finalize write and the carry write concurrently:
-            # every write consumes already-materialized rows, and finalize
-            # reads the rows the state dir holds without a read-back leg.
-            state_ck = state.localCheckpoint(eager=True)
-            manifest["state_keys"] = keys
-            self._parallel_writes(
-                lambda: state_ck.write.mode("overwrite").parquet(spath),
-                lambda: finalize_partial_state(
-                    state_ck, q.aggs, keys, approx_unique=approx
-                ).write.mode("overwrite").parquet(path),
-                lambda: self._write_carry(state_dir, carry, hwm),
+            # base FIRST: it materializes every persisted step, so the
+            # carry write below is a pure cached-read job
+            self._chain_rows(q, chains[-1]).write.mode("overwrite").parquet(
+                os.path.join(path, "base")
             )
+            self._write_carry(self._state_path(name), carry, hwm)
             return hwm
         finally:
             for c in chains:
@@ -639,11 +606,12 @@ class Materializer:
     def _chain_delta(self, q, lower, cur, state):
         """The stepwise delta advance over carried `state` (published
         reads on the fold and aggregate paths, pinned snapshots on the
-        serve path) ∪ the (lower, cur] slice. Each link's output is lazily
-        localCheckpointed: it feeds the next link, the pending anti-join
-        AND, for the last link, the served rows and the fold's writes —
-        one computation for all. Returns (completed chains, carry state
-        at cur)."""
+        serve path) ∪ the (lower, cur] slice; with both None, the full
+        match up to cur (an aggregate REMEMBER). Each link's output is
+        lazily localCheckpointed: it feeds the next link, the pending
+        anti-join AND, for the last link, the served rows and the fold's
+        writes — one computation for all. Returns (completed chains,
+        carry state at cur)."""
         chains, carry = self._chain_advance(
             q, self.engine.compiler.chain_parts(q, upper=cur),
             lambda df: df.localCheckpoint(eager=False), cur[0], state, lower,
@@ -685,82 +653,6 @@ class Materializer:
         # recover_dir in show(), restoring the OLD state.
         self.storage.publish_dir(state)
 
-    def _refresh_chain_agg(self, name: str, q, manifest: dict, path: str,
-                           cur: tuple[int, int]):
-        """Incremental sequence-AGGREGATE refresh: partial-aggregate only
-        the delta's completed (window-filtered) chains, merge into the
-        stored per-group state, finalize — plus the per-step carry swap.
-        Exact because completed chains are append-only (one emission per
-        head) and every aggregate op merges over disjoint row sets. The
-        visible result replaces before the state publish, so a crash in
-        between reruns the same delta against the OLD state
-        idempotently; the in-state marker keeps a crash after the state
-        publish from re-merging."""
-        from sneldb_spark.plans.aggregates import (
-            finalize_partial_state,
-            merge_partial_states,
-        )
-
-        keys = manifest["state_keys"]
-        approx = self.engine.compiler.approx_count_unique
-        state = self._state_path(name)
-        lower = self._published_lower(manifest, self._live(state))
-        chain, carry = self._chain_delta(
-            q, lower, cur, self._read_carry(name, len(q.sequence.event_types))
-        )
-        delta_state, _ = self._seq_agg_partial(q, chain)
-        merged = merge_partial_states(
-            self.engine.spark.read.parquet(self._seq_agg_state_path(name))
-            .unionByName(delta_state, allowMissingColumns=True),
-            q.aggs, keys, approx_unique=approx,
-        )
-        nxt = self.storage.stage_path(state)
-        self.storage.remove_tree(nxt)
-        nxt_agg = os.path.join(nxt, "agg_state")
-        # materialize the merge ONCE (eager localCheckpoint — this also
-        # materializes the stepwise-advance checkpoints the carry state
-        # reads), then stage the merged state, its finalize, and the
-        # carry state concurrently; the state dir and the result derive
-        # from the same materialized rows (one-estimator rule), and
-        # nothing is visible until the publishes below
-        merged_ck = merged.localCheckpoint(eager=True)
-        final = finalize_partial_state(merged_ck, q.aggs, keys, approx_unique=approx)
-        self._parallel_writes(
-            lambda: merged_ck.write.mode("overwrite").parquet(nxt_agg),
-            lambda: final.write.mode("overwrite").parquet(
-                self.storage.stage_path(path)
-            ),
-            lambda: self._write_carry(nxt, carry, cur),
-        )
-        self.storage.publish_dir(path)
-        # state publish AFTER the data replace: a promoted new state must
-        # imply the visible result already reflects the merged aggregate
-        self.storage.publish_dir(state)
-
-    def _agg_incrementable(self, q, manifest: dict) -> bool:
-        """Plain aggregates refresh by partial-state merge. Excluded:
-        sequence aggregates (the match itself isn't mergeable), LIMIT
-        (caps *groups*; a delta could add groups that should compete),
-        and retention options (they filter event-shaped rows, not
-        groups)."""
-        from sneldb_spark.plans.aggregates import is_percentile
-
-        return (
-            isinstance(q, ast.QueryCommand)
-            and q.is_aggregate
-            and not q.is_sequence
-            and q.limit is None
-            and q.offset is None
-            and manifest.get("max_rows") is None
-            and manifest.get("max_age_seconds") is None
-            # exact percentiles carry a mergeable value-multiset state;
-            # the approx sketch exposes no merge — full recompute there
-            and not (
-                self.engine.compiler.approx_percentiles
-                and any(is_percentile(a.op) for a in q.aggs)
-            )
-        )
-
     def _state_path(self, name: str) -> str:
         return os.path.join(self._dir(name), "state")
 
@@ -780,9 +672,6 @@ class Materializer:
             .option("mergeSchema", "true")
             .parquet(self._live(path))
         )
-
-    def _seq_agg_state_path(self, name: str) -> str:
-        return os.path.join(self._live(self._state_path(name)), "agg_state")
 
     @staticmethod
     def _delta_slice(df: DataFrame, hwm_ts: int, hwm_id: int) -> DataFrame:
@@ -882,6 +771,9 @@ class Materializer:
         if self.exists(name):
             raise MaterializationError(f"materialization {name!r} already exists")
         is_compare = isinstance(q, ast.CompareCommand)
+        shape = self._choose_shape(
+            q, max_rows is not None or max_age_seconds is not None
+        )
         manifest = {
             "name": name,
             "query": compare_to_json(q) if is_compare else query_to_json(q),
@@ -890,111 +782,62 @@ class Materializer:
             "max_rows": max_rows,
             "max_age_seconds": max_age_seconds,
         }
-        path = os.path.join(self._dir(name), "data")
-        if is_compare:
-            if self._compare_incrementable(q, manifest):
-                # manifest hwm = the mark the side reads were closed at,
-                # so rows racing in mid-materialization land in the next
-                # delta exactly once
-                hwm_ts, hwm_id = self._remember_compare(name, q, manifest, path)
-            else:
-                # probe FIRST, compile with the read closed at the probed
-                # mark: a row racing in after the probe is excluded from
-                # this result and lands in the next refresh exactly once —
-                # probing after the write would record it as consumed
-                # while it is absent from the stored rows.
-                hwm_ts, hwm_id = self._pin_snapshot(q)
-                self._apply_retention(
-                    self.engine.compiler.compile(q, upper=(hwm_ts, hwm_id)),
-                    manifest,
-                ).write.mode("overwrite").parquet(path)
-            manifest["hwm_ts"], manifest["hwm_id"] = hwm_ts, hwm_id
-            self._write_manifest(name, manifest)
-            return self.engine.spark.read.parquet(path).count()
-        if q.is_sequence and (
+        if not is_compare and q.is_sequence and (
             len(q.sequence.links) == 1 or self.engine.compiler.multi_link
         ):
             # the step count this engine matched: SHOW on an engine that
             # cannot match as many refuses instead of recomputing empty
             manifest["chain_steps"] = len(q.sequence.event_types)
-        if self._agg_incrementable(q, manifest):
-            # Materialize the RESULT from the partial state's finalize so
-            # the remembered values and every later state-merge refresh go
-            # through the one estimator — with approx COUNT UNIQUE the
-            # query path (approx_count_distinct) and the sketch estimate
-            # differ slightly, and a refresh must never silently change
-            # which one the user is looking at.
-            from sneldb_spark.plans.aggregates import finalize_partial_state
-
-            approx = self.engine.compiler.approx_count_unique
-            hwm = self._pin_snapshot(q)
-            # read closed at the probed mark: a row racing in lands in
-            # the next delta exactly once, never in both
-            state, keys = self.engine.compiler.compile_aggregate_partial(
-                q, upper=hwm
-            )
-            # Materialize the partial state ONCE (eager localCheckpoint),
-            # then write the state dir and the finalized result
-            # concurrently — both writes consume the same materialized
-            # rows, so the one-estimator rule holds exactly as it did
-            # when finalize re-read the just-written state files, without
-            # the sequential write -> read-back -> write chain (two extra
-            # scheduler turnarounds on tiny grouped state).
-            state_ck = state.localCheckpoint(eager=True)
-            manifest["state_keys"] = keys
-
-            def _write_agg_state():
-                state_ck.write.mode("overwrite").parquet(
-                    self._state_path(name)
-                )
-                self._write_state_hwm(self._state_path(name), *hwm)
-
-            self._parallel_writes(
-                _write_agg_state,
-                lambda: finalize_partial_state(
-                    state_ck, q.aggs, keys, approx_unique=approx
-                ).write.mode("overwrite").parquet(path),
-            )
-            manifest["hwm_ts"], manifest["hwm_id"] = hwm
-            self._write_manifest(name, manifest)
-            return self.engine.spark.read.parquet(path).count()
-        elif self._incrementable(q) and max_rows is None and max_age_seconds is None:
-            # retention-free event materializations use the append-only
-            # segment layout from day one: REMEMBER writes data/base with
-            # the read closed at the probed mark, every refresh appends an
-            # interval segment, and a marker file inside data/ carries the
-            # consumed hwm (no multi-part state, so no swap machinery).
+        path = os.path.join(self._dir(name), "data")
+        # Every shape probes FIRST and closes its reads at the probed
+        # mark: a row racing in after the probe is excluded from this
+        # result and lands in the next refresh exactly once — probing
+        # after the write would record it as consumed while it is absent
+        # from the stored rows.
+        if shape == SEGMENTS:
+            # append-only segment layout from day one: data/base, every
+            # refresh appends an interval segment, and a marker file
+            # inside data/ carries the consumed hwm
             from sneldb_spark.plans.filters import hwm_at_or_before
 
-            hwm_ts, hwm_id = self._pin_snapshot(q)
-            base = self.engine.compiler.compile_query(q).where(
-                hwm_at_or_before(hwm_ts, hwm_id)
-            )
-            base.write.mode("overwrite").parquet(os.path.join(path, "base"))
-            self._write_state_hwm(path, hwm_ts, hwm_id)
+            hwm = self._pin_snapshot(q)
+            self.engine.compiler.compile_query(q).where(
+                hwm_at_or_before(*hwm)
+            ).write.mode("overwrite").parquet(os.path.join(path, "base"))
+            self._write_state_hwm(path, *hwm)
             manifest["segments"] = True
-            manifest["hwm_ts"], manifest["hwm_id"] = hwm_ts, hwm_id
-            self._write_manifest(name, manifest)
-            return self._read_segments(path).count()
-        elif self._sequence_incrementable(q, manifest):
-            hwm_ts, hwm_id = self._remember_chain(name, q, manifest, path)
+        elif shape == SEQUENCE:
+            hwm = self._remember_chain(name, q, path)
             manifest["seq_state"] = True
-            manifest["hwm_ts"], manifest["hwm_id"] = hwm_ts, hwm_id
-            self._write_manifest(name, manifest)
-            if q.is_aggregate:
-                return self.engine.spark.read.parquet(path).count()
-            return self._read_segments(path).count()
+        elif shape == PARTIAL:
+            hwm = self._pin_snapshot(q)
+            keys = self._refresh_partial(name, q, manifest, path, hwm, bootstrap=True)
+            if is_compare:
+                manifest["compare_state_keys"] = keys
+            else:
+                manifest["state_keys"] = keys[0]
+                if q.is_sequence:
+                    manifest["seq_state"] = True
+            sides = q.queries if is_compare else [q]
+            if any(a.op == "count_unique" for s in sides for a in s.aggs):
+                # the state's COUNT UNIQUE layout (value set or sketch)
+                manifest["approx_count_unique"] = (
+                    self.engine.compiler.approx_count_unique
+                )
         else:
-            # same probe-then-closed-read ordering as the COMPARE branch
-            hwm_ts, hwm_id = self._pin_snapshot(q)
-            df = self._apply_retention(
-                self.engine.compiler.compile_query(q, upper=(hwm_ts, hwm_id)),
-                manifest,
-            )
-            df.write.mode("overwrite").parquet(path)
-        manifest["hwm_ts"], manifest["hwm_id"] = hwm_ts, hwm_id
+            hwm = self._pin_snapshot(q)
+            self._recomputed(q, manifest, hwm).write.mode("overwrite").parquet(path)
+        manifest["hwm_ts"], manifest["hwm_id"] = hwm
         self._write_manifest(name, manifest)
-        return self.engine.spark.read.parquet(path).count()
+        if shape in (SEGMENTS, SEQUENCE):
+            return self._read_segments(path).count()
+        return self.engine.spark.read.parquet(self._live(path)).count()
+
+    def _recomputed(self, q, manifest: dict, mark: tuple[int, int]) -> DataFrame:
+        """The full result with every read closed at `mark`."""
+        return self._apply_retention(
+            self.engine.compiler.compile(q, upper=mark), manifest
+        )
 
     def _write_state_hwm(self, state_dir: str, hwm_ts: int, hwm_id: int):
         """Underscore-prefixed so Spark's parquet listing ignores it;
@@ -1018,192 +861,125 @@ class Materializer:
             d = json.load(f)
         return d["ts"], d["id"]
 
-    def _swap_in_with_marker(self, df: DataFrame, path: str, mark: tuple[int, int]):
-        """_swap_in plus a consumed-hwm marker written INSIDE the new
-        directory before the rename, so state and its mark move
-        atomically — a crash right after the swap leaves a state that
-        self-describes how far it has merged (the refresh reads the
-        marker in preference to a stale manifest and never re-merges the
-        same delta)."""
-        staging = self.storage.stage_path(path)
-        df.write.mode("overwrite").parquet(staging)
-        self._write_state_hwm(staging, *mark)
-        self.storage.publish_dir(path)
+    # -- partial-state aggregates: one path for every side count ----------
+    # A plain aggregate is one side (state/); a sequence aggregate is one
+    # side whose delta partial comes from the stepwise chain advance and
+    # whose state dir also holds the step carry (state/agg_state beside
+    # the carry parts); a COMPARE is one side per query (cstate/side_<i>),
+    # combined by merge_sides. Each side's state dir carries its own
+    # consumed-hwm marker and publishes as one unit.
+    def _partial_sides(self, name: str, q, manifest: dict):
+        """(query, state dir, state subdir or None, group keys) per side."""
+        if isinstance(q, ast.CompareCommand):
+            keys = manifest.get("compare_state_keys") or [None] * len(q.queries)
+            return [
+                (s, os.path.join(self._dir(name), "cstate", f"side_{i}"), None, k)
+                for i, (s, k) in enumerate(zip(q.queries, keys))
+            ]
+        sub = "agg_state" if q.is_sequence else None
+        return [(q, self._state_path(name), sub, manifest.get("state_keys"))]
 
-    def _merge_state_delta(
-        self,
-        spath: str,
-        q: ast.QueryCommand,
-        keys: list[str],
-        lower: tuple[int, int],
-        cur: tuple[int, int],
-    ):
-        """Merge the (lower, cur] delta of one aggregate query into the
-        partial state stored at `spath`. The state's own hwm marker wins
-        over the caller's lower bound (a crash between state swap and
-        manifest write must not double-merge), and the read is closed at
-        `cur` so a row racing in mid-refresh is consumed exactly once by
-        the next delta."""
-        from sneldb_spark.plans.aggregates import merge_partial_states
-
-        marker = self._read_state_hwm(spath)
-        if marker is not None and tuple(marker) > tuple(lower):
-            lower = tuple(marker)
-        if tuple(lower) >= tuple(cur):
-            return
-        delta, _ = self.engine.compiler.compile_aggregate_partial(
-            q, hwm=lower, upper=cur
+    def _side_delta(self, name: str, s, lower, cur):
+        """(partial state of one side's (lower, cur] slice, group keys,
+        step carry at cur or None). `lower` None reads everything up to
+        `cur` (the REMEMBER bootstrap)."""
+        compiler = self.engine.compiler
+        if not s.is_sequence:
+            state, keys = compiler.compile_aggregate_partial(s, hwm=lower, upper=cur)
+            return state, keys, None
+        # completed chains are append-only (one emission per head), so
+        # partial-aggregating only the delta's chains merges exactly
+        carried = None
+        if lower is not None:
+            carried = self._read_carry(name, len(s.sequence.event_types))
+        chain, carry = self._chain_delta(s, lower, cur, carried)
+        state, keys = compiler.compile_chain_aggregate_partial(
+            s, self._within_chain(s, chain)
         )
-        stored = self.engine.spark.read.parquet(self._live(spath))
-        merged = merge_partial_states(
-            stored.unionByName(delta), q.aggs, keys,
-            approx_unique=self.engine.compiler.approx_count_unique,
-        )
-        self._swap_in_with_marker(merged, spath, cur)
+        return state, keys, carry
 
-    def _refresh_agg(self, name: str, q, manifest: dict, path: str,
-                     cur: tuple[int, int]):
-        """Incremental plain-aggregate SHOW: aggregate ONLY the rows past
-        the high-water mark (the delta scan's hwm predicate reaches the
-        Parquet scan, pushdown-tested), merge into the stored per-group
-        state, and finalize. The state write and the result write both
-        consume ONE materialized merge (eager localCheckpoint), so the
-        one-estimator rule holds exactly as it did when finalize re-read
-        the just-swapped state files — minus two sequential scheduler
-        turnarounds. The state's own hwm marker wins over the manifest
-        (a crash between state publish and manifest write must not
-        double-merge), and the read is closed at `cur` so a row racing
-        in mid-refresh is consumed exactly once by the next delta."""
+    def _refresh_partial(self, name: str, q, manifest: dict, path: str,
+                         cur: tuple[int, int], bootstrap: bool = False) -> list:
+        """REMEMBER (`bootstrap`: no stored state, reads closed at `cur`)
+        and refresh of every partial-state shape. Per side: the delta
+        partial past max(manifest hwm, side marker), merged with the
+        stored state and materialized ONCE by an eager localCheckpoint
+        that the state write and the finalize both consume — so the
+        stored result and every later refresh go through one estimator
+        (approx COUNT UNIQUE: the query path's approx_count_distinct and
+        the sketch estimate differ slightly). Side checkpoints are
+        independent jobs and run together; one _parallel_writes then
+        stages every side's state (+ carry) and the finalized result.
+
+        Publish order: the result first, then each state. A crash before
+        a side's state publish reruns that side's delta against its old
+        state; a side whose state landed (marker at `cur`) merges an
+        empty delta — the rerun is idempotent either way. Returns each
+        side's group keys."""
         from sneldb_spark.plans.aggregates import (
             finalize_partial_state,
             merge_partial_states,
         )
-
-        approx = self.engine.compiler.approx_count_unique
-        keys = manifest["state_keys"]
-        spath = self._state_path(name)
-        lower = (manifest["hwm_ts"], manifest["hwm_id"])
-        marker = self._read_state_hwm(spath)
-        if marker is not None and tuple(marker) > tuple(lower):
-            lower = tuple(marker)
-        if tuple(lower) >= tuple(cur):
-            # state already covers cur (crash between state publish and
-            # manifest write): rebuild the visible result from the
-            # stored state without re-merging
-            self._swap_in(
-                finalize_partial_state(
-                    self.engine.spark.read.parquet(self._live(spath)),
-                    q.aggs, keys, approx_unique=approx,
-                ),
-                path,
-            )
-            return
-        delta, _ = self.engine.compiler.compile_aggregate_partial(
-            q, hwm=lower, upper=cur
-        )
-        stored = self.engine.spark.read.parquet(self._live(spath))
-        merged_ck = merge_partial_states(
-            stored.unionByName(delta), q.aggs, keys, approx_unique=approx
-        ).localCheckpoint(eager=True)
-        sstage = self.storage.stage_path(spath)
-
-        def _write_state():
-            merged_ck.write.mode("overwrite").parquet(sstage)
-            self._write_state_hwm(sstage, *cur)
-
-        self._parallel_writes(
-            _write_state,
-            lambda: finalize_partial_state(
-                merged_ck, q.aggs, keys, approx_unique=approx
-            ).write.mode("overwrite").parquet(self.storage.stage_path(path)),
-        )
-        # same publish order as the previous sequential form: state
-        # (with its marker) first, then the visible result — a crash in
-        # between leaves marker > manifest hwm, which the next refresh
-        # resolves via the early branch above
-        self.storage.publish_dir(spath)
-        self.storage.publish_dir(path)
-
-    # -- COMPARE materialization (extension) -------------------------------
-    def _compare_state_dir(self, name: str, i: int) -> str:
-        return os.path.join(self._dir(name), "cstate", f"side_{i}")
-
-    def _remember_compare(self, name: str, c, manifest: dict,
-                          path: str) -> tuple[int, int]:
-        """Initial COMPARE materialization: one mergeable partial state
-        PER SIDE (each side is a plain aggregate), reads closed at the
-        probed high-water mark, visible result derived from the states'
-        finalize + the same full-outer side merge a direct COMPARE
-        compiles — so a refresh and a fresh run go through one estimator
-        and one merge implementation."""
-        from sneldb_spark.plans.aggregates import finalize_partial_state
         from sneldb_spark.plans.compare import merge_sides, side_labels
 
         approx = self.engine.compiler.approx_count_unique
-        labels = side_labels(c.queries, c.labels)
-        hwm = self._pin_snapshot(c)
-        keys_list, sps, writes = [], [], []
-        for i, s in enumerate(c.queries):
-            state, keys = self.engine.compiler.compile_aggregate_partial(
-                s, upper=hwm
-            )
-            sp = self._compare_state_dir(name, i)
-
-            def write_side(state=state, sp=sp):
-                state.write.mode("overwrite").parquet(sp)
-                self._write_state_hwm(sp, *hwm)
-
-            writes.append(write_side)
-            keys_list.append(keys)
-            sps.append(sp)
-        # each side's state write scans only ITS source slice — mutually
-        # independent jobs, run together; the finalize frames are built
-        # (and the merged result written) off the committed states after
-        self._parallel_writes(*writes)
-        finals = [
-            finalize_partial_state(
-                self.engine.spark.read.parquet(sp), s.aggs, keys,
-                approx_unique=approx,
-            )
-            for s, keys, sp in zip(c.queries, keys_list, sps)
-        ]
-        merge_sides(c.queries, labels, finals).write.mode("overwrite").parquet(path)
-        manifest["compare_state_keys"] = keys_list
-        return hwm
-
-    def _refresh_compare(self, name: str, c, manifest: dict, path: str,
-                         cur: tuple[int, int]):
-        """Incremental COMPARE SHOW: each side merges only ITS delta into
-        its stored partial state (per-side hwm markers make a mid-refresh
-        crash resumable without double-merging), then the group-count-
-        sized side merge re-runs — the sources are never rescanned."""
-        from sneldb_spark.plans.aggregates import finalize_partial_state
-        from sneldb_spark.plans.compare import merge_sides, side_labels
-
-        approx = self.engine.compiler.approx_count_unique
-        labels = side_labels(c.queries, c.labels)
-        lower = (manifest["hwm_ts"], manifest["hwm_id"])
-        # each side merges only ITS delta into ITS state dir (write +
-        # per-side publish, fully self-contained) — independent jobs,
-        # run together; the side merge reads the published states after
-        self._parallel_writes(*[
-            (lambda i=i, s=s: self._merge_state_delta(
-                self._compare_state_dir(name, i),
-                s, manifest["compare_state_keys"][i], lower, cur,
-            ))
-            for i, s in enumerate(c.queries)
+        sides = self._partial_sides(name, q, manifest)
+        states, keys, carries = [], [], []
+        for s, sdir, sub, k in sides:
+            lower = None
+            if not bootstrap:
+                live = self._live(sdir)
+                lower = self._published_lower(manifest, live)
+            delta, k, carry = self._side_delta(name, s, lower, cur)
+            if not bootstrap:
+                stored = self.engine.spark.read.parquet(
+                    os.path.join(live, sub) if sub else live
+                )
+                delta = merge_partial_states(
+                    stored.unionByName(delta, allowMissingColumns=True),
+                    s.aggs, k, approx_unique=approx,
+                )
+            states.append(delta)
+            keys.append(k)
+            carries.append(carry)
+        states = self._parallel_writes(*[
+            (lambda df=df: df.localCheckpoint(eager=True)) for df in states
         ])
         finals = [
-            finalize_partial_state(
-                self.engine.spark.read.parquet(
-                    self._live(self._compare_state_dir(name, i))
-                ),
-                s.aggs, manifest["compare_state_keys"][i],
-                approx_unique=approx,
-            )
-            for i, s in enumerate(c.queries)
+            finalize_partial_state(state, side[0].aggs, k, approx_unique=approx)
+            for side, state, k in zip(sides, states, keys)
         ]
-        self._swap_in(merge_sides(c.queries, labels, finals), path)
+        result = (
+            merge_sides(q.queries, side_labels(q.queries, q.labels), finals)
+            if isinstance(q, ast.CompareCommand) else finals[0]
+        )
+
+        def target(d: str) -> str:
+            # REMEMBER writes in place: nothing is visible before its
+            # manifest; a refresh stages and publishes
+            return d if bootstrap else self.storage.stage_path(d)
+
+        staged, writes = [], []
+        for (_s, sdir, sub, _k), state, carry in zip(sides, states, carries):
+            nxt = target(sdir)
+            self.storage.remove_tree(nxt)
+            dst = os.path.join(nxt, sub) if sub else nxt
+            writes.append(
+                lambda df=state, dst=dst: df.write.mode("overwrite").parquet(dst)
+            )
+            if carry is not None:
+                writes.append(lambda d=nxt, c=carry: self._write_state_parts(d, c))
+            staged.append(nxt)
+        out = target(path)
+        writes.append(lambda: result.write.mode("overwrite").parquet(out))
+        self._parallel_writes(*writes)
+        for nxt in staged:
+            self._write_state_hwm(nxt, *cur)
+        if not bootstrap:
+            self.storage.publish_dir(path)
+            for _s, sdir, _sub, _k in sides:
+                self.storage.publish_dir(sdir)
+        return keys
 
     # -- SHOW -------------------------------------------------------------
     # -- serve-then-refresh builders ---------------------------------------
@@ -1461,33 +1237,21 @@ class Materializer:
                 # a slow reader is safe.
                 self.compact(name)
 
-    def _try_serve_first(self, name: str, q, manifest: dict, path: str,
-                         cur: tuple[int, int]):
-        """Serve-then-refresh SHOW (reference parity:
-        src/command/handlers/show/orchestrator.rs:123-170 — the
-        StoredFrameStreamer spawns BEFORE the delta pipeline, so
-        time-to-first-frame is a storage read, not a refresh). For the
-        append-only segment shapes (plain and sequence event results)
-        build the `stored ∪ delta` serve frame, schedule the background
-        fold, and return the frame. None routes the caller to the
-        synchronous ladder: aggregate/COMPARE results are a state MERGE,
-        not an append, so there is no stored-first stream to serve."""
-        if self._incrementable(q) and manifest.get("segments"):
+    def _serve_first(self, name: str, q, manifest: dict, path: str,
+                     cur: tuple[int, int], shape: str) -> DataFrame:
+        """Serve-then-refresh SHOW of the append-only segment shapes
+        (reference parity: src/command/handlers/show/orchestrator.rs:
+        123-170 — the StoredFrameStreamer spawns BEFORE the delta
+        pipeline, so time-to-first-frame is a storage read, not a
+        refresh): build the `stored ∪ delta` serve frame, schedule the
+        background fold, and return the frame."""
+        if shape == SEGMENTS:
             lower = self._published_lower(manifest, path)
             serve, bundle = self._serve_plain(q, path, lower, cur)
             refresh_fn, marker_dir = self._refresh_plain_segments, path
-        elif (
-            manifest.get("seq_state")
-            and manifest.get("state_keys") is None
-            and self._sequence_incrementable(q, manifest)
-            and self._state_part_exists_at(
-                self._live(self._state_path(name)), "pending_s0"
-            )
-        ):
+        else:
             serve, bundle = self._serve_chain(name, q, manifest, path, cur)
             refresh_fn, marker_dir = self._refresh_chain, self._state_path(name)
-        else:
-            return None
         self._register_serve(name, serve)
         self._schedule_fold(
             name,
@@ -1498,24 +1262,45 @@ class Materializer:
         )
         return serve
 
-    def show(self, name: str) -> DataFrame:
+    def _load(self, name: str):
+        """(manifest, command) of a materialization."""
         if not self.exists(name):
             raise MaterializationError(f"Materialization '{name}' not found")
         with open(self._manifest_path(name)) as f:
             manifest = json.load(f)
         if manifest["query"].get("compare"):
-            q = compare_from_json(manifest["query"])
-        else:
-            q = query_from_json(manifest["query"])
+            return manifest, compare_from_json(manifest["query"])
+        return manifest, query_from_json(manifest["query"])
+
+    def _refuse_engine_mismatch(self, name: str, manifest: dict) -> None:
+        """Raise before any write when this engine cannot refresh what
+        REMEMBER stored: a chain needs multi_link to match (without it a
+        refresh would replace the stored chains with the reference's
+        empty frame), and COUNT UNIQUE state is a value set or a sketch
+        by approx_count_unique (merging one into the other fails)."""
         steps = manifest.get("chain_steps", 2)
         if steps > 2 and not self.engine.compiler.multi_link:
-            # without multi_link a chain compiles to the reference's empty
-            # frame: any refresh would replace the stored chains with it
             raise MaterializationError(
                 f"materialization '{name}' is a {steps}-step chain; SHOW "
                 "needs an engine opened with multi_link=True"
             )
+        approx = manifest.get("approx_count_unique")
+        if approx is not None and approx != self.engine.compiler.approx_count_unique:
+            raise MaterializationError(
+                f"materialization '{name}' keeps COUNT UNIQUE state for "
+                f"approx_count_unique={approx}; SHOW needs an engine opened "
+                f"with approx_count_unique={approx}"
+            )
+
+    def show(self, name: str) -> DataFrame:
+        manifest, q = self._load(name)
+        self._refuse_engine_mismatch(name, manifest)
+        shape = shape_of(manifest)
         path = os.path.join(self._dir(name), "data")
+        if shape == PARTIAL:
+            state_dirs = [d for _s, d, _sub, _k in self._partial_sides(name, q, manifest)]
+        else:
+            state_dirs = [self._state_path(name)] if shape == SEQUENCE else []
         # Recovery repairs a CRASHED publish — but an in-flight
         # background fold is legitimately staging the next data/state
         # version right now (the fold thread also runs auto-compaction's
@@ -1536,68 +1321,36 @@ class Materializer:
                 self.storage.recover_dir(
                     path, keep_live=self._pinned_lives(name)
                 )
-                if manifest.get("state_keys") is not None or manifest.get(
-                    "seq_state"
-                ):
-                    self.storage.recover_dir(self._state_path(name))
-                if manifest.get("compare_state_keys") is not None:
-                    for i in range(len(manifest["compare_state_keys"])):
-                        self.storage.recover_dir(
-                            self._compare_state_dir(name, i)
-                        )
-        cur_ts, cur_id = self._source_hwm(q)
-        stale = (cur_ts, cur_id) != (manifest["hwm_ts"], manifest["hwm_id"])
-
-        if stale:
-            served = self._try_serve_first(
-                name, q, manifest, path, (cur_ts, cur_id)
-            )
-            if served is not None:
-                return served
-
-        if stale and self._incrementable(q):
-            # retention-capped plain layout (segment layouts are served
-            # above): merge the delta into the stored rows and re-apply
-            # retention
-            delta_df = self._delta_slice(
-                self.engine.compiler.compile_query(q),
-                manifest["hwm_ts"], manifest["hwm_id"],
-            )
-            stored = self.engine.spark.read.parquet(self._live(path))
-            merged = self._apply_retention(
-                stored.unionByName(delta_df).dropDuplicates(["event_id"]), manifest
-            )
-            self._swap_in(merged, path)
-        elif stale and self._sequence_incrementable(q, manifest) and manifest.get(
-            "seq_state"
-        ) and manifest.get("state_keys") is not None and os.path.exists(
-            self._seq_agg_state_path(name)
-        ) and self._state_part_exists_at(
-            self._live(self._state_path(name)), "pending_s0"
-        ):
-            self._refresh_chain_agg(name, q, manifest, path, (cur_ts, cur_id))
-        elif stale and self._agg_incrementable(q, manifest) and manifest.get(
-            "state_keys"
-        ) is not None and self.storage.exists(self._state_path(name)):
-            self._refresh_agg(name, q, manifest, path, (cur_ts, cur_id))
-        elif stale and self._compare_incrementable(q, manifest) and manifest.get(
-            "compare_state_keys"
-        ) is not None and self.storage.exists(self._compare_state_dir(name, 0)):
-            self._refresh_compare(name, q, manifest, path, (cur_ts, cur_id))
-        elif stale:
-            # closed at the already-probed mark: the stored rows and the
-            # recorded hwm always describe the same snapshot
-            df = self._apply_retention(
-                self.engine.compiler.compile(q, upper=(cur_ts, cur_id)), manifest
-            )
-            self._swap_in(df, path)
-
-        if stale:
-            manifest["hwm_ts"], manifest["hwm_id"] = cur_ts, cur_id
+                for d in state_dirs:
+                    self.storage.recover_dir(d)
+        cur = self._source_hwm(q)
+        if cur != (manifest["hwm_ts"], manifest["hwm_id"]):
+            if shape in (SEGMENTS, SEQUENCE):
+                return self._serve_first(name, q, manifest, path, cur, shape)
+            if shape == PARTIAL:
+                self._refresh_partial(name, q, manifest, path, cur)
+            elif shape == RETAINED:
+                # merge the delta into the stored rows and re-apply
+                # retention (it must see the whole result)
+                delta_df = self._delta_slice(
+                    self.engine.compiler.compile_query(q),
+                    manifest["hwm_ts"], manifest["hwm_id"],
+                )
+                stored = self.engine.spark.read.parquet(self._live(path))
+                self._swap_in(
+                    self._apply_retention(
+                        stored.unionByName(delta_df).dropDuplicates(["event_id"]),
+                        manifest,
+                    ),
+                    path,
+                )
+            else:
+                # closed at the already-probed mark: the stored rows and
+                # the recorded hwm always describe the same snapshot
+                self._swap_in(self._recomputed(q, manifest, cur), path)
+            manifest["hwm_ts"], manifest["hwm_id"] = cur
             self._write_manifest(name, manifest)
-        if manifest.get("segments") or (
-            manifest.get("seq_state") and manifest.get("state_keys") is None
-        ):
+        if shape in (SEGMENTS, SEQUENCE):
             return self._read_segments(path)
         return self.engine.spark.read.parquet(self._live(path))
 
@@ -1615,23 +1368,20 @@ class Materializer:
     def describe(self, name: str) -> dict:
         """Manifest summary + current staleness (metadata-cheap: the
         source probe reads Parquet footers and the memtable, no Spark
-        job)."""
-        if not self.exists(name):
-            raise MaterializationError(f"Materialization '{name}' not found")
-        with open(self._manifest_path(name)) as f:
-            manifest = json.load(f)
-        if manifest["query"].get("compare"):
-            q = compare_from_json(manifest["query"])
-        else:
-            q = query_from_json(manifest["query"])
+        job). `kind` is what the query returns; `refresh` is how a stale
+        SHOW brings it up to date."""
+        manifest, q = self._load(name)
         cur = self._source_hwm(q)
         return {
             "name": name,
             "kind": (
-                "compare" if manifest["query"].get("compare")
-                else "sequence" if manifest.get("seq_state")
-                else "aggregate" if manifest.get("state_keys") is not None
+                "compare" if isinstance(q, ast.CompareCommand)
+                else "sequence" if q.is_sequence
+                else "aggregate" if q.is_aggregate
                 else "events"
+            ),
+            "refresh": (
+                "recompute" if shape_of(manifest) == RECOMPUTE else "incremental"
             ),
             "hwm_ts": manifest["hwm_ts"],
             "hwm_id": manifest["hwm_id"],
@@ -1681,21 +1431,15 @@ class Materializer:
         read-repair). Note the local rename-based backend cannot honor
         keep_live at all (single-process, no-concurrent-reader by
         contract — see Storage.publish_dir)."""
-        if not self.exists(name):
-            raise MaterializationError(f"Materialization '{name}' not found")
+        manifest, _q = self._load(name)
+        if shape_of(manifest) not in (SEGMENTS, SEQUENCE):
+            return
         # compaction rewrites the segment layout a fold appends into —
         # let any in-flight fold land first (errors stay recorded for
         # the owner's quiesce to surface)
         self.quiesce(name, drain=False)
         path = os.path.join(self._dir(name), "data")
         self.storage.recover_dir(path, keep_live=self._pinned_lives(name))
-        with open(self._manifest_path(name)) as f:
-            manifest = json.load(f)
-        segmented = manifest.get("segments") or (
-            manifest.get("seq_state") and manifest.get("state_keys") is None
-        )
-        if not segmented:
-            return
         marker = self._read_state_hwm(path)
         merged = self._read_segments(path)
         # staged rewrite + publish: the previous segment layout stays

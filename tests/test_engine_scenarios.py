@@ -822,8 +822,8 @@ def test_remember_show_sequence_incremental_followed_by(spark, tmp_path):
     # round 12: carry parts land in ONE partitioned write + schema sidecar
     live = db.materializer._live(str(state))
     # a single link carries the state of a 2-step chain
-    assert db.materializer._state_part_exists_at(live, "pending_s0")
-    assert db.materializer._state_part_exists_at(live, "boundary_1")
+    assert db.materializer._state_part_at(live, "pending_s0") is not None
+    assert db.materializer._state_part_at(live, "boundary_1") is not None
 
     # prove SHOW goes through the delta path, never the full recompute
     refreshes = {"n": 0}
@@ -946,13 +946,13 @@ def test_remember_show_sequence_aggregate_incremental(spark, tmp_path):
     assert rows(db.execute("SHOW funnel_by_k").df) == rows(db.query(q))
 
     refreshes = {"n": 0}
-    orig = db.materializer._refresh_chain_agg
+    orig = db.materializer._refresh_partial
 
     def spy(*a, **k):
-        refreshes["n"] += 1
+        refreshes["n"] += not k.get("bootstrap")
         return orig(*a, **k)
 
-    db.materializer._refresh_chain_agg = spy
+    db.materializer._refresh_partial = spy
 
     # phase 2: u2's purchase completes the pending pair (k=1 count grows);
     # u3/u4 create a brand-new group k=7
@@ -979,11 +979,21 @@ def test_remember_show_sequence_aggregate_incremental(spark, tmp_path):
     assert rows(db.execute("SHOW funnel_total").df) == rows(db.query(g))
 
 
-def test_sequence_aggregate_refresh_is_crash_idempotent(spark, tmp_path):
-    """If a refresh dies after swapping the agg state but before the
+@pytest.mark.parametrize(
+    "q",
+    [
+        "QUERY signup COUNT",
+        "QUERY signup FOLLOWED BY purchase LINKED BY user_id COUNT",
+        "PLOT COUNT OF signup VS COUNT OF purchase",
+    ],
+    ids=["aggregate", "sequence_aggregate", "compare"],
+)
+def test_partial_state_refresh_is_crash_idempotent(spark, tmp_path, q):
+    """If a refresh dies after publishing the state but before the
     manifest hwm write, the next SHOW must NOT re-merge the same delta
-    (the state-dir hwm marker is authoritative). Simulated by resetting
-    the manifest hwm to its pre-refresh value after a successful SHOW."""
+    (the state-dir hwm marker is authoritative) — for every partial-state
+    shape. Simulated by resetting the manifest hwm to its pre-refresh
+    value after a successful SHOW."""
     import json as _json
 
     from sneldb_spark.engine import SnelDB
@@ -997,10 +1007,12 @@ def test_sequence_aggregate_refresh_is_crash_idempotent(spark, tmp_path):
     db = SnelDB(spark, str(tmp_path / "db"), clock=tick)
     db.execute('DEFINE signup FIELDS { "user_id": "string" }')
     db.execute('DEFINE purchase FIELDS { "user_id": "string" }')
-    q = "QUERY signup FOLLOWED BY purchase LINKED BY user_id COUNT"
 
     def store(et, user):
         db.execute(f'STORE {et} FOR c{clock["now"]}x{user} PAYLOAD {{ "user_id": "{user}" }}')
+
+    def counts(df):
+        return {v for r in df.collect() for v in r}
 
     store("signup", "u1"); store("purchase", "u1")
     db.execute("FLUSH")
@@ -1010,17 +1022,18 @@ def test_sequence_aggregate_refresh_is_crash_idempotent(spark, tmp_path):
 
     store("signup", "u2"); store("purchase", "u2")
     db.execute("FLUSH")
-    assert db.execute("SHOW ft").df.collect()[0]["count"] == 2
+    assert counts(db.execute("SHOW ft").df) == {2}
 
     # crash simulation: manifest hwm rolls back, state dirs stay swapped
     post = _json.loads(mpath.read_text())
     post["hwm_ts"], post["hwm_id"] = pre["hwm_ts"], pre["hwm_id"]
     mpath.write_text(_json.dumps(post))
-    assert db.execute("SHOW ft").df.collect()[0]["count"] == 2  # not 3
+    assert counts(db.execute("SHOW ft").df) == {2}  # not 3
     # and the system has healed: further data still refreshes exactly once
     store("signup", "u3"); store("purchase", "u3")
     db.execute("FLUSH")
-    assert db.execute("SHOW ft").df.collect()[0]["count"] == 3
+    assert counts(db.execute("SHOW ft").df) == {3}
+    assert counts(db.execute(q).df) == {3}
 
 
 def test_sequence_event_refresh_is_crash_idempotent(spark, tmp_path):
@@ -1170,7 +1183,27 @@ def test_materializer_lifecycle_forget_names_describe(spark, tmp_path):
     assert m.names() == ["t_count", "t_rows"]
     d = m.describe("t_count")
     assert d["kind"] == "aggregate" and d["stale"] is False
+    assert d["refresh"] == "incremental"
     assert m.describe("t_rows")["kind"] == "events"
+    assert m.describe("t_rows")["refresh"] == "incremental"
+    # kind comes from the query, refresh from the shape REMEMBER chose: a
+    # group-LIMIT aggregate and a USING TIME sequence recompute
+    db.execute('DEFINE u FIELDS { "v": "int", "seen": "int" }')
+    db.execute('STORE u FOR c1 PAYLOAD { "v": 1, "seen": 5 }')
+    db.execute("FLUSH")
+    db.execute("REMEMBER QUERY t COUNT BY v LIMIT 1 AS t_top")
+    db.execute(
+        "REMEMBER QUERY u FOLLOWED BY u LINKED BY v USING TIME seen AS t_seq"
+    )
+    db.execute("REMEMBER QUERY t FOLLOWED BY u LINKED BY v AS t_steps")
+    assert (m.describe("t_top")["kind"], m.describe("t_top")["refresh"]) == (
+        "aggregate", "recompute")
+    assert (m.describe("t_seq")["kind"], m.describe("t_seq")["refresh"]) == (
+        "sequence", "recompute")
+    assert (m.describe("t_steps")["kind"], m.describe("t_steps")["refresh"]) == (
+        "sequence", "incremental")
+    for extra in ("t_top", "t_seq", "t_steps"):
+        db.execute(f"FORGET {extra}")
     db.execute('STORE t FOR c2 PAYLOAD { "v": 2 }')
     db.execute("FLUSH")
     assert m.describe("t_count")["stale"] is True
@@ -1275,13 +1308,16 @@ def test_multi_link_chain_extension(spark, tmp_path):
     assert db.query(q + " LIMIT 0").count() == 0
 
 
-def test_remember_compare_crash_between_side_merge_and_manifest(spark, tmp_path):
-    """A crash after side 0's state swap (marker advanced) but before the
-    manifest write must NOT double-merge side 0's delta on the next SHOW:
-    the in-state hwm marker wins over the stale manifest lower bound."""
-    from sneldb_spark.commands.serde import compare_from_json
+def test_remember_compare_crash_between_side_merge_and_manifest(
+    spark, tmp_path, monkeypatch
+):
+    """A crash after side 0's state publish (marker advanced) but before
+    side 1's — so before the manifest write — must NOT double-merge side
+    0's delta on the next SHOW: the in-state hwm marker wins over the
+    stale manifest lower bound."""
+    import os
+
     from sneldb_spark.engine import SnelDB
-    import json as _json
 
     db = SnelDB(spark, str(tmp_path / "db"))
     db.execute('DEFINE m1 FIELDS { "v": "int" }')
@@ -1296,16 +1332,18 @@ def test_remember_compare_crash_between_side_merge_and_manifest(spark, tmp_path)
     db.execute("FLUSH")
 
     m = db.materializer
-    with open(m._manifest_path("board")) as f:
-        manifest = _json.load(f)
-    c = compare_from_json(manifest["query"])
-    cur = m._source_hwm(c)
-    # simulate the partial refresh: side 0 merged + marker advanced, then crash
-    m._merge_state_delta(
-        m._compare_state_dir("board", 0), c.queries[0],
-        manifest["compare_state_keys"][0],
-        (manifest["hwm_ts"], manifest["hwm_id"]), cur,
-    )
+    side1 = os.path.join(m._dir("board"), "cstate", "side_1")
+    publish = m.storage.publish_dir
+
+    def crash_on_side1(dst, *a, **k):
+        if dst == side1:
+            raise OSError("injected crash before side 1's state publish")
+        return publish(dst, *a, **k)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(m.storage, "publish_dir", crash_on_side1)
+        with pytest.raises(OSError, match="injected"):
+            db.execute("SHOW board")
     # next SHOW resumes: side 0 skipped via marker, side 1 merged, result exact
     got = sorted(tuple(r) for r in db.execute("SHOW board").df.collect())
     want = sorted(tuple(r) for r in db.execute(
@@ -1668,9 +1706,9 @@ def test_chain_materialization_forget_and_redefine(spark, tmp_path):
     db.execute(f"REMEMBER {q} AS fm")
     assert db.execute("SHOW fm").df.count() == 1
     state = db.materializer._state_path("fm")
-    assert db.materializer._state_part_exists_at(
+    assert db.materializer._state_part_at(
         db.materializer._live(state), "pending_s0"
-    )
+    ) is not None
     db.execute("FORGET fm")
     assert not os.path.exists(db.materializer._dir("fm"))
     db.execute(f"REMEMBER {q} AS fm")  # name reusable
@@ -1858,7 +1896,7 @@ def test_single_link_pair_layout_state_still_refreshes(spark, tmp_path, q):
     db.execute(f"REMEMBER {q} AS legacy")
     _rewrite_to_pair_layout(db, "legacy", aggregate="COUNT" in q)
     live = db.materializer._live(db.materializer._state_path("legacy"))
-    assert db.materializer._state_part_exists_at(live, "pending_s0")
+    assert db.materializer._state_part_at(live, "pending_s0") is not None
 
     store("purchase", "u2"); store("signup", "u3"); store("signup", "u4")
     store("signup", "u5"); store("purchase", "u5")

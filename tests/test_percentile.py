@@ -76,15 +76,14 @@ def test_remember_percentile_refreshes_incrementally(pct_engine):
     """Exact percentiles carry a mergeable value-multiset state: the
     REMEMBER is incrementable and a delta refresh (state merge + the same
     interpolation the query path applies) lands on the recompute answer."""
+    import json
+
+    from sneldb_spark.store.materialize import PARTIAL, shape_of
+
     pct_engine.execute("REMEMBER QUERY sale MEDIAN amount BY country AS med")
-    assert pct_engine.materializer._agg_incrementable(
-        __import__("sneldb_spark.commands.serde", fromlist=["query_from_json"]).query_from_json(
-            __import__("json").load(
-                open(pct_engine.materializer._manifest_path("med"))
-            )["query"]
-        ),
-        {"max_rows": None, "max_age_seconds": None},
-    )
+    assert shape_of(
+        json.load(open(pct_engine.materializer._manifest_path("med")))
+    ) == PARTIAL
     first = {r["country"]: r["median_amount"] for r in pct_engine.execute("SHOW med").df.collect()}
     assert first == {"NL": 20.0, "DE": 65.0}
     # new rows shift the percentile; the merged state must re-interpolate
@@ -105,21 +104,52 @@ def test_remember_approx_percentile_still_full_recompute(spark, tmp_path):
     opt-in, percentile REMEMBERs route to full recompute."""
     import json
 
-    from sneldb_spark.commands.serde import query_from_json
     from sneldb_spark.engine import SnelDB
+    from sneldb_spark.store.materialize import PARTIAL, shape_of
 
     db = SnelDB(spark, str(tmp_path / "apxm"), approx_percentiles=True)
     db.execute('DEFINE t FIELDS { "v": "int" }')
     db.execute('STORE t FOR c PAYLOAD {"v": 1}')
     db.execute("FLUSH")
     db.execute("REMEMBER QUERY t MEDIAN v AS m")
-    q = query_from_json(
-        json.load(open(db.materializer._manifest_path("m")))["query"]
-    )
-    assert not db.materializer._agg_incrementable(
-        q, {"max_rows": None, "max_age_seconds": None}
-    )
+    assert shape_of(
+        json.load(open(db.materializer._manifest_path("m")))
+    ) != PARTIAL
     assert db.execute("SHOW m").df.collect()[0]["median_v"] == 1
+
+
+def test_exact_percentile_materialization_survives_approx_engine(spark, tmp_path):
+    """The refresh shape is decided once at REMEMBER: an exact-percentile
+    materialization keeps merging its value-multiset state when the root
+    is reopened with approx_percentiles=True. Re-deciding per SHOW sent
+    that SHOW to a full recompute, which moved the manifest hwm but not
+    the state marker, so the next exact SHOW lost the rows in between."""
+    from sneldb_spark.engine import SnelDB
+
+    root = str(tmp_path / "db")
+    q = "QUERY sale MEDIAN amount BY country"
+
+    def median_nl(db, text):
+        return {r["country"]: r["median_amount"] for r in db.execute(text).df.collect()}["NL"]
+
+    db = SnelDB(spark, root)
+    db.execute('DEFINE sale FIELDS { "amount": "int", "country": "string" }')
+    for i, amt in enumerate((10, 20, 30)):
+        db.execute(f'STORE sale FOR a{i} PAYLOAD {{"amount": {amt}, "country": "NL"}}')
+    db.execute("FLUSH")
+    db.execute(f"REMEMBER {q} AS med")
+    db.close()
+
+    approx = SnelDB(spark, root, approx_percentiles=True)
+    approx.execute('STORE sale FOR b0 PAYLOAD {"amount": 40, "country": "NL"}')
+    approx.execute("FLUSH")
+    assert median_nl(approx, "SHOW med") == 25.0  # exact: [10,20,30,40]
+    approx.close()
+
+    exact = SnelDB(spark, root)
+    exact.execute('STORE sale FOR b1 PAYLOAD {"amount": 1000, "country": "NL"}')
+    exact.execute("FLUSH")
+    assert median_nl(exact, "SHOW med") == median_nl(exact, q) == 30.0
 
 
 def test_plotql_percentile_metric(pct_engine):
