@@ -5,12 +5,19 @@ The equivalent of the reference's dispatcher + handlers
 Results carry a DataFrame for read commands so callers stay lazy/distributed;
 nothing here collects to the driver.
 
-When an :class:`AuthManager` is attached, enforcement mirrors the reference
-dispatcher: STORE needs write permission, QUERY needs read, DEFINE and all
-user/permission management need the admin role; REPLAY/COMPARE/SHOW/FLUSH
-are not gated (reference: src/command/dispatcher.rs passes no auth manager
-to those handlers). Error messages carry the reference's status codes
-("401 ...", "403 ...") so scenario matchers line up.
+When an :class:`AuthManager` is attached: STORE needs write permission,
+QUERY/REPLAY/COMPARE/PLOT (and EXPLAIN of them) need read permission on
+every event type they read, DEFINE and all user/permission management
+need the admin role; SHOW/FLUSH are not gated. The reference gates only a
+QUERY's head type and passes no auth manager to its REPLAY/COMPARE
+handlers (src/command/dispatcher.rs); no ported scenario relies on that
+gap, and an ungated REPLAY reads every type of a context, so here the
+whole read set is checked. Error messages carry the reference's status
+codes ("401 ...", "403 ...") so scenario matchers line up.
+
+Repeated QUERY/REPLAY/COMPARE/PLOT commands reuse their compiled
+DataFrame while the event types they read are unchanged
+(plans/prepared.py).
 """
 
 from __future__ import annotations
@@ -26,6 +33,7 @@ from sneldb_spark.commands import ast
 from sneldb_spark.commands.parser import parse_command
 from sneldb_spark.errors import SnelDBError
 from sneldb_spark.plans.compiler import QueryCompiler, TimeConfig
+from sneldb_spark.plans.prepared import PlanCache
 from sneldb_spark.store.event_store import EventStore
 from sneldb_spark.store.materialize import Materializer
 
@@ -103,6 +111,9 @@ class SnelDB:
         # append-only layout (Spark reads it like any lake prefix); only
         # the swap-published materialization dirs need the protocol.
         self.materializer = Materializer(self, root, storage=storage)
+        # compiled read commands, reused while their inputs are unchanged;
+        # hits/misses/evictions and reasons() are its visible state
+        self.plan_cache = PlanCache(self.compiler, self.store)
         self.auth = auth
         # Write commands are serialized: their work (parse, validate,
         # WAL append, memtable insert) is pure Python, and concurrent
@@ -147,9 +158,9 @@ class SnelDB:
             return Result(ok=False, message=str(e))
 
     def query(self, text: str) -> DataFrame:
-        """Parse+compile a read command, returning the DataFrame."""
-        cmd = parse_command(text)
-        return self.compiler.compile(cmd)
+        """Parse+compile a read command, returning the DataFrame (the
+        prepared one while the event types it reads are unchanged)."""
+        return self.plan_cache.compile(parse_command(text))
 
     def close(self) -> None:
         """Settle the engine for teardown: join in-flight background
@@ -337,6 +348,27 @@ class SnelDB:
                 f"403 Read permission denied for event type '{event_type}'"
             )
 
+    def _read_types(self, cmd) -> list[str]:
+        """Every event type a QUERY/REPLAY/COMPARE reads (a superset of
+        what its compile records: a sequence names all its steps).
+        REPLAY without a type reads every defined type."""
+        if isinstance(cmd, ast.ReplayCommand):
+            if cmd.event_type is None:
+                return self.store.registry.event_types()
+            return [cmd.event_type]
+        queries = cmd.queries if isinstance(cmd, ast.CompareCommand) else [cmd]
+        return list(dict.fromkeys(
+            t for q in queries
+            for t in (q.sequence.event_types if q.is_sequence else [q.event_type])
+        ))
+
+    def _check_reads(self, user_id: Optional[str], cmd) -> None:
+        if self.auth is None:
+            return
+        self._require_user(user_id)
+        for event_type in self._read_types(cmd):
+            self._check_read(user_id, event_type)
+
     def _check_write(self, user_id: Optional[str], event_type: str):
         if self.auth is None:
             return
@@ -382,8 +414,7 @@ class SnelDB:
             return Result(ok=True, message="Event accepted for storage")
         if isinstance(cmd, ast.ExplainCommand):
             # same read gate as running the command itself
-            if isinstance(cmd.inner, ast.QueryCommand):
-                self._check_read(user_id, cmd.inner.event_type)
+            self._check_reads(user_id, cmd.inner)
             df = self.compiler.compile(cmd.inner)
             # public API only (ADVICE r5): df.explain prints to stdout;
             # capture it rather than reaching into the JVM bridge, which
@@ -395,11 +426,9 @@ class SnelDB:
             with contextlib.redirect_stdout(buf):
                 df.explain(mode="formatted")
             return Result(ok=True, message=buf.getvalue().rstrip("\n"))
-        if isinstance(cmd, ast.QueryCommand):
-            self._check_read(user_id, cmd.event_type)
-            return Result(ok=True, df=self.compiler.compile(cmd))
-        if isinstance(cmd, (ast.ReplayCommand, ast.CompareCommand)):
-            return Result(ok=True, df=self.compiler.compile(cmd))
+        if isinstance(cmd, (ast.QueryCommand, ast.ReplayCommand, ast.CompareCommand)):
+            self._check_reads(user_id, cmd)
+            return Result(ok=True, df=self.plan_cache.compile(cmd))
         if isinstance(cmd, ast.RememberCommand):
             self.store.flush()
             n = self.materializer.remember(cmd.name, cmd.query)

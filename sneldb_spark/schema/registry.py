@@ -91,6 +91,9 @@ class SchemaRegistry:
         self.allow_core_shadow = allow_core_shadow
         # name -> {version -> EventSchema}
         self._schemas: dict[str, dict[int, EventSchema]] = {}
+        # bumped by every DEFINE: a compiled plan is only reusable under
+        # the registry revision it was compiled against
+        self.revision = 0
         if path and os.path.exists(path):
             self._load()
 
@@ -135,6 +138,7 @@ class SchemaRegistry:
                     )
         schema = EventSchema(event_type, version, parsed, shadowed=shadowed)
         existing[version] = schema
+        self.revision += 1
         self._save()
         return schema
 

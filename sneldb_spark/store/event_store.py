@@ -27,6 +27,7 @@ from __future__ import annotations
 import os
 import threading
 import time
+from collections import Counter
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -141,6 +142,16 @@ class EventStore:
         # (dupes-over-loss order) and retry the build if the epoch moved,
         # so no frame ever straddles a handover (seqlock pattern).
         self._visibility_epoch = 0
+        # Per-type pending generation: bumped (under _pending_lock) at
+        # every change to a type's _pending or _flushing rows — a STORE,
+        # a WAL replay, the flush swap, the commit handover, a failed
+        # commit's put-back. With the type's Parquet file set it is the
+        # type's read signature (read_signature): equal signatures mean
+        # a frame built earlier still reads exactly the current state.
+        self._pending_gen: Counter[str] = Counter()
+        # per-THREAD read recorder (recording_reads): the types a compile
+        # read and their signatures just before each was read
+        self._read_log = threading.local()
         # Guards _pending against the threaded frontends: an append racing
         # the flush swap could land on the discarded buffer and vanish.
         self._pending_lock = threading.Lock()
@@ -356,6 +367,7 @@ class EventStore:
         with self._pending_lock:
             self._wal_append(event_type, row)
             self._pending.setdefault(event_type, []).append(row)
+            self._pending_gen[event_type] += 1
             n_pending = sum(len(v) for v in self._pending.values())
         if self._memtable_capacity and n_pending >= self._memtable_capacity:
             # memtable full: fire the ASYNC flush (reference
@@ -512,6 +524,7 @@ class EventStore:
                     except ValueError:
                         continue  # torn tail write from a crash
                     self._pending.setdefault(entry["t"], []).append(entry["r"])
+                    self._pending_gen[entry["t"]] += 1
 
     def flush(self):
         """Commit buffered events to Parquet (the reference's memtable->segment).
@@ -785,6 +798,7 @@ class EventStore:
             # the lock (readers snapshot both dicts under it), so the
             # rows never blink out during the Parquet commit below
             self._flushing = {et: rows for et, rows in pending.items() if rows}
+            self._pending_gen.update(pending.keys())
             rotated = []
             if os.path.isdir(self._wal_dir):
                 if self._wal_file is not None:
@@ -809,6 +823,7 @@ class EventStore:
             # epoch so a frame built across this instant rebuilds
             with self._pending_lock:
                 self._flushing.pop(event_type, None)
+                self._pending_gen[event_type] += 1
                 self._visibility_epoch += 1
             with self._bp_cond:  # admission backpressure: space freed
                 self._bp_cond.notify_all()
@@ -865,6 +880,7 @@ class EventStore:
                 for event_type, rows in pending.items():
                     if event_type in self._flushing:
                         self._pending.setdefault(event_type, [])[:0] = rows
+                self._pending_gen.update(self._flushing.keys())
                 self._flushing = {}
                 self._visibility_epoch += 1
             raise
@@ -1062,6 +1078,49 @@ class EventStore:
                 return df
         return df
 
+    # -- read signatures (the prepared-plan cache's validity) --------------
+    def read_signature(self, event_type: str) -> tuple:
+        """What a frame of `event_type` was built from: the pending
+        generation plus (path, size, mtime) of every live segment file.
+        The file set catches every Parquet change — flush commits, bulk
+        appends, compaction publishes (new prefix, new paths), a newer
+        engine writing the same root — without a hook at each write
+        site. No Spark call: a directory walk and one stat per file."""
+        with self._pending_lock:
+            gen = self._pending_gen[event_type]
+        files = []
+        path = self._path(event_type)
+        if os.path.isdir(path):  # has_data, without a second resolve
+            for f in self.storage.walk_parquet(path):
+                try:
+                    st = os.stat(f)
+                    files.append((f, st.st_size, st.st_mtime_ns))
+                except OSError:  # removed mid-walk, or an object key
+                    files.append((f, None, None))
+        return gen, tuple(sorted(files))
+
+    @contextmanager
+    def recording_reads(self):
+        """Record the event types this thread reads inside the block, with
+        each one's read_signature taken just BEFORE its first read (so a
+        write racing the build shows as a changed signature afterwards).
+        '*' records every defined type. Yields the {type: signature} dict."""
+        prev = getattr(self._read_log, "sigs", None)
+        self._read_log.sigs = sigs = {}
+        try:
+            yield sigs
+        finally:
+            self._read_log.sigs = prev
+
+    def _note_read(self, event_type: str) -> None:
+        sigs = getattr(self._read_log, "sigs", None)
+        if sigs is None:
+            return
+        types = self.registry.event_types() if event_type == "*" else [event_type]
+        for t in types:
+            if t not in sigs:
+                sigs[t] = self.read_signature(t)
+
     def read(self, event_type: str) -> DataFrame:
         """DataFrame for one event type (or '*' = union of all types).
 
@@ -1076,6 +1135,7 @@ class EventStore:
         common no-pending case returns the bare scan untouched.
         """
         self.maybe_periodic_compact()  # opportunistic interval check (no-op unless due)
+        self._note_read(event_type)
         if event_type == "*":
             types = [
                 t
@@ -1144,6 +1204,7 @@ class EventStore:
             select_topk_files,
         )
 
+        self._note_read(event_type)
         if (
             event_type == "*"
             or n <= 0
@@ -1188,6 +1249,7 @@ class EventStore:
             select_context_files,
         )
 
+        self._note_read(event_type)
         if (
             event_type == "*"
             or not self.registry.has(event_type)

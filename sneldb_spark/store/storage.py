@@ -287,14 +287,22 @@ class DirObjectClient(ObjectClient):
             start != self.bucket_root
         ):
             start = self.bucket_root
-        if not os.path.isdir(start):
-            return []
+        # scandir, not os.walk: half the Python work per LIST, which the
+        # served read path pays on every prepared-plan validity check
         out = []
-        for dirpath, _dirs, files in os.walk(start):
-            for fn in files:
-                p = os.path.join(dirpath, fn)
-                if p.startswith(prefix):
-                    out.append(p)
+        stack = [start]
+        while stack:
+            try:
+                entries = os.scandir(stack.pop())
+            except OSError:  # gone mid-walk, or not a directory
+                continue
+            with entries:
+                for e in entries:
+                    if e.is_dir():
+                        if not e.is_symlink():  # os.walk's followlinks=False
+                            stack.append(e.path)
+                    elif e.path.startswith(prefix):
+                        out.append(e.path)
         return sorted(out)
 
     def delete(self, key: str) -> None:
