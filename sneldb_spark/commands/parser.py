@@ -129,12 +129,18 @@ class _Cursor:
 # JSON block extraction (STORE / DEFINE)
 # ---------------------------------------------------------------------------
 
+def _reject_constant(token: str):
+    # Python's decoder accepts NaN/Infinity/-Infinity; JSON has no such
+    # tokens, and a stored non-finite value has no JSON rendering either
+    raise ParseError(f"invalid JSON block: {token} is not a JSON value")
+
+
 def _extract_json_block(text: str, start: int) -> tuple[dict, int]:
     brace = text.find("{", start)
     if brace < 0:
         raise ParseError("expected '{' JSON block")
     try:
-        obj, end = json.JSONDecoder().raw_decode(text, brace)
+        obj, end = json.JSONDecoder(parse_constant=_reject_constant).raw_decode(text, brace)
     except json.JSONDecodeError as e:
         raise ParseError(f"invalid JSON block: {e}") from None
     if not isinstance(obj, dict):

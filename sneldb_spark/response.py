@@ -10,8 +10,20 @@ JSON frame stream (reference: src/shared/response/json.rs:138-216):
 Arrow IPC stream (reference: src/shared/response/arrow.rs:115-180): the
 whole result as Arrow record batches.
 
-Batches stream via `toLocalIterator`, so the driver never holds the full
-result; batch size mirrors the reference's `streaming_batch_size = 1000`.
+Batch size mirrors the reference's `streaming_batch_size = 1000`. Rows
+reach the driver one of two ways (`_row_sources`), each with its own
+driver-memory bound:
+
+- streamed through `toLocalIterator`: one Spark job per partition, the
+  driver holds one partition at a time. Every first delivery of a frame
+  streams, and so does every result larger than `ONE_JOB_ROWS`;
+- fetched with one `collect()`: one Spark job, the driver holds at most
+  `ONE_JOB_ROWS` rows. Only a frame delivered before, whose recorded row
+  count is within the bound, takes this path. Engine frames are fixed
+  snapshots (an eager file listing plus a memtable snapshot), so the
+  count recorded on the object holds for every later delivery of it; the
+  prepared-plan cache and SHOW's stored-result reuse are what hand the
+  same object out again.
 """
 
 from __future__ import annotations
@@ -23,13 +35,18 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 
 STREAMING_BATCH_SIZE = 1000
+# Largest result a repeated delivery fetches with one collect() instead of
+# a per-partition stream: the driver-memory bound of the one-job path.
+ONE_JOB_ROWS = 10 * STREAMING_BATCH_SIZE
 
 
 def _json_cell(v):
     if v is None or isinstance(v, (str, bool, int)):
         return v
     if isinstance(v, float):
-        return None if math.isnan(v) else v
+        # NaN and ±inf have no JSON token: strict clients reject the bare
+        # NaN/Infinity that json.dumps would write
+        return v if math.isfinite(v) else None
     if isinstance(v, (bytes, bytearray)):
         return v.hex()
     if isinstance(v, list):
@@ -51,10 +68,28 @@ def _row_sources(df: DataFrame):
     frames on the wire while the delta's join plan (the expensive
     planning work) hasn't been paid yet. Same rows, same order as
     iterating the union plan (stored partitions precede delta
-    partitions there too)."""
+    partitions there too).
+
+    A plain frame streamed to its end records its row count on the
+    object (`__sneldb_rows__`); a later delivery of the same object with
+    at most `ONE_JOB_ROWS` rows fetches them with one `collect()` (one
+    Spark job instead of one per partition, and no local socket server).
+    Both paths decode through the same serializer, so the rows are
+    identical. An abandoned stream records nothing."""
     parts = getattr(df, "__sneldb_serve_parts__", None)
-    for part in parts if parts is not None else (df,):
-        yield from part.toLocalIterator()
+    if parts is not None:
+        for part in parts:
+            yield from part.toLocalIterator()
+        return
+    known = getattr(df, "__sneldb_rows__", None)
+    if known is not None and known <= ONE_JOB_ROWS:
+        yield from df.collect()
+        return
+    n = 0
+    for row in df.toLocalIterator():
+        n += 1
+        yield row
+    df.__sneldb_rows__ = n
 
 
 def json_frames(df: DataFrame, batch_size: int = STREAMING_BATCH_SIZE) -> Iterator[str]:
@@ -100,17 +135,20 @@ def arrow_ipc_frames(df: DataFrame, batch_size: int = STREAMING_BATCH_SIZE) -> I
     (continuation + zero length — reference:
     src/shared/response/arrow.rs:115-180 ArrowStreamEncoder).
 
-    Rows stream through `toLocalIterator` exactly like `json_frames`, so
-    the driver holds at most `batch_size` rows — the line-protocol Arrow
-    path never collects the result. The Arrow schema comes from a
-    `limit(0)` collect (public API, Connect-compatible), which costs one
-    empty job before the stream starts."""
+    Rows come through `_row_sources` exactly like `json_frames`, with
+    the same two driver-memory bounds. The Arrow schema comes from a
+    `limit(0)` collect (public API, Connect-compatible). That collect
+    returns no rows but still runs a Spark job, so it runs once per
+    frame object: the schema is recorded on the frame
+    (`__sneldb_arrow_schema__`) and a repeated delivery reuses it."""
     import io
 
     import pyarrow as pa
 
-    probe = getattr(df, "__sneldb_serve_parts__", (df,))[0]
-    schema = probe.limit(0).toArrow().schema
+    schema = getattr(df, "__sneldb_arrow_schema__", None)
+    if schema is None:
+        probe = getattr(df, "__sneldb_serve_parts__", (df,))[0]
+        schema = df.__sneldb_arrow_schema__ = probe.limit(0).toArrow().schema
     names = [f.name for f in df.schema.fields]
     sink = io.BytesIO()
     writer = pa.ipc.new_stream(sink, schema)

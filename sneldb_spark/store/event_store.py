@@ -1081,23 +1081,17 @@ class EventStore:
     # -- read signatures (the prepared-plan cache's validity) --------------
     def read_signature(self, event_type: str) -> tuple:
         """What a frame of `event_type` was built from: the pending
-        generation plus (path, size, mtime) of every live segment file.
-        The file set catches every Parquet change — flush commits, bulk
-        appends, compaction publishes (new prefix, new paths), a newer
-        engine writing the same root — without a hook at each write
-        site. No Spark call: a directory walk and one stat per file."""
+        generation plus the live directory's `Storage.file_signature`
+        (path, size, mtime of every segment file). The file set catches
+        every Parquet change — flush commits, bulk appends, compaction
+        publishes (new prefix, new paths), a newer engine writing the
+        same root — without a hook at each write site. No Spark call."""
         with self._pending_lock:
             gen = self._pending_gen[event_type]
-        files = []
         path = self._path(event_type)
-        if os.path.isdir(path):  # has_data, without a second resolve
-            for f in self.storage.walk_parquet(path):
-                try:
-                    st = os.stat(f)
-                    files.append((f, st.st_size, st.st_mtime_ns))
-                except OSError:  # removed mid-walk, or an object key
-                    files.append((f, None, None))
-        return gen, tuple(sorted(files))
+        if not os.path.isdir(path):  # has_data, without a second resolve
+            return gen, ()
+        return gen, self.storage.file_signature(path)
 
     @contextmanager
     def recording_reads(self):

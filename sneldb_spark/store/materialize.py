@@ -93,6 +93,9 @@ class Materializer:
         # raise into the serving thread; quiesce() surfaces (and drains)
         # them, and a later successful fold for the name clears them
         self.fold_errors: list[tuple[str, Exception]] = []
+        # SHOW's stored-result frame per name, as (signature, frame):
+        # reused while the signature holds (see _stored_frame)
+        self._show_frames: dict[str, tuple[tuple, DataFrame]] = {}
         # Live serve frames per name (weak: a drained/dropped frame
         # leaves the set on GC). A serve frame pins its stored file
         # listing at build time; every data-path publish/recover passes
@@ -1350,9 +1353,28 @@ class Materializer:
                 self._swap_in(self._recomputed(q, manifest, cur), path)
             manifest["hwm_ts"], manifest["hwm_id"] = cur
             self._write_manifest(name, manifest)
+        return self._stored_frame(name, shape, path)
+
+    def _stored_frame(self, name: str, shape: str, path: str) -> DataFrame:
+        """The frame over the stored result, reused while nothing under
+        its live copy changed. The signature — shape, live path, and
+        `file_signature` of the live copy — is taken BEFORE the build, so
+        a write racing the build leaves a signature the next SHOW no
+        longer matches. Reuse saves the Parquet schema-inference job and
+        hands out the same object, whose recorded row count lets a
+        repeated delivery fetch with one job (response.py). Every refresh,
+        compaction and re-REMEMBER writes new files, so it rebuilds."""
+        live = self._live(path)
+        sig = (shape, live, self.storage.file_signature(live))
+        held = self._show_frames.get(name)
+        if held is not None and held[0] == sig:
+            return held[1]
         if shape in (SEGMENTS, SEQUENCE):
-            return self._read_segments(path)
-        return self.engine.spark.read.parquet(self._live(path))
+            df = self._read_segments(live)
+        else:
+            df = self.engine.spark.read.parquet(live)
+        self._show_frames[name] = (sig, df)
+        return df
 
     # -- lifecycle ---------------------------------------------------------
     def names(self) -> list[str]:
@@ -1401,6 +1423,7 @@ class Materializer:
         # a background fold writing into a tree being deleted would
         # resurrect directories (its manifest commit recreates exists())
         self.quiesce(name)
+        self._show_frames.pop(name, None)
         self.storage.remove_tree(self._dir(name))
 
     def compact(self, name: str):

@@ -111,6 +111,22 @@ class Storage:
         raise NotImplementedError
 
     # -- derived protocol (backend-independent) ---------------------------
+    def file_signature(self, root: str) -> tuple:
+        """Sorted (path, size, mtime_ns) of every parquet file under
+        `root`: what a frame listing `root` was built from. Every change
+        a reader can see — a new segment, a rewrite, a publish onto a
+        new prefix — changes it. No Spark call: a directory walk and one
+        stat per file (None, None for a path that vanished mid-walk or
+        an object key with no local file)."""
+        files = []
+        for f in self.walk_parquet(root):
+            try:
+                st = os.stat(f)
+                files.append((f, st.st_size, st.st_mtime_ns))
+            except OSError:
+                files.append((f, None, None))
+        return tuple(sorted(files))
+
     def stage_path(self, dst: str) -> str:
         return dst + self._STAGING
 
