@@ -24,12 +24,7 @@ from sneldb_spark.plans.aggregates import (
     apply_partial_aggregation,
 )
 from sneldb_spark.plans.filters import compile_expr, expr_fields, split_sequence_where
-from sneldb_spark.plans.sequence import (
-    A_PREFIX,
-    B_PREFIX,
-    sequence_match,
-    sequence_match_sliced,
-)
+from sneldb_spark.plans.sequence import A_PREFIX, B_PREFIX, _bq, sequence_match_chain
 from sneldb_spark.plans.time_bucket import bucket_column
 from sneldb_spark.schema.normalization import try_parse_time_value
 from sneldb_spark.schema.registry import CORE_FIELDS, EventSchema
@@ -43,6 +38,38 @@ class TimeConfig:
     mode: str = "calendar"  # calendar | naive
     timezone: str = "UTC"
     week_start: str = "monday"
+
+
+def within_filter(q: ast.QueryCommand, chain: DataFrame) -> DataFrame:
+    """WITHIN <seconds> (extension) over completed s-prefixed chains:
+    every adjacent step gap is bounded. Link i measures the gap on the
+    USING TIME field when steps i and i+1 both carry it, else on server
+    timestamp. Exact as a post-filter — the as-of match already picked the
+    closest candidate (see plans/sequence.py sequence_match max_gap_s)."""
+    if q.sequence_within is None:
+        return chain
+    cols = set(chain.columns)
+    stf = q.sequence_time_field
+    for i in range(len(q.sequence.links)):
+        tsf = stf if stf and {f"s{i}_{stf}", f"s{i + 1}_{stf}"} <= cols else "timestamp"
+        gap = F.abs(
+            F.col(f"s{i + 1}_{tsf}").cast("long") - F.col(f"s{i}_{tsf}").cast("long")
+        )
+        chain = chain.where(gap <= F.lit(int(q.sequence_within)))
+    return chain
+
+
+def pair_columns(q: ast.QueryCommand, chain: DataFrame) -> DataFrame:
+    """A single link's event rows under the pair names: s0_/s1_ become
+    a_/b_ (one selectExpr, one py4j call for the whole rename). Longer
+    chains keep their s{i}_ names. Both the direct QUERY and a sequence
+    materialization's stored rows go through here."""
+    if len(q.sequence.links) != 1:
+        return chain
+    side = {"s0_": A_PREFIX, "s1_": B_PREFIX}
+    return chain.selectExpr(
+        *[f"{_bq(c)} AS {_bq(side[c[:3]] + c[3:])}" for c in chain.columns]
+    )
 
 
 class QueryCompiler:
@@ -173,11 +200,7 @@ class QueryCompiler:
     def compile_query(
         self, q: ast.QueryCommand, upper: tuple[int, int] | None = None
     ) -> DataFrame:
-        if len(q.sequence.links) > 1 and q.link_field is not None:
-            if self.multi_link:
-                if q.offset is not None and q.limit is None:
-                    raise QueryError("OFFSET requires LIMIT")
-                return self._compile_chain(q, upper=upper)
+        if len(q.sequence.links) > 1 and q.link_field is not None and not self.multi_link:
             # Reference: multi-link chains warn and return empty
             # (reference: src/engine/core/read/sequence/matcher.rs:297-307).
             # Without LINKED BY even a multi-link query is a plain head
@@ -187,7 +210,7 @@ class QueryCompiler:
         if q.offset is not None and q.limit is None:
             raise QueryError("OFFSET requires LIMIT")
         if q.is_sequence:
-            return self._compile_sequence(q, upper=upper)
+            return self._compile_chain(q, upper=upper)
         return self._compile_single(q, upper=upper)
 
     def _topk_frame(self, q: ast.QueryCommand) -> DataFrame | None:
@@ -304,18 +327,8 @@ class QueryCompiler:
             raise QueryError("needs a sequence aggregate query")
         types = q.sequence.event_types
         resolve = self._chain_resolver(chain, types)
-        bucket = None
-        if q.time_bucket:
-            tcol = resolve(q.time_field)[0].cast("long") if q.time_field else F.col(
-                "s0_timestamp"
-            ).cast("long")
-            tc = self.time_config
-            bucket = bucket_column(
-                tcol, q.time_bucket, mode=tc.mode, timezone=tc.timezone,
-                week_start=tc.week_start,
-            )
         return apply_partial_aggregation(
-            chain, q.aggs, q.group_by, resolve, bucket,
+            chain, q.aggs, q.group_by, resolve, self._chain_bucket(q, resolve),
             approx_unique=self.approx_count_unique,
         )
 
@@ -380,10 +393,10 @@ class QueryCompiler:
 
     # -- sequence pipeline ------------------------------------------------
     def chain_parts(self, q: ast.QueryCommand, upper=None):
-        """The fully-filtered per-step side frames of a multi-link chain
-        plus (types, kinds, link_field) — the chain analogue of
-        sequence_parts; the materializer uses it to re-run the stepwise
-        match over delta slices (incremental chain SHOW)."""
+        """The fully-filtered per-step side frames of a sequence (a single
+        link is 2 steps) plus (types, kinds, link_field) — the compile's
+        inputs; the materializer uses it to re-run the stepwise match
+        over delta slices (incremental SHOW)."""
         types = [q.sequence.head] + [t for _, t in q.sequence.links]
         kinds = [k for k, _ in q.sequence.links]
         sides = split_sequence_where(q.where, types)
@@ -408,137 +421,32 @@ class QueryCompiler:
         if link_field and link_field not in df.columns:
             raise QueryError(f"unknown field {link_field!r} for {event_type!r}")
 
-    def sequence_parts(self, q: ast.QueryCommand):
-        """The fully-filtered SIDE FRAMES of a single-link sequence query
-        plus its matching parameters: (a, b, kind, link_field, ts_a,
-        ts_b). The materializer uses this to re-run the matcher over a
-        delta slice of the sides (incremental SHOW) with the exact same
-        WHERE/FOR/SINCE filters the full compile applies."""
-        if not q.link_field:
-            raise QueryError("sequence queries require LINKED BY <field>")
-        kind, tail_type = q.sequence.links[0]
-        head_type = q.sequence.head
-        sides = split_sequence_where(q.where, [head_type, tail_type])
-
-        def side_frame(et: str) -> DataFrame:
-            return self._base_frame(et, q.context_id, q.since, sides[et], q.time_field, q.until)
-
-        a = side_frame(head_type)
-        b = side_frame(tail_type)
-
-        def side_ts(df: DataFrame) -> str:
-            # USING TIME <f> orders the sequence match; plain USING <f>
-            # does NOT (it only moves SINCE/bucket time). Mirrors the
-            # reference's sequence_time_field defaulting to "timestamp"
-            # (src/command/handlers/query/orchestrator.rs:78-81).
-            # Returned as the FIELD NAME: the matcher casts it to long
-            # itself, and a string ts keeps the whole sided projection on
-            # the one-call selectExpr path (round-12 driver latency).
-            stf = q.sequence_time_field
-            if stf and stf in df.columns:
-                return stf
-            return "timestamp"
-
-        self._check_link_field(q.link_field, head_type, a)
-        self._check_link_field(q.link_field, tail_type, b)
-        return a, b, kind, q.link_field, side_ts(a), side_ts(b)
-
-    def _compile_sequence(
-        self, q: ast.QueryCommand, upper: tuple[int, int] | None = None
-    ) -> DataFrame:
-        a, b, kind, _link, ts_a, ts_b = self.sequence_parts(q)
-        if upper is not None:
-            from sneldb_spark.plans.filters import hwm_at_or_before
-
-            bound = hwm_at_or_before(*upper)
-            a, b = a.where(bound), b.where(bound)
-        _, tail_type = q.sequence.links[0]
-        head_type = q.sequence.head
-
-        if self.sequence_slices >= 2:
-            matched = sequence_match_sliced(
-                a, b, q.link_field, kind, n_slices=self.sequence_slices,
-                ts_a=ts_a, ts_b=ts_b,
-            )
-        else:
-            matched = sequence_match(a, b, q.link_field, kind, ts_a=ts_a, ts_b=ts_b)
-
-        matched = self._apply_within(matched, q, A_PREFIX, B_PREFIX)
-
-        if q.is_aggregate:
-            resolve = self._seq_resolver(matched, head_type, tail_type)
-            bucket = None
-            if q.time_bucket:
-                tcol = resolve(q.time_field)[0].cast("long") if q.time_field else F.col(
-                    A_PREFIX + "timestamp"
-                ).cast("long")
-                tc = self.time_config
-                bucket = bucket_column(
-                    tcol, q.time_bucket, mode=tc.mode, timezone=tc.timezone,
-                    week_start=tc.week_start,
-                )
-            out = apply_aggregation(
-                matched, q.aggs, q.group_by, resolve, bucket,
-                approx_unique=self.approx_count_unique,
-                approx_pct=self.approx_percentiles,
-            )
-            return self._order_limit(out, q, agg=True)
-
-        # LIMIT caps matched sequences (reference:
-        # src/command/handlers/query/handler.rs:133-139).
-        out = matched
-        if q.order_by is not None:
-            resolve = self._seq_resolver(matched, head_type, tail_type)
-            cols = [
-                resolve(f)[0].desc() if d else resolve(f)[0].asc()
-                for f, d in self._order_keys(q)
-            ]
-            out = out.orderBy(*cols)
-        if q.limit is not None:
-            out = out.where(F.lit(False)) if q.limit == 0 else out.limit(q.limit)
-        if q.offset:
-            raise QueryError("OFFSET is not supported on sequence queries")
-        return out
-
     def _compile_chain(
         self, q: ast.QueryCommand, upper: tuple[int, int] | None = None
     ) -> DataFrame:
-        """Multi-link chain compile (extension, opt-in via multi_link):
-        one fully-filtered side frame per step, composed as-of windows
-        (plans/sequence.py sequence_match_chain), then the same
-        aggregate / ORDER / LIMIT surface single-link sequences have.
-        LIMIT caps matched CHAINS, like the single link caps pairs."""
-        from sneldb_spark.plans.sequence import sequence_match_chain
-
+        """Every batch sequence compile: a single link is the 2-step chain,
+        longer chains need multi_link (extension). One fully-filtered side
+        frame per step, composed as-of windows (plans/sequence.py
+        sequence_match_chain), WITHIN, then the aggregate / ORDER / LIMIT
+        surface. LIMIT caps matched chains (reference:
+        src/command/handlers/query/handler.rs:133-139); a single link's
+        event rows carry the pair's a_/b_ columns (pair_columns)."""
         frames, types, kinds, _link = self.chain_parts(q, upper=upper)
+        # USING TIME <f> orders the match on each step that has <f>; plain
+        # USING <f> does NOT (it only moves SINCE/bucket time). Mirrors the
+        # reference's sequence_time_field defaulting to "timestamp"
+        # (src/command/handlers/query/orchestrator.rs:78-81).
         stf = q.sequence_time_field
-        ts = stf if stf and all(stf in f.columns for f in frames) else "timestamp"
+        ts = [stf if stf and stf in f.columns else "timestamp" for f in frames]
         matched = sequence_match_chain(
             frames, q.link_field, kinds, ts=ts, n_slices=self.sequence_slices
         )
-        if q.sequence_within is not None:
-            # WITHIN bounds EVERY adjacent step gap in a chain
-            for i in range(len(types) - 1):
-                self_ts, next_ts = f"s{i}_{ts}", f"s{i + 1}_{ts}"
-                gap = F.abs(
-                    F.col(next_ts).cast("long") - F.col(self_ts).cast("long")
-                )
-                matched = matched.where(gap <= F.lit(int(q.sequence_within)))
+        matched = within_filter(q, matched)
         resolve = self._chain_resolver(matched, types)
 
         if q.is_aggregate:
-            bucket = None
-            if q.time_bucket:
-                tcol = resolve(q.time_field)[0].cast("long") if q.time_field else F.col(
-                    "s0_timestamp"
-                ).cast("long")
-                tc = self.time_config
-                bucket = bucket_column(
-                    tcol, q.time_bucket, mode=tc.mode, timezone=tc.timezone,
-                    week_start=tc.week_start,
-                )
             out = apply_aggregation(
-                matched, q.aggs, q.group_by, resolve, bucket,
+                matched, q.aggs, q.group_by, resolve, self._chain_bucket(q, resolve),
                 approx_unique=self.approx_count_unique,
                 approx_pct=self.approx_percentiles,
             )
@@ -555,25 +463,19 @@ class QueryCompiler:
             out = out.where(F.lit(False)) if q.limit == 0 else out.limit(q.limit)
         if q.offset:
             raise QueryError("OFFSET is not supported on sequence queries")
-        return out
+        return pair_columns(q, out)
 
-    @staticmethod
-    def _apply_within(matched: DataFrame, q: ast.QueryCommand,
-                      left_pfx: str, right_pfx: str) -> DataFrame:
-        """WITHIN <seconds> (extension): keep only pairs whose matched
-        sides land within the window. Exact as a post-filter — the as-of
-        match already picked the closest candidate (see
-        plans/sequence.py sequence_match max_gap_s)."""
-        if q.sequence_within is None:
-            return matched
-        tsf = "timestamp"
-        stf = q.sequence_time_field
-        if stf and left_pfx + stf in matched.columns and right_pfx + stf in matched.columns:
-            tsf = stf
-        gap = F.abs(
-            F.col(right_pfx + tsf).cast("long") - F.col(left_pfx + tsf).cast("long")
+    def _chain_bucket(self, q: ast.QueryCommand, resolve) -> Column | None:
+        """PER bucket of a sequence aggregate: on the USING field (resolved
+        over the chain) or the head's server timestamp."""
+        if not q.time_bucket:
+            return None
+        tcol = resolve(q.time_field)[0] if q.time_field else F.col("s0_timestamp")
+        tc = self.time_config
+        return bucket_column(
+            tcol.cast("long"), q.time_bucket, mode=tc.mode, timezone=tc.timezone,
+            week_start=tc.week_start,
         )
-        return matched.where(gap <= F.lit(int(q.sequence_within)))
 
     def _chain_resolver(self, matched: DataFrame, types: list[str]):
         cols = set(matched.columns)
@@ -589,27 +491,6 @@ class QueryCompiler:
             for i in range(len(types)):
                 if f"s{i}_{field}" in cols:
                     return F.col(f"s{i}_{field}"), None
-            if field in cols:
-                return F.col(f"`{field}`"), None
-            raise QueryError(f"unknown field {field!r} in sequence result")
-
-        return resolve
-
-    def _seq_resolver(self, matched: DataFrame, head_type: str, tail_type: str):
-        cols = set(matched.columns)
-
-        def resolve(field: str):
-            # Qualified names pick a side; unqualified prefer the head side.
-            if "." in field:
-                prefix, rest = field.split(".", 1)
-                if prefix == head_type and A_PREFIX + rest in cols:
-                    return F.col(A_PREFIX + rest), None
-                if prefix == tail_type and B_PREFIX + rest in cols:
-                    return F.col(B_PREFIX + rest), None
-            if A_PREFIX + field in cols:
-                return F.col(A_PREFIX + field), None
-            if B_PREFIX + field in cols:
-                return F.col(B_PREFIX + field), None
             if field in cols:
                 return F.col(f"`{field}`"), None
             raise QueryError(f"unknown field {field!r} in sequence result")

@@ -228,44 +228,6 @@ def _apply_asof_window(
     return out.where(F.col("__match").isNotNull())
 
 
-def sequence_match_unified(
-    events: DataFrame,
-    head_type: str,
-    tail_type: str,
-    link_field: str,
-    kind: str = FOLLOWED_BY,
-    *,
-    type_col: str = "event_type",
-    ts_col: str = "timestamp",
-    tie: str = "event_id",
-) -> DataFrame:
-    """As-of matching from ONE scan of a unified event table.
-
-    `sequence_match` unions two per-type scans, and a union discards any
-    physical distribution — so even over a bucketed table the window must
-    re-shuffle. Here both sides come from a single scan with a computed
-    side column, which PRESERVES the scan's partitioning: over a table
-    bucketed on the link field the whole funnel runs with zero exchanges
-    (see test_plans). Identical pairing semantics, same single window.
-    """
-    if kind not in (FOLLOWED_BY, PRECEDED_BY):
-        raise ValueError(f"unknown sequence link kind {kind!r}")
-    cols = list(events.columns)
-    u = events.where(F.col(type_col).isin([head_type, tail_type])).select(
-        F.col(link_field).alias("__link"),
-        F.col(ts_col).cast("long").alias("__ts"),
-        F.col(tie).cast("long").alias("__tie"),
-        F.when(F.col(type_col) == head_type, F.lit(0)).otherwise(F.lit(1)).alias("__side"),
-        *[F.col(c).alias(A_PREFIX + c) for c in cols],
-        *[F.col(c).alias(B_PREFIX + c) for c in cols],
-    )
-    matched = _apply_asof_window(u, kind, cols)
-    out_cols = [F.col(A_PREFIX + c) for c in cols] + [
-        F.col("__match." + B_PREFIX + c).alias(B_PREFIX + c) for c in cols
-    ]
-    return matched.select(*out_cols)
-
-
 def sequence_match_sliced(
     a: DataFrame,
     b: DataFrame,
@@ -378,7 +340,7 @@ def sequence_match_chain(
     link_field: str,
     kinds: list[str],
     *,
-    ts: str = "timestamp",
+    ts: str | list[str] = "timestamp",
     tie: str = "event_id",
     n_slices: int = 0,
     step_hook=None,
@@ -396,6 +358,7 @@ def sequence_match_chain(
     events the surviving chains match.
 
     `frames` is [E0, E1, ..., EN]; `kinds[i]` links step i to step i+1.
+    `ts` names the time field every step matches on, or one per step.
     Output has every step's columns under `s{i}_` prefixes, one row per
     fully-matched chain. Each link applies the single-link semantics with
     the CURSOR advanced to the previously matched event:
@@ -423,10 +386,11 @@ def sequence_match_chain(
     if not kinds:
         raise ValueError("chain needs at least one link")
 
+    step_ts = [ts] * len(frames) if isinstance(ts, str) else list(ts)
     chain = frames[0]
     for i, (kind, nxt) in enumerate(zip(kinds, frames[1:])):
-        chain = chain_link(chain, nxt, link_field, kind, i, ts=ts, tie=tie,
-                           n_slices=n_slices)
+        chain = chain_link(chain, nxt, link_field, kind, i, ts_a=step_ts[i],
+                           ts_b=step_ts[i + 1], tie=tie, n_slices=n_slices)
         if step_hook is not None:
             chain = step_hook(chain, i + 1)
     return chain
@@ -439,16 +403,18 @@ def chain_link(
     kind: str,
     i: int,
     *,
-    ts: str = "timestamp",
+    ts_a: str = "timestamp",
+    ts_b: str = "timestamp",
     tie: str = "event_id",
     n_slices: int = 0,
 ) -> DataFrame:
     """One link of a stepwise chain match: link i joins step i to step
-    i+1. For i == 0, `chain` is the unprefixed head frame and the result
-    is an s0_/s1_ chain; for i >= 1, `chain` is an s-prefixed chain whose
-    cursor is step i and the result gains s{i+1}_ columns. The
-    materializer runs the same call over carried state ∪ delta, so a
-    refresh step is pair-for-pair the batch chain's."""
+    i+1, matching step i on `ts_a` and step i+1 on `ts_b`. For i == 0,
+    `chain` is the unprefixed head frame and the result is an s0_/s1_
+    chain; for i >= 1, `chain` is an s-prefixed chain whose cursor is
+    step i and the result gains s{i+1}_ columns. The direct QUERY
+    compile and the materializer (over carried state ∪ delta) make the
+    same call, so a refresh step is pair-for-pair the batch query's."""
     if i == 0:
         a = chain
         keep = [f"{_bq(A_PREFIX + c)} AS {_bq(f's0_{c}')}" for c in chain.columns]
@@ -457,16 +423,17 @@ def chain_link(
         # columns can't collide) so the pairwise matcher applies as-is.
         a = chain.selectExpr(
             f"{_bq(f's0_{link_field}')} AS {_bq(link_field)}",
-            f"{_bq(f's{i}_{ts}')} AS {_bq(ts)}",
+            f"{_bq(f's{i}_{ts_a}')} AS {_bq(ts_a)}",
             f"{_bq(f's{i}_{tie}')} AS {_bq(tie)}",
             *[_bq(c) for c in chain.columns],
         )
         keep = [f"{_bq(A_PREFIX + c)} AS {_bq(c)}" for c in chain.columns]
     if n_slices >= 2:
         matched = sequence_match_sliced(a, nxt, link_field, kind, n_slices=n_slices,
-                                        ts_a=ts, ts_b=ts, tie=tie)
+                                        ts_a=ts_a, ts_b=ts_b, tie=tie)
     else:
-        matched = sequence_match(a, nxt, link_field, kind, ts_a=ts, ts_b=ts, tie=tie)
+        matched = sequence_match(a, nxt, link_field, kind, ts_a=ts_a, ts_b=ts_b,
+                                 tie=tie)
     # single-selectExpr renames: per-column F.col/alias construction is a
     # py4j round trip each, and these wide chain projections rebuild on
     # every incremental refresh (round 12 driver-latency fix)

@@ -7,6 +7,7 @@ and scenarios `store_with_missing_field`, `enum_store_wrong_case_rejected`):
 - undeclared keys are rejected;
 - enum values are case-sensitive and must be declared variants;
 - `u64` must be a non-negative integer;
+- `f64` must be a finite number (an overflowing literal is rejected);
 - `datetime`/`date` accept RFC3339 / date-only / numeric epochs and
   normalize to epoch seconds (dates snap to midnight UTC);
 - booleans are not accepted where numbers are expected and vice versa.
@@ -15,6 +16,8 @@ Returns a normalized payload dict typed to match the schema's Spark struct.
 """
 
 from __future__ import annotations
+
+import math
 
 from sneldb_spark.errors import ValidationError
 from sneldb_spark.schema.normalization import (
@@ -66,7 +69,15 @@ def _check_scalar(fname: str, ft: FieldType, value):
     if kind == "f64":
         if isinstance(value, bool) or not isinstance(value, (int, float)):
             raise ValidationError(_type_err(fname, f"expected number, got {value!r}"))
-        return float(value)
+        # a literal past the double range (1e999 decodes to inf; a long
+        # integer literal overflows float()) is rejected, never stored
+        try:
+            value = float(value)
+        except OverflowError:
+            value = math.inf
+        if not math.isfinite(value):
+            raise ValidationError(_type_err(fname, "number out of f64 range"))
+        return value
     if kind == "datetime":
         return parse_time_value(value, what=f"datetime field {fname!r}")
     if kind == "date":

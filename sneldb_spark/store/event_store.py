@@ -1346,51 +1346,6 @@ class EventStore:
             )
         return reader.parquet(self._path(event_type)).drop("ingest_date")
 
-    # -- bucketed layout ---------------------------------------------------
-    def bucketize(self, event_type: str, buckets: int = 256) -> str:
-        """Materialize one event type as a bucketed, sorted catalog table
-        (bucketBy context_id, sortBy (context_id, timestamp)).
-
-        A scan of this table reports hash partitioning on context_id, so
-        per-context windows and groupBy(context_id) aggregations run with
-        ZERO exchanges (verified by plan test) — the layout analogue of the
-        reference's shard-by-context placement (shard/manager.rs:58-61),
-        where all of one context's history is co-located by construction.
-
-        Honest scope: the as-of sequence plan unions two per-type scans and
-        a union discards the bucketing property, so LINKED BY queries over
-        per-type tables still shuffle once; the win applies to per-context
-        analytics over one table. The table is a point-in-time snapshot —
-        re-run after appends (or schedule with compaction)."""
-        name = self._bucketed_name(event_type)
-        # A fresh session's catalog may not know about a table whose
-        # warehouse directory survived from a previous run — drop both.
-        self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-        warehouse = self.spark.conf.get("spark.sql.warehouse.dir", "")
-        loc = os.path.join(warehouse.removeprefix("file:"), name)
-        if warehouse and os.path.isdir(loc):
-            import shutil
-
-            shutil.rmtree(loc, ignore_errors=True)
-        (
-            self.read(event_type)
-            .write.mode("overwrite")
-            .options(**self._bloom_options(event_type))
-            .bucketBy(buckets, "context_id")
-            .sortBy("context_id", "timestamp")
-            .saveAsTable(name)
-        )
-        return name
-
-    @staticmethod
-    def _bucketed_name(event_type: str) -> str:
-        # '*' (the unified all-types view) is a valid bucketize target —
-        # it is what makes single-scan funnels shuffle-free.
-        return f"sneldb_{'all' if event_type == '*' else event_type}_bucketed"
-
-    def read_bucketed(self, event_type: str) -> DataFrame:
-        return self.spark.table(self._bucketed_name(event_type))
-
     # -- maintenance ------------------------------------------------------
     def compact(self, event_type: str, target_file_mb: int = 128):
         """Small-file compaction: rewrite each date partition into sorted,

@@ -41,6 +41,7 @@ from sneldb_spark.commands.serde import (
     query_to_json,
 )
 from sneldb_spark.errors import MaterializationError
+from sneldb_spark.plans.compiler import pair_columns, within_filter
 
 # How a materialization refreshes, decided ONCE at REMEMBER with that
 # engine's flags; the manifest keys REMEMBER writes for it record the
@@ -371,49 +372,26 @@ class Materializer:
             and any(is_percentile(a.op) for s in sides for a in s.aggs)
         ):
             return RECOMPUTE
-        if isinstance(q, ast.CompareCommand):
-            plain = all(s.is_aggregate and not s.is_sequence for s in sides)
-            return PARTIAL if plain else RECOMPUTE
-        if not q.is_sequence:
-            return PARTIAL
-        stepwise = q.sequence_time_field is None and (
-            len(q.sequence.links) == 1
-            or self.engine.compiler.multi_link
-            and all(k == FOLLOWED_BY for k, _ in q.sequence.links)
+        stepwise = all(
+            not s.is_sequence
+            or s.sequence_time_field is None
+            and (
+                len(s.sequence.links) == 1
+                or self.engine.compiler.multi_link
+                and all(k == FOLLOWED_BY for k, _ in s.sequence.links)
+            )
+            for s in sides
         )
         if not stepwise:
             return RECOMPUTE
-        return PARTIAL if q.is_aggregate else SEQUENCE
+        return PARTIAL if all(s.is_aggregate for s in sides) else SEQUENCE
 
     @staticmethod
-    def _within_chain(q, chain: DataFrame) -> DataFrame:
-        """WITHIN over a completed chain: every adjacent gap bounded —
-        the same emission filter the direct compiles apply."""
-        if q.sequence_within is None:
-            return chain
-        for i in range(len(q.sequence.links)):
-            gap = F.abs(
-                F.col(f"s{i + 1}_timestamp").cast("long")
-                - F.col(f"s{i}_timestamp").cast("long")
-            )
-            chain = chain.where(gap <= F.lit(int(q.sequence_within)))
-        return chain
-
-    def _chain_rows(self, q, chain: DataFrame) -> DataFrame:
+    def _chain_rows(q, chain: DataFrame) -> DataFrame:
         """The event rows a sequence materialization stores and serves:
-        the WITHIN-filtered completed chains, with a single link's
-        s0_/s1_ columns renamed ONCE to the pair shape's a_/b_ — so SHOW
-        columns and stored segments are those of a direct single-link
-        QUERY (one selectExpr: a py4j call for the whole rename)."""
-        from sneldb_spark.plans.sequence import A_PREFIX, B_PREFIX, _bq
-
-        chain = self._within_chain(q, chain)
-        if len(q.sequence.links) != 1:
-            return chain
-        side = {"s0_": A_PREFIX, "s1_": B_PREFIX}
-        return chain.selectExpr(
-            *[f"{_bq(c)} AS {_bq(side[c[:3]] + c[3:])}" for c in chain.columns]
-        )
+        the WITHIN-filtered completed chains under the direct QUERY's
+        column names (compiler.within_filter and pair_columns)."""
+        return pair_columns(q, within_filter(q, chain))
 
     # -- batched multi-part state (round 12) --------------------------------
     # The per-step carry frames (pending_s{i}/boundary_{j}) land in ONE
@@ -428,10 +406,6 @@ class Materializer:
     _PART_COL = "__part"
     _PARTS_SUBDIR = "parts"
     _PARTS_SIDECAR = "_state_parts.json"
-    # Single-link state written before single links ran as 2-step chains
-    # named its two parts after the pair sides; read as the n=2 chain it
-    # is (the next refresh rewrites it under the step names).
-    _PAIR_PART_NAMES = {"pending_s0": "pending_a", "boundary_1": "boundary_b"}
 
     @staticmethod
     def _carry_parts(n: int) -> list[str]:
@@ -462,29 +436,33 @@ class Materializer:
         os.replace(tmp, os.path.join(d, self._PARTS_SIDECAR))
 
     def _state_part_at(self, d: str, part: str):
-        """(stored part name, schema) of one carry-state part in a
-        RESOLVED state dir, or None when the state holds no such part.
-        Raises MaterializationError for the per-directory carry layout
-        (one parquet dir per part, no sidecar) that predates the
-        partitioned state: this version does not read it."""
+        """Schema of one carry-state part in a RESOLVED state dir, or None
+        when the dir holds no sidecar (nothing published there). Raises
+        MaterializationError for a layout this version does not read: the
+        per-directory carry (one parquet dir per part, no sidecar), or a
+        sidecar without the part — single-link state written as
+        pending_a/boundary_b before single links ran as 2-step chains."""
         from pyspark.sql.types import StructType
 
-        aliases = (part, self._PAIR_PART_NAMES.get(part))
+        refuse = (
+            f"materialization state under {d} uses the {{}}, which this "
+            "version no longer reads; FORGET the materialization and "
+            "REMEMBER it again"
+        )
         p = os.path.join(d, self._PARTS_SIDECAR)
         if not os.path.exists(p):
-            if any(a and os.path.isdir(os.path.join(d, a)) for a in aliases):
-                raise MaterializationError(
-                    f"materialization state under {d} uses the per-directory "
-                    "carry layout, which this version no longer reads; FORGET "
-                    "the materialization and REMEMBER it again"
-                )
+            if os.path.isdir(d) and any(
+                e.startswith(("pending_", "boundary_")) for e in os.listdir(d)
+            ):
+                raise MaterializationError(refuse.format("per-directory carry layout"))
             return None
         with open(p) as f:
             schemas = json.load(f)
-        for stored in aliases:
-            if stored in schemas:
-                return stored, StructType.fromJson(schemas[stored])
-        return None
+        if part not in schemas:
+            raise MaterializationError(refuse.format(
+                f"carry parts {sorted(schemas)} instead of {part!r}"
+            ))
+        return StructType.fromJson(schemas[part])
 
     def _read_carry(self, name: str, n: int) -> dict[str, DataFrame]:
         """Every carry part of an n-step sequence from the PUBLISHED
@@ -494,14 +472,13 @@ class Materializer:
         d = self._live(self._state_path(name))
         out = {}
         for part in self._carry_parts(n):
-            found = self._state_part_at(d, part)
-            if found is None:
+            schema = self._state_part_at(d, part)
+            if schema is None:
                 raise FileNotFoundError(
                     f"state part {part!r} does not exist under {d}"
                 )
-            stored, schema = found
             pdir = os.path.join(
-                d, self._PARTS_SUBDIR, f"{self._PART_COL}={stored}"
+                d, self._PARTS_SUBDIR, f"{self._PART_COL}={part}"
             )
             cols = [f.name for f in schema.fields]
             out[part] = (
@@ -897,7 +874,7 @@ class Materializer:
             carried = self._read_carry(name, len(s.sequence.event_types))
         chain, carry = self._chain_delta(s, lower, cur, carried)
         state, keys = compiler.compile_chain_aggregate_partial(
-            s, self._within_chain(s, chain)
+            s, within_filter(s, chain)
         )
         return state, keys, carry
 
@@ -1107,11 +1084,11 @@ class Materializer:
                         eager=True
                     )
                 pins = {}
-                for p, (stored, schema) in found.items():
+                for p, schema in found.items():
                     pins[p] = (
                         spark.createDataFrame([], schema)
                         if whole is None
-                        else whole.where(F.col(self._PART_COL) == stored).select(
+                        else whole.where(F.col(self._PART_COL) == p).select(
                             *[f.name for f in schema.fields]
                         )
                     )

@@ -13,7 +13,7 @@ import pytest
 
 from sneldb_spark.commands.parser import parse_command
 from sneldb_spark.engine import SnelDB
-from sneldb_spark.errors import ParseError
+from sneldb_spark.errors import ParseError, ValidationError
 from sneldb_spark.response import ONE_JOB_ROWS, arrow_ipc_frames, json_frames
 from sneldb_spark.store.storage import LOCAL, grace_local_storage
 
@@ -179,7 +179,7 @@ def test_store_rejects_non_finite_tokens(spark, tmp_path, token):
     assert not res.ok and token in res.message
 
 
-def test_json_frames_write_non_finite_as_null(spark, tmp_path):
+def test_json_frames_write_non_finite_as_null(spark):
     df = spark.createDataFrame(
         [(1, float("inf")), (2, float("-inf")), (3, float("nan")), (4, 1.5)],
         "k long, v double",
@@ -187,13 +187,21 @@ def test_json_frames_write_non_finite_as_null(spark, tmp_path):
     frames = [_strict(f) for f in json_frames(df)]
     rows = sorted(r for f in frames if f["type"] == "batch" for r in f["rows"])
     assert rows == [[1, None], [2, None], [3, None], [4, 1.5]]
-    # an overflowing literal is valid JSON and decodes to inf: stored, it
-    # still renders as null
+
+
+@pytest.mark.parametrize(
+    "literal", ["1e999", "-1e999", "9" * 400], ids=["inf", "neg_inf", "long_int"]
+)
+def test_store_rejects_f64_out_of_range(spark, tmp_path, literal):
+    """An overflowing numeric literal is valid JSON: it decodes to ±inf,
+    or to an int too large for float(). STORE rejects both with a named
+    ValidationError, so no non-finite value reaches a stored f64."""
     db = SnelDB(spark, str(tmp_path / "db"))
     db.execute('DEFINE t FIELDS { "v": "f64" }')
-    db.execute('STORE t FOR c PAYLOAD { "v": 1e999 }')
-    frames = [_strict(f) for f in json_frames(db.execute("QUERY t").df)]
-    assert [r[-1] for f in frames if f["type"] == "batch" for r in f["rows"]] == [None]
+    with pytest.raises(ValidationError, match="f64 range"):
+        db.execute(f'STORE t FOR c PAYLOAD {{ "v": {literal} }}')
+    db.execute('STORE t FOR c PAYLOAD { "v": 1.5 }')
+    assert [r["total_v"] for r in db.execute("QUERY t TOTAL v").df.collect()] == [1.5]
 
 
 # -- SHOW's stored-result frame: reused while unchanged, rebuilt after any

@@ -3,6 +3,8 @@ schema versioning, typed ORDER BY, USING TIME sequences, COMPARE errors.
 Modeled on reference scenario families (query_in_operator_*,
 query_parentheses_*, since_*/bucket_*, enum_*, birthdays leap-day)."""
 
+import json
+
 import pytest
 
 from sneldb_spark.errors import QueryError
@@ -107,6 +109,67 @@ def test_sequence_using_time_field(engine):
     df = engine.query("QUERY a FOLLOWED BY b LINKED BY user_id USING TIME at")
     rows = df.collect()
     assert len(rows) == 1 and rows[0]["b_n"] == 1  # first b with at >= a.at
+
+
+def _one_sided_time_db(spark, tmp_path, events, **opts):
+    """Engine whose server clock is set per STORE: `events` are
+    (type, server ts, payload) triples, stored in the given order."""
+    from sneldb_spark.engine import SnelDB
+
+    clock = {"now": 0}
+    db = SnelDB(spark, str(tmp_path / "db"), clock=lambda: clock["now"], **opts)
+    for et, has_f in (("h", True), ("m", True), ("e", False), ("t", False)):
+        f = ', "f": "int"' if has_f else ""
+        db.execute(f'DEFINE {et} FIELDS {{ "u": "string", "n": "int"{f} }}')
+    for et, ts, payload in events:
+        clock["now"] = ts
+        db.execute(f"STORE {et} FOR {payload['u']} PAYLOAD {json.dumps(payload)}")
+    db.execute("FLUSH")
+    return db
+
+
+@pytest.mark.parametrize(
+    "kind,pairs",
+    [("FOLLOWED BY", {(1, 2), (2, 1)}), ("PRECEDED BY", {(1, 1)})],
+    ids=["followed_by", "preceded_by"],
+)
+def test_sequence_one_sided_using_time_matches_per_step(spark, tmp_path, kind, pairs):
+    """USING TIME f where only the head type has f: the head matches on
+    f and the tail on server timestamp. Matching both on timestamp (the
+    field missing from a step) pairs every head differently: FOLLOWED BY
+    would give {(1, 1)} and PRECEDED BY {(2, 2)}."""
+    db = _one_sided_time_db(spark, tmp_path, [
+        ("h", 100, {"u": "u1", "n": 1, "f": 500}),
+        ("t", 200, {"u": "u1", "n": 1}),
+        ("t", 600, {"u": "u1", "n": 2}),
+        ("h", 700, {"u": "u1", "n": 2, "f": 50}),
+    ])
+    df = db.query(f"QUERY h {kind} t LINKED BY u USING TIME f")
+    assert {(r["a_n"], r["b_n"]) for r in df.collect()} == pairs
+
+
+def test_chain_one_sided_using_time_matches_and_bounds_per_link(spark, tmp_path):
+    """3-step chain where h and m have f and e lacks it: link h->m
+    matches and measures WITHIN on f, link m->e matches m on f and e on
+    server timestamp and measures WITHIN on timestamp. u1's chain passes
+    only under that rule (its h->m timestamp gap is 950 s, its m.f->e.ts
+    gap 90 s); u2's h->m gap on f (100 s) breaks WITHIN 60. Matching
+    every step on timestamp would give (1, 1, 1) for u1 instead."""
+    db = _one_sided_time_db(spark, tmp_path, [
+        ("h", 100, {"u": "u1", "n": 1, "f": 1000}),
+        ("m", 150, {"u": "u1", "n": 1, "f": 900}),
+        ("e", 160, {"u": "u1", "n": 1}),
+        ("m", 1050, {"u": "u1", "n": 2, "f": 1010}),
+        ("e", 1100, {"u": "u1", "n": 2}),
+        ("h", 2000, {"u": "u2", "n": 3, "f": 2000}),
+        ("m", 2010, {"u": "u2", "n": 3, "f": 2100}),
+        ("e", 2120, {"u": "u2", "n": 3}),
+    ], multi_link=True)
+    q = "QUERY h FOLLOWED BY m FOLLOWED BY e LINKED BY u USING TIME f"
+    chains = {(r["s0_n"], r["s1_n"], r["s2_n"]) for r in db.query(q).collect()}
+    assert chains == {(1, 2, 2), (3, 3, 3)}
+    within = db.query(q + " WITHIN 60").collect()
+    assert {(r["s0_n"], r["s1_n"], r["s2_n"]) for r in within} == {(1, 2, 2)}
 
 
 def test_sequence_same_timestamp_matches(engine):

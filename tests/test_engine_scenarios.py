@@ -1871,11 +1871,12 @@ def _rewrite_to_pair_layout(db, name: str, aggregate: bool):
     ],
     ids=["followed_by", "preceded_by", "followed_by_count"],
 )
-def test_single_link_pair_layout_state_still_refreshes(spark, tmp_path, q):
+def test_single_link_pair_layout_state_refuses(spark, tmp_path, q):
     """Single-link state written as pending_a/boundary_b with no
-    chain_steps in the manifest reads as the 2-step chain it is: SHOW
-    after ingest equals the direct query, and again after the refresh
-    rewrote the state under the step names."""
+    chain_steps in the manifest (before single links ran as 2-step
+    chains) is no longer read: SHOW names the way out — FORGET and
+    REMEMBER again — instead of guessing, and the re-REMEMBER matches
+    the direct query."""
     from sneldb_spark.engine import SnelDB
 
     clock, tick = _ticking_clock()
@@ -1895,17 +1896,16 @@ def test_single_link_pair_layout_state_still_refreshes(spark, tmp_path, q):
     db.execute("FLUSH")
     db.execute(f"REMEMBER {q} AS legacy")
     _rewrite_to_pair_layout(db, "legacy", aggregate="COUNT" in q)
-    live = db.materializer._live(db.materializer._state_path("legacy"))
-    assert db.materializer._state_part_at(live, "pending_s0") is not None
 
     store("purchase", "u2"); store("signup", "u3"); store("signup", "u4")
     store("signup", "u5"); store("purchase", "u5")
     db.execute("FLUSH")
-    shown = db.execute("SHOW legacy").df
-    direct = db.query(q)
-    assert rows(shown) == rows(direct)
-    assert db.materializer.quiesce("legacy") == []
+    with pytest.raises(MaterializationError, match="FORGET"):
+        db.execute("SHOW legacy")
 
+    db.execute("FORGET legacy")
+    db.execute(f"REMEMBER {q} AS legacy")
+    assert rows(db.execute("SHOW legacy").df) == rows(db.query(q))
     store("signup", "u6"); store("purchase", "u6")
     db.execute("FLUSH")
     assert rows(db.execute("SHOW legacy").df) == rows(db.query(q))

@@ -117,61 +117,6 @@ def test_whole_stage_codegen_on_filter_path(entry_compiler):
     assert "codegen id" in _formatted(df)
 
 
-def test_bucketized_layout_elides_exchanges(engine):
-    """bucketize() co-locates each context (the reference's shard-by-context
-    placement): per-context windows and aggregations run with no Exchange."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    engine.execute('DEFINE bk FIELDS { "n": "int" }')
-    for i in range(40):
-        engine.execute(f'STORE bk FOR c{i % 5} PAYLOAD {{ "n": {i} }}')
-    engine.execute("FLUSH")
-    engine.store.bucketize("bk", buckets=4)
-    t = engine.store.read_bucketed("bk")
-    assert t.count() == 40
-
-    w = Window.partitionBy("context_id").orderBy("timestamp")
-    windowed = _plan(t.withColumn("rn", F.row_number().over(w)))
-    assert windowed.count("Exchange") == 0, windowed
-
-    agged = _plan(t.groupBy("context_id").agg(F.sum("n")))
-    assert agged.count("Exchange") == 0, agged
-
-    # same plans over the path-based read DO shuffle — the layout is the win
-    p = engine.store.read("bk")
-    assert _plan(p.withColumn("rn", F.row_number().over(w))).count("Exchange") > 0
-
-
-def test_unified_sequence_over_bucketed_table_is_shuffle_free(engine):
-    """Single-scan funnel over a bucketed unified table: ZERO exchanges —
-    co-located link keys + one-scan side derivation preserve distribution."""
-    from sneldb_spark.commands.ast import FOLLOWED_BY
-    from sneldb_spark.plans.sequence import sequence_match, sequence_match_unified
-
-    engine.execute('DEFINE sa FIELDS { "n": "int" }')
-    engine.execute('DEFINE sb FIELDS { "n": "int" }')
-    for i in range(20):
-        engine.execute(f'STORE sa FOR c{i % 4} PAYLOAD {{ "n": {i} }}')
-        engine.execute(f'STORE sb FOR c{i % 4} PAYLOAD {{ "n": {i} }}')
-    engine.execute("FLUSH")
-    engine.store.bucketize("*", buckets=4)
-    unified = engine.store.read_bucketed("*")
-
-    out = sequence_match_unified(unified, "sa", "sb", "context_id", FOLLOWED_BY)
-    assert _plan(out).count("Exchange") == 0, _plan(out)
-
-    # semantics identical to the two-table plan
-    a = engine.store.read("sa")
-    b = engine.store.read("sb")
-    two_table = {
-        (r["a_event_id"], r["b_event_id"])
-        for r in sequence_match(a, b, "context_id", FOLLOWED_BY).collect()
-    }
-    got = {(r["a_event_id"], r["b_event_id"]) for r in out.collect()}
-    assert got == two_table and len(got) > 0
-
-
 def test_week_bucket_sunday_start_and_timezone(spark):
     """PER WEEK with configurable week start + timezone-aware day buckets
     (reference: src/shared/datetime/time_bucketing.rs:24-105, [time] config)."""
