@@ -91,9 +91,17 @@ def _frames_to_result(frames: list[dict]) -> ClientResult:
     return ClientResult(ok=True, rows=rows, columns=columns, row_count=total)
 
 
+def _connect(host: str, port: int, timeout: float) -> socket.socket:
+    """A TCP connection with Nagle off: a command line goes out as soon
+    as it is written, not after the server's delayed ACK."""
+    sock = socket.create_connection((host, port), timeout=timeout)
+    sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+    return sock
+
+
 class _TcpTransport:
     def __init__(self, host: str, port: int, timeout: float):
-        self._sock = socket.create_connection((host, port), timeout=timeout)
+        self._sock = _connect(host, port, timeout)
         self._io = self._sock.makefile("rwb")
 
     @classmethod
@@ -161,7 +169,7 @@ class _WsTransport:
         import os as _os
         import struct  # noqa: F401  (used by the io helpers below)
 
-        self._sock = socket.create_connection((host, port), timeout=timeout)
+        self._sock = _connect(host, port, timeout)
         self._io = self._sock.makefile("rwb")
         key = base64.b64encode(_os.urandom(16)).decode()
         self._io.write(

@@ -33,6 +33,10 @@ from sneldb_spark.response import json_frames
 
 
 class _Handler(BaseHTTPRequestHandler):
+    # TCP_NODELAY: headers and body leave in separate writes, and Nagle
+    # would hold the body until the client's delayed ACK
+    disable_nagle_algorithm = True
+
     def log_message(self, *args):  # quiet test output
         pass
 

@@ -559,24 +559,15 @@ def _banded(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
     signature-slice VALUES concatenated — not a hash of them, so band
     joins have zero false matches and the SQL oracle reproduces the
     candidate set exactly."""
-    return sigs.select(
-        "id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col("sig")[b * rows_per_band + r]
-                            for r in range(rows_per_band)
-                        ],
-                    ).alias("bh"),
-                )
-                for b in range(bands)
-            ])
-        ).alias("bb"),
-    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
+    # one selectExpr for the whole (band, bh) relation: building it from
+    # Column objects costs a py4j round trip per element and band
+    structs = ", ".join(
+        f"struct({b} AS band, concat_ws(',', "
+        + ", ".join(f"sig[{b * rows_per_band + r}]" for r in range(rows_per_band))
+        + ") AS bh)"
+        for b in range(bands)
+    )
+    return sigs.selectExpr("id", f"inline(array({structs})) AS (band, bh)")
 
 
 def minhash_lsh_candidates(
@@ -852,19 +843,13 @@ def simhash_near_pairs(
     # lazy, so a persist would leak across calls (same contract as
     # minhash_dedup_pairs' sigs checkpoint).
     fps = fps.localCheckpoint(eager=True)
-    banded = fps.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("block"),
-                    F.shiftrightunsigned(F.col("simhash"), b * width).bitwiseAND(F.lit(mask)).alias("key"),
-                )
-                for b in range(blocks)
-            ])
-        ).alias("bb"),
-    ).select("id", "simhash", F.col("bb.block").alias("block"), F.col("bb.key").alias("key"))
+    blocks_expr = ", ".join(
+        f"struct({b} AS block, shiftrightunsigned(simhash, {b * width}) & {mask} AS key)"
+        for b in range(blocks)
+    )
+    banded = fps.selectExpr(
+        "id", "simhash", f"inline(array({blocks_expr})) AS (block, key)"
+    )
     l, r = banded.alias("l"), banded.alias("r")
     cand = (
         l.join(

@@ -299,20 +299,15 @@ def lsh_topk(
         # long-lived session whose plain-pickle worker pool has gone
         # cold that measured as ~2.4 s of blocked (zero-CPU) time per
         # task: 9.6 s on the gate vs 1.6 s fresh. The literal explode is
-        # one JVM task, no Python boundary at all (guide §4).
-        q_local = spark.range(1).select(
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        F.lit(qid).cast("long").alias("query_id"),
-                        F.lit(sig).cast("long").alias("qsig"),
-                        F.lit(b).alias("band"),
-                        F.lit(key).cast("long").alias("key"),
-                    )
-                    for qid, sig, b, key in q_rows
-                ])
-            ).alias("qq")
-        ).select("qq.*")
+        # one JVM task, no Python boundary at all (guide §4). One
+        # selectExpr: a Column per literal is a py4j round trip each.
+        rows_expr = ", ".join(
+            f"struct({qid}L AS query_id, {sig}L AS qsig, {b} AS band, {key}L AS key)"
+            for qid, sig, b, key in q_rows
+        )
+        q_local = spark.range(1).selectExpr(
+            f"inline(array({rows_expr})) AS (query_id, qsig, band, key)"
+        )
     else:  # very wide query batches: literal plan size would dominate
         q_local = spark.createDataFrame(
             q_rows, "query_id long, qsig long, band int, key long"

@@ -24,7 +24,7 @@ from sneldb_spark.plans.aggregates import (
     apply_partial_aggregation,
 )
 from sneldb_spark.plans.filters import compile_expr, expr_fields, split_sequence_where
-from sneldb_spark.plans.sequence import A_PREFIX, B_PREFIX, _bq, sequence_match_chain
+from sneldb_spark.plans.sequence import A_PREFIX, B_PREFIX, sequence_match_chain
 from sneldb_spark.plans.time_bucket import bucket_column
 from sneldb_spark.schema.normalization import try_parse_time_value
 from sneldb_spark.schema.registry import CORE_FIELDS, EventSchema
@@ -40,36 +40,36 @@ class TimeConfig:
     week_start: str = "monday"
 
 
-def within_filter(q: ast.QueryCommand, chain: DataFrame) -> DataFrame:
-    """WITHIN <seconds> (extension) over completed s-prefixed chains:
-    every adjacent step gap is bounded. Link i measures the gap on the
-    USING TIME field when steps i and i+1 both carry it, else on server
-    timestamp. Exact as a post-filter — the as-of match already picked the
-    closest candidate (see plans/sequence.py sequence_match max_gap_s)."""
+def chain_prefixes(q: ast.QueryCommand, pair: bool = False) -> list[str]:
+    """Column prefix of each step of a matched chain: s{i}_ per step, or
+    with `pair` a single link's a_/b_ (the direct QUERY's result names,
+    which the matcher already produces)."""
+    n = len(q.sequence.links) + 1
+    if pair and n == 2:
+        return [A_PREFIX, B_PREFIX]
+    return [f"s{i}_" for i in range(n)]
+
+
+def within_filter(
+    q: ast.QueryCommand, chain: DataFrame, prefixes: list[str] | None = None
+) -> DataFrame:
+    """WITHIN <seconds> (extension) over completed chains (step columns
+    under `prefixes`, default s{i}_): every adjacent step gap is
+    bounded. Link i measures the gap on the USING TIME field when steps
+    i and i+1 both carry it, else on server timestamp. Exact as a
+    post-filter — the as-of match already picked the closest candidate
+    (see plans/sequence.py sequence_match max_gap_s)."""
     if q.sequence_within is None:
         return chain
+    pre = prefixes or chain_prefixes(q)
     cols = set(chain.columns)
     stf = q.sequence_time_field
     for i in range(len(q.sequence.links)):
-        tsf = stf if stf and {f"s{i}_{stf}", f"s{i + 1}_{stf}"} <= cols else "timestamp"
-        gap = F.abs(
-            F.col(f"s{i + 1}_{tsf}").cast("long") - F.col(f"s{i}_{tsf}").cast("long")
-        )
+        a, b = pre[i], pre[i + 1]
+        tsf = stf if stf and {a + stf, b + stf} <= cols else "timestamp"
+        gap = F.abs(F.col(b + tsf).cast("long") - F.col(a + tsf).cast("long"))
         chain = chain.where(gap <= F.lit(int(q.sequence_within)))
     return chain
-
-
-def pair_columns(q: ast.QueryCommand, chain: DataFrame) -> DataFrame:
-    """A single link's event rows under the pair names: s0_/s1_ become
-    a_/b_ (one selectExpr, one py4j call for the whole rename). Longer
-    chains keep their s{i}_ names. Both the direct QUERY and a sequence
-    materialization's stored rows go through here."""
-    if len(q.sequence.links) != 1:
-        return chain
-    side = {"s0_": A_PREFIX, "s1_": B_PREFIX}
-    return chain.selectExpr(
-        *[f"{_bq(c)} AS {_bq(side[c[:3]] + c[3:])}" for c in chain.columns]
-    )
 
 
 class QueryCompiler:
@@ -326,9 +326,11 @@ class QueryCompiler:
         if not (q.is_aggregate and q.is_sequence):
             raise QueryError("needs a sequence aggregate query")
         types = q.sequence.event_types
-        resolve = self._chain_resolver(chain, types)
+        prefixes = chain_prefixes(q)
+        resolve = self._chain_resolver(chain, types, prefixes)
         return apply_partial_aggregation(
-            chain, q.aggs, q.group_by, resolve, self._chain_bucket(q, resolve),
+            chain, q.aggs, q.group_by, resolve,
+            self._chain_bucket(q, resolve, prefixes[0]),
             approx_unique=self.approx_count_unique,
         )
 
@@ -429,8 +431,9 @@ class QueryCompiler:
         frame per step, composed as-of windows (plans/sequence.py
         sequence_match_chain), WITHIN, then the aggregate / ORDER / LIMIT
         surface. LIMIT caps matched chains (reference:
-        src/command/handlers/query/handler.rs:133-139); a single link's
-        event rows carry the pair's a_/b_ columns (pair_columns)."""
+        src/command/handlers/query/handler.rs:133-139). A single link
+        keeps the matcher's a_/b_ columns throughout (chain_prefixes), so
+        its event rows need no rename projection."""
         frames, types, kinds, _link = self.chain_parts(q, upper=upper)
         # USING TIME <f> orders the match on each step that has <f>; plain
         # USING <f> does NOT (it only moves SINCE/bucket time). Mirrors the
@@ -439,14 +442,17 @@ class QueryCompiler:
         stf = q.sequence_time_field
         ts = [stf if stf and stf in f.columns else "timestamp" for f in frames]
         matched = sequence_match_chain(
-            frames, q.link_field, kinds, ts=ts, n_slices=self.sequence_slices
+            frames, q.link_field, kinds, ts=ts, n_slices=self.sequence_slices,
+            pair=True,
         )
-        matched = within_filter(q, matched)
-        resolve = self._chain_resolver(matched, types)
+        prefixes = chain_prefixes(q, pair=True)
+        matched = within_filter(q, matched, prefixes)
+        resolve = self._chain_resolver(matched, types, prefixes)
 
         if q.is_aggregate:
             out = apply_aggregation(
-                matched, q.aggs, q.group_by, resolve, self._chain_bucket(q, resolve),
+                matched, q.aggs, q.group_by, resolve,
+                self._chain_bucket(q, resolve, prefixes[0]),
                 approx_unique=self.approx_count_unique,
                 approx_pct=self.approx_percentiles,
             )
@@ -463,21 +469,21 @@ class QueryCompiler:
             out = out.where(F.lit(False)) if q.limit == 0 else out.limit(q.limit)
         if q.offset:
             raise QueryError("OFFSET is not supported on sequence queries")
-        return pair_columns(q, out)
+        return out
 
-    def _chain_bucket(self, q: ast.QueryCommand, resolve) -> Column | None:
+    def _chain_bucket(self, q: ast.QueryCommand, resolve, head: str) -> Column | None:
         """PER bucket of a sequence aggregate: on the USING field (resolved
-        over the chain) or the head's server timestamp."""
+        over the chain) or the head's (prefix `head`) server timestamp."""
         if not q.time_bucket:
             return None
-        tcol = resolve(q.time_field)[0] if q.time_field else F.col("s0_timestamp")
+        tcol = resolve(q.time_field)[0] if q.time_field else F.col(head + "timestamp")
         tc = self.time_config
         return bucket_column(
             tcol.cast("long"), q.time_bucket, mode=tc.mode, timezone=tc.timezone,
             week_start=tc.week_start,
         )
 
-    def _chain_resolver(self, matched: DataFrame, types: list[str]):
+    def _chain_resolver(self, matched: DataFrame, types: list[str], prefixes: list[str]):
         cols = set(matched.columns)
 
         def resolve(field: str):
@@ -485,12 +491,12 @@ class QueryCompiler:
             # prefer the head, then later steps in order.
             if "." in field:
                 prefix, rest = field.split(".", 1)
-                for i, t in enumerate(types):
-                    if t == prefix and f"s{i}_{rest}" in cols:
-                        return F.col(f"s{i}_{rest}"), None
-            for i in range(len(types)):
-                if f"s{i}_{field}" in cols:
-                    return F.col(f"s{i}_{field}"), None
+                for t, pre in zip(types, prefixes):
+                    if t == prefix and pre + rest in cols:
+                        return F.col(pre + rest), None
+            for pre in prefixes:
+                if pre + field in cols:
+                    return F.col(pre + field), None
             if field in cols:
                 return F.col(f"`{field}`"), None
             raise QueryError(f"unknown field {field!r} in sequence result")

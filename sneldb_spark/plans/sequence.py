@@ -344,6 +344,7 @@ def sequence_match_chain(
     tie: str = "event_id",
     n_slices: int = 0,
     step_hook=None,
+    pair: bool = False,
 ) -> DataFrame:
     """Multi-step funnel matching (extension — the reference caps chains
     at one link and warns, matcher.rs:297-307; composed as-of windows
@@ -360,8 +361,10 @@ def sequence_match_chain(
     `frames` is [E0, E1, ..., EN]; `kinds[i]` links step i to step i+1.
     `ts` names the time field every step matches on, or one per step.
     Output has every step's columns under `s{i}_` prefixes, one row per
-    fully-matched chain. Each link applies the single-link semantics with
-    the CURSOR advanced to the previously matched event:
+    fully-matched chain; with `pair`, a single link keeps the matcher's
+    a_/b_ names instead (see chain_link). Each link applies the
+    single-link semantics with the CURSOR advanced to the previously
+    matched event:
 
     - FOLLOWED_BY: step i+1 = earliest E_{i+1} with ts >= matched
       E_i's ts (ties allowed — the same one-match-per-head, B-reusable
@@ -390,7 +393,8 @@ def sequence_match_chain(
     chain = frames[0]
     for i, (kind, nxt) in enumerate(zip(kinds, frames[1:])):
         chain = chain_link(chain, nxt, link_field, kind, i, ts_a=step_ts[i],
-                           ts_b=step_ts[i + 1], tie=tie, n_slices=n_slices)
+                           ts_b=step_ts[i + 1], tie=tie, n_slices=n_slices,
+                           pair=pair and len(kinds) == 1)
         if step_hook is not None:
             chain = step_hook(chain, i + 1)
     return chain
@@ -407,12 +411,15 @@ def chain_link(
     ts_b: str = "timestamp",
     tie: str = "event_id",
     n_slices: int = 0,
+    pair: bool = False,
 ) -> DataFrame:
     """One link of a stepwise chain match: link i joins step i to step
     i+1, matching step i on `ts_a` and step i+1 on `ts_b`. For i == 0,
     `chain` is the unprefixed head frame and the result is an s0_/s1_
-    chain; for i >= 1, `chain` is an s-prefixed chain whose cursor is
-    step i and the result gains s{i+1}_ columns. The direct QUERY
+    chain, or with `pair` the matcher's own a_/b_ pair (no rename
+    projection: a single-link QUERY's result names); for i >= 1, `chain`
+    is an s-prefixed chain whose cursor is step i and the result gains
+    s{i+1}_ columns. The direct QUERY
     compile and the materializer (over carried state ∪ delta) make the
     same call, so a refresh step is pair-for-pair the batch query's."""
     if i == 0:
@@ -434,6 +441,8 @@ def chain_link(
     else:
         matched = sequence_match(a, nxt, link_field, kind, ts_a=ts_a, ts_b=ts_b,
                                  tie=tie)
+    if pair and i == 0:
+        return matched
     # single-selectExpr renames: per-column F.col/alias construction is a
     # py4j round trip each, and these wide chain projections rebuild on
     # every incremental refresh (round 12 driver-latency fix)

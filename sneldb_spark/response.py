@@ -11,33 +11,95 @@ Arrow IPC stream (reference: src/shared/response/arrow.rs:115-180): the
 whole result as Arrow record batches.
 
 Batch size mirrors the reference's `streaming_batch_size = 1000`. Rows
-reach the driver one of two ways (`_row_sources`), each with its own
-driver-memory bound:
+reach the encoder one of two ways (`_row_sources`):
 
 - streamed through `toLocalIterator`: one Spark job per partition, the
   driver holds one partition at a time. Every first delivery of a frame
   streams, and so does every result larger than `ONE_JOB_ROWS`;
-- fetched with one `collect()`: one Spark job, the driver holds at most
-  `ONE_JOB_ROWS` rows. Only a frame delivered before, whose recorded row
-  count is within the bound, takes this path. Engine frames are fixed
-  snapshots (an eager file listing plus a memtable snapshot), so the
-  count recorded on the object holds for every later delivery of it; the
-  prepared-plan cache and SHOW's stored-result reuse are what hand the
-  same object out again.
+- replayed from the frame's memo: zero Spark jobs. A stream that reached
+  its end with at most `ONE_JOB_ROWS` rows keeps those rows on the frame
+  object (`__sneldb_memo__`), and a later delivery of the same object
+  encodes them again. Engine frames are fixed snapshots (an eager file
+  listing plus a memtable snapshot), so the rows hold for every later
+  delivery of the object. Only two things hand an engine frame out
+  again, and both check first that nothing it read changed: the
+  prepared-plan cache (read signatures) and SHOW's stored-result reuse
+  (file signature). A write, flush, compaction or DEFINE yields a new
+  frame object, which streams.
+
+Retained memory has a total bound: all memos together hold at most
+`MEMO_ROWS` = `prepared.CAPACITY` x `STREAMING_BATCH_SIZE` rows (64k,
+about 35 MB at the events row shape). Past it the memo delivered least
+recently is dropped, and its frame streams again on its next delivery.
+Abandoned streams, results over `ONE_JOB_ROWS` and serve-first frames
+(`__sneldb_serve_parts__`) record nothing.
 """
 
 from __future__ import annotations
 
 import json
 import math
+import threading
+import weakref
+from collections import OrderedDict
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
 
+from sneldb_spark.plans.prepared import CAPACITY
+
 STREAMING_BATCH_SIZE = 1000
-# Largest result a repeated delivery fetches with one collect() instead of
-# a per-partition stream: the driver-memory bound of the one-job path.
+# Largest result one frame's memo keeps for replay.
 ONE_JOB_ROWS = 10 * STREAMING_BATCH_SIZE
+# Rows all memos together retain: one batch per prepared-plan entry.
+MEMO_ROWS = CAPACITY * STREAMING_BATCH_SIZE
+
+
+class _Memos:
+    """The rows each memoized frame keeps (`__sneldb_memo__`), in order of
+    last delivery. The frame owns its rows; this index only counts them
+    and drops the least recently delivered memo past `bound`. A frame
+    that is garbage-collected takes its rows along; its entry is swept
+    at the next record."""
+
+    def __init__(self, bound: int):
+        self.bound = bound
+        self.rows = 0
+        self._order: OrderedDict[int, tuple[weakref.ref, int]] = OrderedDict()
+        self._lock = threading.Lock()
+
+    def replay(self, df: DataFrame) -> tuple | None:
+        with self._lock:
+            rows = getattr(df, "__sneldb_memo__", None)
+            if rows is not None:
+                self._order.move_to_end(id(df))
+            return rows
+
+    def record(self, df: DataFrame, rows: tuple) -> None:
+        with self._lock:
+            self._drop(id(df))
+            for key, (ref, _) in list(self._order.items()):
+                if ref() is None:
+                    self._drop(key)
+            df.__sneldb_memo__ = rows
+            self._order[id(df)] = (weakref.ref(df), len(rows))
+            self.rows += len(rows)
+            while self.rows > self.bound:
+                self._drop(next(iter(self._order)))
+
+    def _drop(self, key: int) -> None:
+        held = self._order.pop(key, None)
+        if held is None:
+            return
+        self.rows -= held[1]
+        df = held[0]()
+        if df is not None:
+            del df.__sneldb_memo__
+
+
+# one index per process: the bound is on driver memory, which every
+# engine and frontend in the process shares
+_MEMOS = _Memos(MEMO_ROWS)
 
 
 def _json_cell(v):
@@ -70,26 +132,29 @@ def _row_sources(df: DataFrame):
     iterating the union plan (stored partitions precede delta
     partitions there too).
 
-    A plain frame streamed to its end records its row count on the
-    object (`__sneldb_rows__`); a later delivery of the same object with
-    at most `ONE_JOB_ROWS` rows fetches them with one `collect()` (one
-    Spark job instead of one per partition, and no local socket server).
-    Both paths decode through the same serializer, so the rows are
-    identical. An abandoned stream records nothing."""
+    A plain frame streamed to its end with at most `ONE_JOB_ROWS` rows
+    keeps them (`_MEMOS`); a later delivery of the same object replays
+    those Row objects with no Spark job, so every encoder sees the same
+    rows in the same order. An abandoned stream records nothing."""
     parts = getattr(df, "__sneldb_serve_parts__", None)
     if parts is not None:
         for part in parts:
             yield from part.toLocalIterator()
         return
-    known = getattr(df, "__sneldb_rows__", None)
-    if known is not None and known <= ONE_JOB_ROWS:
-        yield from df.collect()
+    memo = _MEMOS.replay(df)
+    if memo is not None:
+        yield from memo
         return
-    n = 0
+    seen: list | None = []
     for row in df.toLocalIterator():
-        n += 1
+        if seen is not None:
+            if len(seen) < ONE_JOB_ROWS:
+                seen.append(row)
+            else:
+                seen = None
         yield row
-    df.__sneldb_rows__ = n
+    if seen is not None:
+        _MEMOS.record(df, tuple(seen))
 
 
 def json_frames(df: DataFrame, batch_size: int = STREAMING_BATCH_SIZE) -> Iterator[str]:
@@ -117,16 +182,10 @@ def json_frames(df: DataFrame, batch_size: int = STREAMING_BATCH_SIZE) -> Iterat
 
 
 def arrow_ipc_bytes(df: DataFrame) -> bytes:
-    """Whole result as an Arrow IPC stream (for `output_format = "arrow"`)."""
-    import io
-
-    import pyarrow as pa
-
-    table = df.toArrow()
-    sink = io.BytesIO()
-    with pa.ipc.new_stream(sink, table.schema) as writer:
-        writer.write_table(table)
-    return sink.getvalue()
+    """Whole result as one Arrow IPC stream (an HTTP body): the chunks of
+    `arrow_ipc_frames` joined, so a repeated delivery replays the memo
+    like the socket frontends do."""
+    return b"".join(arrow_ipc_frames(df))
 
 
 def arrow_ipc_frames(df: DataFrame, batch_size: int = STREAMING_BATCH_SIZE) -> Iterator[bytes]:
@@ -136,7 +195,7 @@ def arrow_ipc_frames(df: DataFrame, batch_size: int = STREAMING_BATCH_SIZE) -> I
     src/shared/response/arrow.rs:115-180 ArrowStreamEncoder).
 
     Rows come through `_row_sources` exactly like `json_frames`, with
-    the same two driver-memory bounds. The Arrow schema comes from a
+    the same memo. The Arrow schema comes from a
     `limit(0)` collect (public API, Connect-compatible). That collect
     returns no rows but still runs a Spark job, so it runs once per
     frame object: the schema is recorded on the frame

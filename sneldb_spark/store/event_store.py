@@ -152,6 +152,8 @@ class EventStore:
         # per-THREAD read recorder (recording_reads): the types a compile
         # read and their signatures just before each was read
         self._read_log = threading.local()
+        # per type: (read signature, source_hwm answer) of the last probe
+        self._hwm_memo: dict[str, tuple[tuple, tuple[int, int] | None]] = {}
         # Guards _pending against the threaded frontends: an append racing
         # the flush swap could land on the discarded buffer and vanish.
         self._pending_lock = threading.Lock()
@@ -1276,16 +1278,27 @@ class EventStore:
         agg(max(...)) over 100 TB just to ask "did anything arrive?"
         would defeat the delta refresh it guards. Returns None when
         footer stats are unavailable (caller falls back to the scan);
-        (-1, -1) when the type holds no rows at all."""
+        (-1, -1) when the type holds no rows at all.
+
+        The answer is a function of the type's read signature (pending
+        generation plus segment file set), so the last one is kept per
+        type and returned while the signature, taken before the probe,
+        is unchanged: a warm SHOW reads no footers, and any STORE, flush
+        or compaction forces a fresh probe."""
         from sneldb_spark.store.topk_prune import columns_max
 
         if event_type == "*" or not self.registry.has(event_type):
             return None
+        sig = self.read_signature(event_type)
+        held = self._hwm_memo.get(event_type)
+        if held is not None and held[0] == sig:
+            return held[1]
         hwm_ts, hwm_id = -1, -1
         if self.has_data(event_type):
             maxes = columns_max(self._path(event_type), ["timestamp", "event_id"],
                                 storage=self.storage)
             if maxes is None:
+                self._hwm_memo[event_type] = (sig, None)
                 return None
             if maxes["timestamp"] is not None:
                 hwm_ts = int(maxes["timestamp"])
@@ -1302,6 +1315,7 @@ class EventStore:
         for r in rows:
             hwm_ts = max(hwm_ts, r["timestamp"])
             hwm_id = max(hwm_id, r["event_id"])
+        self._hwm_memo[event_type] = (sig, (hwm_ts, hwm_id))
         return hwm_ts, hwm_id
 
     def read_stream(

@@ -41,7 +41,8 @@ from sneldb_spark.commands.serde import (
     query_to_json,
 )
 from sneldb_spark.errors import MaterializationError
-from sneldb_spark.plans.compiler import pair_columns, within_filter
+from sneldb_spark.plans.compiler import within_filter
+from sneldb_spark.plans.sequence import A_PREFIX, B_PREFIX, _bq
 
 # How a materialization refreshes, decided ONCE at REMEMBER with that
 # engine's flags; the manifest keys REMEMBER writes for it record the
@@ -390,8 +391,16 @@ class Materializer:
     def _chain_rows(q, chain: DataFrame) -> DataFrame:
         """The event rows a sequence materialization stores and serves:
         the WITHIN-filtered completed chains under the direct QUERY's
-        column names (compiler.within_filter and pair_columns)."""
-        return pair_columns(q, within_filter(q, chain))
+        column names — a single link's s0_/s1_ become a_/b_ (one
+        selectExpr, one py4j call for the whole rename); longer chains
+        keep their s{i}_ names."""
+        chain = within_filter(q, chain)
+        if len(q.sequence.links) != 1:
+            return chain
+        side = {"s0_": A_PREFIX, "s1_": B_PREFIX}
+        return chain.selectExpr(
+            *[f"{_bq(c)} AS {_bq(side[c[:3]] + c[3:])}" for c in chain.columns]
+        )
 
     # -- batched multi-part state (round 12) --------------------------------
     # The per-step carry frames (pending_s{i}/boundary_{j}) land in ONE
@@ -1338,8 +1347,8 @@ class Materializer:
         `file_signature` of the live copy — is taken BEFORE the build, so
         a write racing the build leaves a signature the next SHOW no
         longer matches. Reuse saves the Parquet schema-inference job and
-        hands out the same object, whose recorded row count lets a
-        repeated delivery fetch with one job (response.py). Every refresh,
+        hands out the same object, whose memo lets a repeated delivery
+        replay its rows with no job (response.py). Every refresh,
         compaction and re-REMEMBER writes new files, so it rebuilds."""
         live = self._live(path)
         sig = (shape, live, self.storage.file_signature(live))

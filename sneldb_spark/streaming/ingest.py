@@ -25,6 +25,7 @@ Input format: JSON lines, one object per line:
 from __future__ import annotations
 
 import os
+import sys
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -53,7 +54,11 @@ def _payload_column(ft: FieldType, raw: F.Column) -> F.Column:
     if ft.kind in ("i64", "u64"):
         return raw.try_cast("long")
     if ft.kind == "f64":
-        return raw.try_cast("double")
+        # an overflowing literal (1e999, a 400-digit integer) casts to
+        # ±inf and "NaN" to NaN; null them so the row is quarantined, as
+        # STORE rejects them (NaN compares above every double in Spark)
+        num = raw.try_cast("double")
+        return F.when(F.abs(num) <= F.lit(sys.float_info.max), num)
     if ft.kind == "bool":
         return raw.try_cast("boolean")
     if ft.kind == "datetime":

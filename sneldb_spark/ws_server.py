@@ -80,6 +80,10 @@ def write_frame(wfile, payload: bytes, opcode: int = 0x1, fin: bool = True):
 # -- handler -----------------------------------------------------------------
 
 class _Handler(socketserver.StreamRequestHandler):
+    # TCP_NODELAY: write_frame flushes each frame, and Nagle would hold
+    # every one after the first until the client's delayed ACK
+    disable_nagle_algorithm = True
+
     def handle(self):
         if not self._handshake():
             return

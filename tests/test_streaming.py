@@ -70,6 +70,33 @@ def test_streaming_ingest_end_to_end(ingest):
     assert os.path.isdir(q_dir)
 
 
+def test_streaming_ingest_quarantines_non_finite_f64(engine, tmp_path):
+    """An overflowing literal is valid JSON but casts to ±inf (and "NaN"
+    to NaN): the row goes to quarantine, as STORE rejects it."""
+    from sneldb_spark.streaming.ingest import StreamingIngest
+
+    engine.execute('DEFINE gauge FIELDS { "v": "f64" }')
+    in_dir = tmp_path / "incoming"
+    os.makedirs(in_dir)
+    bad = ["1e999", "-1e999", "9" * 400, '"NaN"']
+    rows = [{"event_type": "gauge", "context_id": "ok", "payload": '{"v": 1.5}'}] + [
+        {"event_type": "gauge", "context_id": f"bad{i}", "payload": f'{{"v": {v}}}'}
+        for i, v in enumerate(bad)
+    ]
+    _write_jsonl(in_dir / "batch1.jsonl", rows)
+    ing = StreamingIngest(engine.store)
+    try:
+        ing.start_from_json_dir(str(in_dir))
+        ing.flush()
+    finally:
+        ing.stop()
+    stored = [(r["context_id"], r["v"]) for r in engine.query("QUERY gauge").collect()]
+    assert stored == [("ok", 1.5)]
+    q_dir = os.path.join(engine.store.root, "_quarantine", "gauge")
+    quarantined = engine.spark.read.json(q_dir).select("context_id").collect()
+    assert sorted(r["context_id"] for r in quarantined) == [f"bad{i}" for i in range(4)]
+
+
 def test_streaming_validation_batch_api(ingest):
     """validate_and_type is usable as a plain batch transform."""
     engine, ing, _ = ingest
