@@ -1,30 +1,45 @@
 """Deduplication operators: exact, n-gram Jaccard, MinHash+LSH, SimHash,
-embedding-cosine near-dup.
+duplicate clusters, and span/line boilerplate removal.
 
-Scale design notes (the point of each algorithm at 100 TB):
-
-- exact: hash-groupBy on a content digest — one shuffle on a uniform key,
-  map-side partial aggregation; never a window over the whole table.
-- n-gram Jaccard: exact pairwise similarity via an *inverted index* join on
-  shingles (|pairs sharing a shingle|), not a cross join. Quadratic only
-  within shingle posting lists; a frequency cap drops degenerate shingles.
-- MinHash+LSH: linear-time candidate generation — b bands of r minhashes,
-  one shuffle on (band, band-hash); candidates then verified exactly.
-- SimHash: 64-bit fingerprints, banded into 4x16-bit blocks for candidate
-  generation (hamming <= 3 guarantees a matching block by pigeonhole).
-- embedding cosine: see similarity.py (brute-force and LSH variants).
-
-All built from built-in expressions (hash/xxhash64, explode, groupBy);
-no Python UDFs anywhere.
+MinHash and SimHash pairs are wrappers over the near-pair core's band
+join (`pipeline/near.py`); docs/pipeline.md carries the scale design of
+every operator here. Signature kernels run per Arrow batch in numpy
+(`mapInPandas`); everything else is built-in expressions.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import hashlib
+import re
+
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sneldb_spark.pipeline import cluster_parallelism, ensure_min_partitions
+from sneldb_spark.pipeline.near import (
+    band_candidates,
+    band_pairs,
+    hamming,
+    jaccard,
+    signature_table,
+)
+
+_WORD_RE = re.compile(r"\W+")
+
+
+def _words(text) -> list[str]:
+    return [w for w in _WORD_RE.split((text or "").lower()) if w]
+
+
+def _shingles(text, n: int) -> set[str]:
+    """Distinct n-word shingles (the whole text when it is shorter)."""
+    words = _words(text)
+    if len(words) < n:
+        return {" ".join(words)}
+    return {" ".join(words[i : i + n]) for i in range(len(words) - n + 1)}
 
 
 # ---------------------------------------------------------------------------
@@ -81,27 +96,19 @@ def collapse_exact(
     the packaged MinHash composition and `lift_assignments` for the
     lift). tools/smoke_clone_flood.py measures the law this avoids.
     """
-    # NULL text digests as '' (coalesce) so NULL-text rows collapse with
-    # ''-text rows instead of vanishing from the __dg grouping — the
-    # signature kernels treat text as (text or ''), and this preserves
-    # the one-row-per-input contract of minhash_assign.
-    # One min_by aggregation derives the representative ROW per digest in
-    # a single exchange (vs the earlier groupBy + two joins = three
-    # exchanges) — and, unlike a window over the digest, it keeps
-    # map-side partial aggregation: an E-clone flood collapses to one
-    # row per map task BEFORE the shuffle instead of concentrating E
-    # full-text rows in one unsplittable window task (the flood is the
-    # adversarial input this helper exists for).
+    # NULL text digests as '' so NULL-text rows collapse with ''-text rows
+    # (the signature kernels read text as (text or '')). One min_by
+    # aggregation picks the representative ROW per digest in one
+    # exchange and keeps map-side partial aggregation, so a clone flood
+    # collapses before the shuffle.
     base = df.withColumn("__dg", F.md5(F.coalesce(F.col(text_col), F.lit(""))))
     agg = base.groupBy("__dg").agg(
         F.min(F.col(id_col)).alias("rep_id"),
         F.min_by(F.struct(*df.columns), F.col(id_col)).alias("__rep_row"),
     )
     reps = agg.select("__rep_row.*")
-    # mapping joins only the NARROW (id, digest) projection against the
-    # digest->rep_id half of the aggregate (column pruning drops the
-    # min_by struct from this branch), so the join is skew-splittable by
-    # AQE under a flood where a window would not be.
+    # the NARROW (id, digest) side joins the digest->rep_id half of the
+    # aggregate: skew-splittable by AQE under a flood
     mapping = (
         base.select(F.col(id_col).alias("id"), "__dg")
         .join(agg.select("__dg", "rep_id"), "__dg")
@@ -128,34 +135,17 @@ def lift_assignments(
 def shingle_hash_arrays(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
 ) -> DataFrame:
-    """(id, h: sorted distinct 64-bit shingle hashes, n_shingles) per doc.
+    """(id, h: sorted distinct 64-bit shingle hashes, n_shingles) per doc,
+    blake2b-8 per shingle in an Arrow batch kernel (Catalyst higher-order
+    array lambdas evaluate interpreted per element: ~3.5x slower at
+    sf0.1). The hash only needs to be a deterministic injection, so the
+    choice never leaks into results."""
 
-    Computed per Arrow batch in Python (blake2b-8 per shingle) rather than
-    as Catalyst ``transform(sequence, slice, concat_ws)`` expressions:
-    higher-order array lambdas evaluate interpreted per element and were
-    ~3.5x slower at sf0.1. A narrow map either way — no shuffle, and the
-    hash only needs to be a deterministic injection, so the engine-side
-    choice never leaks into results.
-    """
-    import hashlib
-    import re as _re
-    from collections.abc import Iterator as _It
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    word_re = _re.compile(r"\W+")
-
-    def sh_fn(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
+    def sh_fn(batches):
         for pdf in batches:
             ids, arrs, counts = [], [], []
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                words = [w for w in word_re.split((text or "").lower()) if w]
-                if len(words) >= n:
-                    sh = {" ".join(words[i : i + n]) for i in range(len(words) - n + 1)}
-                else:
-                    sh = {" ".join(words)}
+                sh = _shingles(text, n)
                 h = np.fromiter(
                     (
                         int.from_bytes(
@@ -211,13 +201,8 @@ def ngram_jaccard_pairs(
     is not discriminative anyway). Candidates are then verified exactly,
     JVM-side, so both orders return identical pairs.
     """
-    # localCheckpoint, not persist: the shingle table feeds the stop-shingle
-    # scan and BOTH join sides, but the returned pair frame is lazy, so a
-    # persist would outlive the call (session-lifetime cached blocks, and the
-    # CacheManager's plan-matching would let a repeat invocation silently hit
-    # the previous run's cache). Checkpoint blocks are owned by the returned
-    # lineage and reclaimed by the ContextCleaner once it is dropped.
-    docs = shingle_hash_arrays(df, id_col, text_col, n).localCheckpoint(eager=True)
+    # the shingle table feeds the stop-shingle scan and both join sides
+    docs = signature_table(shingle_hash_arrays(df, id_col, text_col, n))
     prefix_len = (
         F.col("n_shingles")
         - F.ceil(F.lit(threshold) * F.col("n_shingles")).cast("int")
@@ -242,12 +227,10 @@ def ngram_jaccard_pairs(
         F.posexplode(F.slice(prefix_src, 1, prefix_len)).alias("pos", "sh"),
     )
     left, right = pre.alias("l"), pre.alias("r")
-    # PPJoin positional filter: with both arrays in the same global (hash)
-    # order, a match at positions (p1, p2) caps the achievable overlap at
-    # 1 + min(n1-1-p1, n2-1-p2); Jaccard >= t needs overlap >=
-    # ceil(t/(1+t) * (n1+n2)). Prunes candidates the length filter alone
-    # lets through (~40% at sf0.1) before the expensive verify join —
-    # the ratio grows with corpus size, which is where it matters.
+    # PPJoin positional filter: a match at positions (p1, p2) caps the
+    # overlap at 1 + min(n1-1-p1, n2-1-p2); Jaccard >= t needs overlap >=
+    # ceil(t/(1+t) * (n1+n2)). Prunes ~40% of the length filter's
+    # candidates at sf0.1 before the verify join.
     min_overlap = F.ceil(
         F.lit(threshold / (1.0 + threshold)) * (F.col("l.n") + F.col("r.n"))
     )
@@ -267,18 +250,10 @@ def ngram_jaccard_pairs(
         .select(F.col("l.id").alias("id1"), F.col("r.id").alias("id2"))
         .distinct()
     )
-    # Spread the verify: candidate pairs are a few bytes each, so AQE's
-    # byte-based coalescing collapses the distinct's exchange to ~1
-    # partition — but every candidate costs an array_intersect over two
-    # full shingle arrays downstream (CPU-bound, not byte-bound). An
-    # explicit repartition (AQE honors user-specified partition counts)
-    # keeps the verify spread over the cluster; the extra exchange moves
-    # only (id1, id2) pairs. 2x on the whole kernel at sf0.1.
+    # Spread the CPU-bound verify: AQE's byte-based coalescing would
+    # collapse the tiny candidate pairs to ~1 partition (2x on the kernel
+    # at sf0.1). Then |A∩B| via array_intersect of the sorted hash arrays.
     cand = cand.repartition(cluster_parallelism(df.sparkSession), "id1")
-    # Exact verification JVM-side: |A∩B| via array_intersect of the sorted
-    # hash arrays — no per-pair posting join. Join strategy is left to AQE:
-    # it broadcasts the doc-array table when it fits and falls back to a
-    # shuffle join at corpus sizes where no single node could hold it.
     d1 = docs.select(F.col("id").alias("id1"), F.col("h").alias("h1"), F.col("n_shingles").alias("n1"))
     d2 = docs.select(F.col("id").alias("id2"), F.col("h").alias("h2"), F.col("n_shingles").alias("n2"))
     out = (
@@ -321,13 +296,11 @@ def dedup_clusters(
     frame twice and shuffle every id — this shape touches the corpus
     exactly once (the singleton anti-join that assignment needs anyway).
 
-    Scale shape: each round is one shuffle (edge join + min-aggregate);
-    rounds needed = graph diameter, and near-dup graphs are dense clumps
-    with tiny diameters (2-4), not long chains — the pathological chain
-    case is bounded by ``max_rounds``. The only driver-side value per
-    round is the convergence scalar. Per-round state is locally
-    checkpointed (lineage truncation, not just caching), so the plan stays
-    O(1)-deep however many rounds run.
+    Under ``max_driver_edges`` pairs a driver union-find labels the
+    graph from one bounded collect; past it, min-label propagation runs
+    one shuffle per round (rounds = graph diameter, capped by
+    ``max_rounds``) over locally checkpointed state. docs/pipeline.md
+    has the scale shape.
     """
     # Persist `pairs`: consumed by the bounded collect below and, on
     # overflow, again by the distributed loop's edge build — an expensive
@@ -337,19 +310,9 @@ def dedup_clusters(
     # over that (typically much smaller) vertex set and stitch the
     # untouched ids back as their own singleton clusters at the end.
     all_ids = ids.select(F.col(id_col).alias("id"))
-    # Adaptive strategy, same trick as Spark's own broadcast-join
-    # threshold: the PAIR LIST (not the corpus) is usually tiny relative
-    # to the data — duplicate pairs, not documents. Under the bound, a
-    # driver union-find replaces `diameter` shuffle+checkpoint rounds with
-    # one collect of O(pairs) longs; past it, the distributed loop below
-    # is the unbounded-scale path (both paths oracle- and unit-tested).
-    # One bounded collect decides the path AND fetches the graph: take
-    # max_driver_edges+1 RAW pair rows — union-find needs neither the
-    # symmetrized orientation nor de-duplication (union(a,b) is
-    # direction- and repeat-insensitive), so the old symmetrize+distinct
-    # exchange before the collect was a pure extra shuffle+job on the
-    # path that exists to avoid shuffles. Overflow falls through to the
-    # distributed loop, which builds the distinct edge list it iterates.
+    # One bounded collect of max_driver_edges+1 RAW pair rows decides the
+    # path AND fetches the graph: union-find is direction- and
+    # repeat-insensitive, so no symmetrize/distinct exchange precedes it.
     edge_rows = pairs.select(
         F.col("id1").alias("src"), F.col("id2").alias("dst")
     ).limit(max_driver_edges + 1).collect()
@@ -386,11 +349,9 @@ def dedup_clusters(
             label_rows = [(n, root, root_sizes[root]) for n, root in label_rows]
             base_schema = base_schema.add("cluster_size", T.LongType())
         labels = ids.sparkSession.createDataFrame(label_rows, base_schema)
-        # The subtract side is the member set that just came FROM the
-        # driver (<= 2*max_driver_edges longs by construction), so it
-        # always fits a broadcast — without the hint the ExistingRDD has
-        # no size statistics and the anti-join sort-merges, shuffling the
-        # ENTIRE corpus id column just to subtract a bounded set.
+        # the member set came FROM the driver, so it always fits a
+        # broadcast; unhinted, the statistics-free anti-join would
+        # shuffle the whole corpus id column
         singletons = all_ids.join(
             F.broadcast(labels.select("id")), "id", "left_anti"
         ).withColumn("cluster_id", F.col("id"))
@@ -423,10 +384,8 @@ def dedup_clusters(
         msgs = edges.join(labels, edges.src == labels.id).select(
             F.col("dst").alias("id"), F.col("cluster_id")
         )
-        # localCheckpoint (not just persist): truncates lineage every round
-        # so the plan stays O(1)-deep — persist alone keeps the full
-        # iterative plan tree, which bloats scheduling and makes recompute
-        # after cache eviction quadratic.
+        # localCheckpoint truncates lineage every round: the plan stays
+        # O(1)-deep however many rounds run
         new_labels = (
             msgs.unionByName(labels)
             .groupBy("id")
@@ -445,11 +404,8 @@ def dedup_clusters(
         "cluster_id", F.col("id")
     )
     if with_sizes:
-        # Members-only: `labels` is the checkpointed member label set
-        # (bounded by the edge list), so both the aggregate and the join
-        # probe re-read a checkpoint scan, never the corpus. A member's
-        # cluster_id is always a member id and a singleton's is its own
-        # id, so the two size sources can never name the same cluster.
+        # members-only: both re-read the checkpointed label set, never the
+        # corpus; a singleton's cluster is never a member's
         sizes = labels.groupBy("cluster_id").agg(
             F.count(F.lit(1)).alias("cluster_size")
         )
@@ -475,8 +431,6 @@ def _minhash_coeffs(num_hashes: int) -> tuple[list[int], list[int]]:
     the SQL oracle (which inlines them as literals): odd a_i in [1, 2^31),
     b_i in [0, p). a_i * h < 2^63 for 32-bit h, so every engine's 64-bit
     integers hold the product exactly."""
-    import numpy as np
-
     rng = np.random.RandomState(42)
     a = (rng.randint(1, 1 << 30, size=num_hashes).astype(np.uint64) * 2 + 1)
     b = rng.randint(0, _MH_PRIME, size=num_hashes).astype(np.uint64)
@@ -491,44 +445,25 @@ def minhash_signatures(
     n: int = 3,
 ) -> DataFrame:
     """(id, sig: array<long>) — classic minwise family min_i((a_i*h + b_i)
-    mod p) over 32-bit shingle hashes, computed per Arrow batch in numpy.
+    mod p) over 32-bit shingle hashes: one vectorized (shingles x
+    num_hashes) multiply-mod-min per doc in an Arrow batch kernel (~4x the
+    explode + JVM min-aggregate form), no shuffle. The modular reduction
+    is essential: without it the multiply-add is monotone in h and every
+    "hash function" picks the same shingle.
 
-    This was first built as explode + `num_hashes` JVM min-aggregates; the
-    Catalyst array expressions (nested transform/slice/concat per shingle)
-    evaluate interpreted per element and dominated the runtime. One
-    vectorized (shingles x num_hashes) multiply-mod-min per doc is ~4x
-    faster and shuffles nothing — signatures never leave their partition.
-    The modular reduction is essential: without it the multiply-add is
-    monotone in h and every "hash function" picks the same shingle.
-
-    Engine-portable arithmetic (so a SQL oracle reproduces signatures
-    bit-for-bit): the shingle hash is the top 4 bytes of md5, and the odd
-    multipliers a_i stay below 2^31 so a_i*h + b_i < 2^63 — no uint64
-    wraparound, the same value any 64-bit (or wider) integer SQL engine
-    computes.
+    Engine-portable arithmetic, so a SQL oracle reproduces signatures
+    bit-for-bit: the shingle hash is the top 4 bytes of md5, and the odd
+    multipliers a_i stay below 2^31 so a_i*h + b_i < 2^63.
     """
-    import hashlib
-    import re as _re
-    from collections.abc import Iterator as _It
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     a, b = _minhash_coeffs(num_hashes)
     a, b = np.array(a, dtype=np.uint64), np.array(b, dtype=np.uint64)
     p = np.uint64(_MH_PRIME)
-    word_re = _re.compile(r"\W+")
 
-    def sig_fn(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
+    def sig_fn(batches):
         for pdf in batches:
             ids, sigs = [], []
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                words = [w for w in word_re.split((text or "").lower()) if w]
-                if len(words) >= n:
-                    sh = {" ".join(words[i : i + n]) for i in range(len(words) - n + 1)}
-                else:
-                    sh = {" ".join(words)}
+                sh = _shingles(text, n)
                 h = np.fromiter(
                     (
                         int.from_bytes(hashlib.md5(s.encode()).digest()[:4], "big")
@@ -554,38 +489,34 @@ def minhash_signatures(
     )
 
 
-def _banded(sigs: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
-    """(id, band, bh): one row per (doc, band) keyed by the band's
-    signature-slice VALUES concatenated — not a hash of them, so band
-    joins have zero false matches and the SQL oracle reproduces the
-    candidate set exactly."""
-    # one selectExpr for the whole (band, bh) relation: building it from
-    # Column objects costs a py4j round trip per element and band
-    structs = ", ".join(
-        f"struct({b} AS band, concat_ws(',', "
+def _minhash_keys(bands: int, rows_per_band: int) -> list[str]:
+    """Band b's key is its signature slice VALUES concatenated, not a hash
+    of them: band joins have zero false matches and the SQL oracle
+    reproduces the candidate set exactly."""
+    return [
+        "concat_ws(',', "
         + ", ".join(f"sig[{b * rows_per_band + r}]" for r in range(rows_per_band))
-        + ") AS bh)"
+        + ")"
         for b in range(bands)
-    )
-    return sigs.selectExpr("id", f"inline(array({structs})) AS (band, bh)")
+    ]
 
 
 def minhash_lsh_candidates(
     sigs: DataFrame, bands: int = 16, rows_per_band: int = 4
 ) -> DataFrame:
     """LSH banding: docs sharing any band's signature slice become
-    candidate pairs (see `_banded` for the join-key construction)."""
-    banded = _banded(sigs, bands, rows_per_band)
-    l, r = banded.alias("l"), banded.alias("r")
-    return (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bh") == F.col("r.bh"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(F.col("l.id").alias("id1"), F.col("r.id").alias("id2"))
-        .distinct()
+    candidate pairs (id1, id2)."""
+    return band_candidates(sigs, None, _minhash_keys(bands, rows_per_band), key="bh")
+
+
+def _minhash_pairs(df, ref, id_col, text_col, threshold, num_hashes, bands, n):
+    def sigs(d):
+        return minhash_signatures(d, id_col, text_col, num_hashes, n)
+
+    return band_pairs(
+        sigs(df), None if ref is None else sigs(ref),
+        _minhash_keys(bands, num_hashes // bands), jaccard(num_hashes),
+        lambda s: s >= threshold, key="bh",
     )
 
 
@@ -598,33 +529,9 @@ def minhash_dedup_pairs(
     bands: int = 16,
     n: int = 3,
 ) -> DataFrame:
-    """Near-dup pairs: LSH candidates verified by estimated Jaccard
-    (fraction of agreeing minhashes)."""
-    rows_per_band = num_hashes // bands
-    # The signature table feeds banding AND both sides of the verify join;
-    # localCheckpoint so the shingle pass + minwise kernel run once, not three
-    # times (at cluster scale this would be a checkpoint/table instead).
-    # Checkpoint, not persist: the returned pair frame is lazy, so a persist
-    # would leak cached blocks across calls and let a repeat invocation hit
-    # the previous run's cache via CacheManager plan-matching.
-    sigs = minhash_signatures(df, id_col, text_col, num_hashes, n).localCheckpoint(
-        eager=True
-    )
-    cand = minhash_lsh_candidates(sigs, bands, rows_per_band)
-    s1 = sigs.withColumnRenamed("id", "id1").withColumnRenamed("sig", "sig1")
-    s2 = sigs.withColumnRenamed("id", "id2").withColumnRenamed("sig", "sig2")
-    est = (
-        cand.join(s1, "id1")
-        .join(s2, "id2")
-        .withColumn(
-            "est_jaccard",
-            F.size(F.filter(F.zip_with("sig1", "sig2", lambda a, b: a == b), lambda x: x))
-            / F.lit(num_hashes),
-        )
-        .where(F.col("est_jaccard") >= threshold)
-        .select("id1", "id2", "est_jaccard")
-    )
-    return est
+    """Near-dup pairs (id1, id2, est_jaccard): LSH candidates verified by
+    estimated Jaccard (fraction of agreeing minhashes)."""
+    return _minhash_pairs(df, None, id_col, text_col, threshold, num_hashes, bands, n)
 
 
 def minhash_assign(
@@ -642,28 +549,17 @@ def minhash_assign(
     per input document, output LINEAR in corpus size regardless of the
     duplication structure.
 
-    `minhash_dedup_pairs` + `dedup_clusters` is the right composition
-    when duplicate groups are small, but banding a CLONE FLOOD — E
-    byte-identical copies of the same page (error pages, boilerplate,
-    mirrored docs; routine in web crawls) — puts all E docs in the same
-    bucket of EVERY band: E^2/2 candidate pairs, and the pair list
-    itself is quadratic output. This operator collapses exact clones to
-    one representative per distinct content (md5 digest group-by, min id
-    as representative) BEFORE banding, runs LSH + verify + connected
-    components over DISTINCT CONTENTS only, and maps every doc back
-    through its digest. A 100k-clone flood contributes ONE row to the
-    LSH join instead of 5e9 candidate pairs.
+    Banding a CLONE FLOOD (E byte-identical copies of a page) puts all E
+    docs in the same bucket of every band: E^2/2 candidate pairs. This
+    collapses exact clones to one representative per distinct content
+    (`collapse_exact`) BEFORE banding, runs LSH + verify + components over
+    distinct contents only, and maps every doc back through its digest
+    (Lee et al. 2022: exact-collapse precedes MinHash).
 
-    Exactly equivalent to the naive composition: identical texts have
-    identical shingle sets, so est_jaccard = 1 >= threshold always pairs
-    them (same component), and signatures/bands are pure functions of
-    content, so the rep-space pair graph is the full pair graph
-    contracted over clone groups; min-id cluster labels agree because
-    each representative is already its group's min id.
-
-    Reference parity: the reference has no near-dedup at all — this is
-    part of the training-data pipeline surface (Lee et al. 2022 dedup
-    practice: exact-collapse precedes MinHash).
+    Exactly equivalent to `minhash_dedup_pairs` + `dedup_clusters`:
+    identical texts always pair (est_jaccard = 1), signatures are pure
+    functions of content, and each representative is already its clone
+    group's min id.
     """
     reps, mapping = collapse_exact(
         df.select(F.col(id_col), F.col(text_col)), id_col, text_col
@@ -680,11 +576,8 @@ def minhash_assign(
         reps.select(id_col), pairs, id_col=id_col,
         max_rounds=max_rounds, max_driver_edges=max_driver_edges,
     )
-    # localCheckpoint (eager) materializes the result BEFORE the upstream
-    # caches are released, like persist()+count() would — but the blocks
-    # are owned by the returned DataFrame's lineage and reclaimed by the
-    # ContextCleaner when it is garbage-collected, so repeated calls
-    # don't accumulate session-lifetime cached partitions.
+    # materialize BEFORE the upstream caches are released; checkpoint
+    # blocks go with the returned lineage, not the session
     out = lift_assignments(mapping, rep_clusters).localCheckpoint(eager=True)
     reps.unpersist()
     mapping.unpersist()
@@ -701,52 +594,15 @@ def minhash_cross_pairs(
     bands: int = 16,
     n: int = 3,
 ) -> DataFrame:
-    """Cross-corpus near-dup pairs: every NEW document within estimated
-    Jaccard `threshold` of a REFERENCE document — the operator that makes
-    near-dedup INCREMENTAL at 100 TB: a new crawl is banded against the
-    existing training set's (materialized) signatures, and the reference
-    corpus is never re-paired with itself (that O(|ref| log |ref|) work
-    happened once, at its own ingest).
-
-    Same kernel family as `minhash_dedup_pairs` (md5-low-32 shingles,
-    (a*h+b) mod p minwise, value-keyed banding, estimated-Jaccard
-    verify), but the candidate join runs NEW bands x REF bands — one
-    equi-join whose left side scales with the delta, not the corpus.
-    Returns (new_id, ref_id, est_jaccard). At production scale persist
-    `minhash_signatures(ref)` as a table and band it once; this
-    convenience wrapper recomputes both sides from text. Ids are not
-    assumed disjoint: a doc present in both sides pairs with itself
-    (est 1.0) — filter `new_id != ref_id` when id spaces overlap.
+    """Cross-corpus near-dup pairs (new_id, ref_id, est_jaccard): every
+    NEW document within estimated Jaccard `threshold` of a REFERENCE
+    document. `minhash_dedup_pairs` in cross mode: the band join runs NEW
+    bands x REF bands, so the reference is never re-paired with itself
+    and incremental dedup scales with the delta. Ids are not assumed
+    disjoint: a doc present on both sides pairs with itself (est 1.0) —
+    filter `new_id != ref_id` when id spaces overlap.
     """
-    rows_per_band = num_hashes // bands
-    # localCheckpoint (not persist): each signature table feeds its banding
-    # AND the verify join of a LAZY result — see minhash_dedup_pairs.
-    sig_new = minhash_signatures(new_df, id_col, text_col, num_hashes, n).localCheckpoint(
-        eager=True
-    )
-    sig_ref = minhash_signatures(ref_df, id_col, text_col, num_hashes, n).localCheckpoint(
-        eager=True
-    )
-    l = _banded(sig_new, bands, rows_per_band).alias("l")
-    r = _banded(sig_ref, bands, rows_per_band).alias("r")
-    cand = (
-        l.join(r, (F.col("l.band") == F.col("r.band")) & (F.col("l.bh") == F.col("r.bh")))
-        .select(F.col("l.id").alias("new_id"), F.col("r.id").alias("ref_id"))
-        .distinct()
-    )
-    s1 = sig_new.withColumnRenamed("id", "new_id").withColumnRenamed("sig", "sig1")
-    s2 = sig_ref.withColumnRenamed("id", "ref_id").withColumnRenamed("sig", "sig2")
-    return (
-        cand.join(s1, "new_id")
-        .join(s2, "ref_id")
-        .withColumn(
-            "est_jaccard",
-            F.size(F.filter(F.zip_with("sig1", "sig2", lambda a, b: a == b), lambda x: x))
-            / F.lit(num_hashes),
-        )
-        .where(F.col("est_jaccard") >= threshold)
-        .select("new_id", "ref_id", "est_jaccard")
-    )
+    return _minhash_pairs(new_df, ref_df, id_col, text_col, threshold, num_hashes, bands, n)
 
 
 # ---------------------------------------------------------------------------
@@ -756,37 +612,21 @@ def minhash_cross_pairs(
 def simhash_fingerprints(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 64
 ) -> DataFrame:
-    """64-bit SimHash per doc: per-token 64-bit hash, bitwise majority vote.
-
-    Same Arrow-batch rationale as `minhash_signatures`: the explode + 64
-    conditional-sum JVM aggregates evaluated interpreted and took ~17s at
-    sf0.1; one (tokens x 64) bit-unpack + column vote in numpy per doc is
-    ~10x faster and emits fingerprints without any shuffle.
-
-    The token hash is the top 8 bytes of md5 — an engine-portable choice
-    (any SQL engine with md5 + hex parsing reproduces it bit-for-bit,
-    which is what lets the driver's DuckDB oracle check this exactly)
-    with the same uniformity as the previous blake2b. Each token
-    OCCURRENCE votes (multiplicity matters); a tied bit votes 0.
+    """64-bit SimHash per doc: per-token 64-bit hash, bitwise majority
+    vote, one (tokens x 64) bit-unpack per doc in an Arrow batch kernel
+    (~10x the explode + 64 JVM aggregates form). The token hash is the
+    top 8 bytes of md5, so the SQL oracle reproduces it bit-for-bit. Each
+    token OCCURRENCE votes; a tied bit votes 0.
     """
-    import hashlib
-    import re as _re
-    from collections.abc import Iterator as _It
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     if bits != 64:
         raise ValueError("simhash_fingerprints is fixed at 64 bits")
-    word_re = _re.compile(r"\W+")
     shifts = np.arange(64, dtype=np.uint64)
 
-    def fp_fn(batches: _It[pd.DataFrame]) -> _It[pd.DataFrame]:
+    def fp_fn(batches):
         for pdf in batches:
             ids, fps = [], []
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                toks = [w for w in word_re.split((text or "").lower()) if w]
+                toks = _words(text)
                 if not toks:
                     ids.append(doc_id)
                     fps.append(0)
@@ -818,58 +658,22 @@ def simhash_fingerprints(
 def simhash_near_pairs(
     fps: DataFrame, max_hamming: int = 3, blocks: int = 4
 ) -> DataFrame:
-    """Candidate pairs by banded 16-bit blocks (pigeonhole: hamming <= 3
-    implies an identical block), verified by exact hamming distance.
+    """Pairs (id1, id2, hamming): band join on `blocks` fingerprint blocks,
+    verified by exact hamming distance.
 
-    Completeness: the result is ALL pairs with hamming <= max_hamming
-    only when ``max_hamming <= blocks - 1`` (pigeonhole). With a larger
-    budget (the driver gate runs max_hamming=8 over 4 blocks) the
-    banding is part of the semantics — a qualifying pair sharing no
-    block is absent, and the SQL oracle replicates that by construction.
-
-    Scale note (tools/smoke_minhash_scale.py): with `blocks` blocks the
-    key space is 2^(64/blocks), so RANDOM fingerprint collisions alone
-    produce ~blocks * n^2 / 2^(64/blocks + 1) candidate pairs — at 10M
-    docs the default 16-bit blocks cost ~3e9 candidates before the
-    hamming filter. Past ~1M docs, trade hamming budget for key width:
-    blocks=3 (21-bit keys, complete for max_hamming<=2) or blocks=2
-    (32-bit keys, max_hamming<=1) keep the candidate set near-linear."""
+    Complete (ALL pairs with hamming <= max_hamming) only when
+    ``max_hamming <= blocks - 1`` (pigeonhole). With a larger budget the
+    banding is part of the semantics: a qualifying pair sharing no block
+    is absent, and the SQL oracle replicates that. Past ~1M docs trade
+    hamming budget for key width (docs/pipeline.md)."""
     width = 64 // blocks
-    mask = (1 << width) - 1
-    # Both sides of the self-join read `fps` — localCheckpoint it so the
-    # fingerprint pipeline upstream (a full Python-kernel pass over the
-    # corpus text when fed from simhash_fingerprints) runs once, not once
-    # per join side. Checkpoint, not persist: the returned pair frame is
-    # lazy, so a persist would leak across calls (same contract as
-    # minhash_dedup_pairs' sigs checkpoint).
-    fps = fps.localCheckpoint(eager=True)
-    blocks_expr = ", ".join(
-        f"struct({b} AS block, shiftrightunsigned(simhash, {b * width}) & {mask} AS key)"
+    keys = [
+        f"shiftrightunsigned(simhash, {b * width}) & {(1 << width) - 1}"
         for b in range(blocks)
-    )
-    banded = fps.selectExpr(
-        "id", "simhash", f"inline(array({blocks_expr})) AS (block, key)"
-    )
-    l, r = banded.alias("l"), banded.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.block") == F.col("r.block"))
-            & (F.col("l.key") == F.col("r.key"))
-            & (F.col("l.id") < F.col("r.id")),
-        )
-        .select(
-            F.col("l.id").alias("id1"),
-            F.col("r.id").alias("id2"),
-            F.col("l.simhash").alias("h1"),
-            F.col("r.simhash").alias("h2"),
-        )
-        .distinct()
-    )
-    return (
-        cand.withColumn("hamming", F.bit_count(F.col("h1").bitwiseXOR(F.col("h2"))))
-        .where(F.col("hamming") <= max_hamming)
-        .select("id1", "id2", "hamming")
+    ]
+    return band_pairs(
+        fps, None, keys, hamming, lambda h: h <= max_hamming,
+        sig="simhash", carry=True,
     )
 
 
@@ -887,29 +691,13 @@ def duplicated_span_removal(
     """Corpus-wide duplicated n-gram span removal: every span of `n`
     consecutive tokens whose exact text occurs >= `min_count` times across
     the corpus (any document, including self-repeats) is removed from every
-    document. This is the span-granular complement to document-level dedup
-    (exact/minhash): boilerplate and template text shared by otherwise
-    distinct documents is stripped instead of dropping whole documents
-    (the "exact substring deduplication" step of modern LM data pipelines;
-    doc-level analogue in the reference: tests/integration scenario corpus
-    semantics — no span operator exists there, this is a pipeline
-    extension).
+    document: the span-granular complement to document-level dedup (the
+    "exact substring deduplication" step of LM data pipelines).
 
     Returns (id, n_tokens, n_dup_tokens, clean_text) with clean_text the
     original token sequence minus all covered positions, single-space
-    joined ('' when everything was duplicated).
-
-    Scale design: all-JVM codegen expressions (split / slice / posexplode /
-    sequence), no Python. Four linear shuffles, each on a uniform key:
-    gram-count groupBy, gram semi-join, covered-position distinct, per-doc
-    reassembly groupBy. No window over the corpus, nothing broadcast
-    (the duplicated-gram set is corpus-sized in the worst case, so the
-    semi join must stay a shuffle join — AQE may still pick broadcast when
-    the set is measured small at runtime, which is then safe). At 100 TB
-    the gram string is the shuffle payload; swapping the join/count key to
-    md5(gram) (128-bit, collision-free in practice) caps the key width —
-    kept as the literal gram here so results are exactly reproducible by
-    any engine.
+    joined ('' when everything was duplicated). All-JVM, four linear
+    shuffles (docs/pipeline.md).
     """
     toks = df.select(
         F.col(id_col).alias("id"), F.split(F.col(text_col), " ").alias("w")
@@ -980,22 +768,10 @@ def boilerplate_line_removal(
 
     Returns (id, n_lines, n_removed_lines, clean_text) with clean_text the
     surviving lines rejoined by `line_sep` in original order ('' when
-    everything was boilerplate).
-
-    Scale design: all-JVM codegen (split / posexplode / count distinct /
-    semi join / re-agg), no Python. Three linear shuffles on uniform keys:
-    the per-line distinct-doc count (two-phase partial distinct on
-    (line, id)), the boilerplate semi join back onto the exploded lines,
-    and the per-doc reassembly groupBy. Nothing broadcast — the
-    boilerplate set is corpus-sized in the worst case, so the semi join
-    stays a shuffle join (AQE may still pick broadcast when it measures
-    small, which is then safe). The line string itself is the shuffle
-    key, exactly reproducible by any engine; swapping to md5(line) caps
-    key width at 100 TB if needed.
+    everything was boilerplate). All-JVM, three linear shuffles
+    (docs/pipeline.md).
     """
-    import re as _re
-
-    sep_re = _re.escape(line_sep)  # F.split takes a REGEX pattern
+    sep_re = re.escape(line_sep)  # F.split takes a REGEX pattern
     lines = df.select(
         F.col(id_col).alias("id"),
         F.posexplode(F.split(F.col(text_col), sep_re, -1)).alias("pos", "line"),

@@ -31,6 +31,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sneldb_spark.pipeline import ensure_min_partitions
+from sneldb_spark.pipeline.codecs import (
+    decode_ppm,
+    decode_wav,
+    is_ppm,
+    is_wav,
+    resize_ppm,
+    wav_stats,
+)
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -160,8 +168,6 @@ def resize_images(
     use_real = codec == "real"
 
     def _real_resize(data: bytes, w: int, h: int) -> bytes:
-        from sneldb_spark.pipeline.codecs import is_ppm, resize_ppm
-
         if is_ppm(data):
             # built-in pure-numpy codec — no library needed for the
             # uncompressed format (pipeline/codecs.py)
@@ -293,8 +299,6 @@ def audio_features(df: DataFrame) -> DataFrame:
     counterpart for the format it can."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sneldb_spark.pipeline.codecs import is_wav, wav_stats
-
         for pdf in batches:
             out: dict[str, list] = {
                 "media_id": [], "n_samples": [], "sample_rate": [],
@@ -341,8 +345,6 @@ def audio_segment_features(df: DataFrame, segment_ms: int = 5_000) -> DataFrame:
     dropped (they have no decodable segments)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sneldb_spark.pipeline.codecs import decode_wav, is_wav
-
         for pdf in batches:
             out: dict[str, list] = {
                 "media_id": [], "seg_idx": [], "seg_start_ms": [],
@@ -397,8 +399,6 @@ def image_stats(df: DataFrame) -> DataFrame:
     pipelines threshold on (too dark / blank / extreme aspect)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from sneldb_spark.pipeline.codecs import decode_ppm, is_ppm
-
         for pdf in batches:
             out: dict[str, list] = {
                 "media_id": [], "width": [], "height": [],

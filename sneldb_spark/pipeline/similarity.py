@@ -1,19 +1,16 @@
 """Similarity search over embedding columns (array<float>).
 
-- `brute_force_topk`: exact cosine top-k. The query matrix is broadcast
-  (queries are small by construction); the corpus streams through an
-  Arrow-batched numpy matmul (`mapInPandas`) emitting per-batch top-k,
-  then one tiny global re-rank — no full sort of the corpus, no per-pair
-  expression evaluation.
-- `lsh_topk`: random-hyperplane LSH — signatures bucket the corpus, only
-  bucket-colliding candidates get exact scoring. At 100 TB this turns an
-  O(|Q|x|C|) scan into O(|Q| x bucket) with a recall/probe tradeoff.
-- `embedding_near_pairs`: all-pairs near-dup by cosine >= threshold,
-  exact and fully distributed: rows hash into blocks, each unordered
-  block pair gets one GEMM (`applyInPandas`), only above-threshold pairs
-  are emitted. No driver-side corpus collect anywhere on the path.
+Every operator here is a thin wrapper over the near-pair core
+(`pipeline/near.py`; stages and scale accounting in docs/pipeline.md):
 
-The matmul kernel is the one place where built-in expressions genuinely
+- `brute_force_topk`, `ivf_topk`, `ivf_topk_indexed`: broadcast-query
+  top-k (IVF masks each query to its probed lists);
+- `lsh_topk`: random-hyperplane signatures, band join against the
+  query signatures, exact scoring of the candidates;
+- `embedding_near_pairs`, `semantic_cross_pairs`, `knn_graph`: the
+  block grid with a threshold or local top-k emit rule.
+
+The matmul kernels are the one place where built-in expressions genuinely
 can't compete: Catalyst higher-order functions evaluate per element per
 pair, while one BLAS sgemm per Arrow batch is ~100x faster. Scalar helpers
 (dot/norm/cosine as Columns) are kept for composability.
@@ -21,15 +18,27 @@ pair, while one BLAS sgemm per Arrow batch is ~100x faster. Scalar helpers
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sneldb_spark.pipeline import ensure_min_partitions
+from sneldb_spark.pipeline.near import (
+    SIM_SCHEMA,
+    band_join,
+    band_rows,
+    broadcast_topk,
+    grid_pairs,
+    hamming,
+    pair_schema,
+    rank,
+    signature_table,
+    threshold_emit,
+    topk_emit,
+    unit_rows,
+)
 
 
 def _as_double(vec: Column) -> Column:
@@ -49,15 +58,6 @@ def norm(a: Column) -> Column:
 def cosine(a: Column, b: Column) -> Column:
     a, b = _as_double(a), _as_double(b)
     return dot(a, b) / (norm(a) * norm(b))
-
-
-_SIM_SCHEMA = T.StructType(
-    [
-        T.StructField("query_id", T.LongType(), False),
-        T.StructField("neighbor_id", T.LongType(), False),
-        T.StructField("sim", T.DoubleType(), True),
-    ]
-)
 
 
 # Hard cap on the rows any "small by contract" query side may collect to the
@@ -83,11 +83,7 @@ def _collect_query_side(rows_df: DataFrame, cols: list[str]) -> pd.DataFrame:
 def _normalized_matrix(rows_df: DataFrame, id_col: str, vec_col: str):
     """Collect (ids, row-normalized float64 matrix) — for the broadcast side."""
     pdf = _collect_query_side(rows_df, [id_col, vec_col])
-    ids = pdf[id_col].to_numpy()
-    mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    return ids, mat / norms
+    return pdf[id_col].to_numpy(), unit_rows(pdf[vec_col])
 
 
 def brute_force_topk(
@@ -103,44 +99,11 @@ def brute_force_topk(
     Output: (query_id, neighbor_id, sim, rank). Self-matches excluded.
     Ranking is deterministic: (sim desc, neighbor_id asc) — with optional
     rounding applied *before* ranking so results are reproducible across
-    float summation orders.
-
-    Plan: queries collected+normalized once on the driver (they are the
-    small side by contract), shipped in the UDF closure; each corpus Arrow
-    batch does one float64 GEMM and emits only its local top-k per query,
-    so the shuffle into the final global rank carries O(batches * |Q| * k)
-    rows instead of |C| * |Q|.
-    """
-    q_ids, q_mat = _normalized_matrix(queries, id_col, vec_col)
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            sims = (mat / norms) @ q_mat.T  # (batch, nq)
-            if round_digits is not None:
-                sims = np.round(sims, round_digits)
-            take = min(k + 1, len(ids))  # +1: self-match may occupy a slot
-            out = []
-            for j, qid in enumerate(q_ids):
-                col = sims[:, j]
-                # keep everything >= the take-th value (ties included) so the
-                # global (sim desc, id asc) rank sees every tied candidate
-                kth = np.partition(col, len(col) - take)[len(col) - take]
-                for i in np.nonzero(col >= kth)[0]:
-                    if ids[i] != qid:
-                        out.append((qid, ids[i], col[i]))
-            yield pd.DataFrame(out, columns=["query_id", "neighbor_id", "sim"])
-
-    scored = ensure_min_partitions(corpus.select(id_col, vec_col)).mapInPandas(
-        score, schema=_SIM_SCHEMA
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    float summation orders. Queries are collected and normalized once on
+    the driver (the small side by contract)."""
+    q_ids, q_unit = _normalized_matrix(queries, id_col, vec_col)
+    rows = ensure_min_partitions(corpus.select(id_col, vec_col))
+    return broadcast_topk(rows, q_ids, q_unit, k, id_col, vec_col, round_digits)
 
 
 def lsh_signatures(
@@ -151,20 +114,11 @@ def lsh_signatures(
     dim: int = 64,
     seed: int = 42,
 ) -> DataFrame:
-    """Random-hyperplane signature: bit i = sign(v . r_i). The hyperplanes
-    are generated deterministically from `seed` and shipped in the kernel
-    closure.
-
-    The dot products run in an Arrow batch kernel with an EXPLICIT
-    left-associated float64 accumulation (``acc = (..((0.0 + t0) + t1)..)``,
-    one vectorized add per dimension), which is bit-identical to both the
-    Catalyst ``F.aggregate`` fold and the oracle SQL's ``0.0 + t1 + ... ``
-    chain — so signatures agree with the SQL replica exactly, including at
-    sign boundaries. (A plain GEMM would use pairwise summation and could
-    flip a bit when a dot product sits within one ulp of zero.) The
-    previous pure-expression form expanded to planes*dim literal terms,
-    blowing past the JVM's JIT/codegen method limits into interpreted
-    evaluation — the Arrow kernel is ~5x faster and scale-independent."""
+    """Random-hyperplane signature: bit i = sign(v . r_i), hyperplanes
+    drawn deterministically from `seed`. The Arrow kernel accumulates the
+    dot products left-associated in float64 (`_lsh_bits`), bit-identical
+    to the oracle SQL's ``0.0 + t1 + ...`` chain even at sign boundaries,
+    where a GEMM's pairwise summation could flip a bit."""
     pl = _lsh_planes(planes, dim, seed)
     out = ensure_min_partitions(df).select(
         F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
@@ -177,7 +131,7 @@ def lsh_signatures(
         ]
     )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def kernel(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -199,10 +153,8 @@ def _lsh_planes(planes: int, dim: int, seed: int) -> np.ndarray:
 
 
 def _lsh_bits(mat: np.ndarray, pl: np.ndarray) -> np.ndarray:
-    """Signature bits for a (rows x dim) float64 matrix — the exact
-    arithmetic of the `lsh_signatures` kernel (left-associated float64
-    accumulation; see its docstring), shared so a driver-side caller
-    computes bit-identical signatures."""
+    """Signature bits for a (rows x dim) float64 matrix, shared by the
+    `lsh_signatures` kernel and the driver-side query signatures."""
     acc = np.zeros((len(mat), pl.shape[0]), dtype=np.float64)
     for j in range(pl.shape[1]):  # left-associated: matches the SQL fold exactly
         acc += mat[:, j : j + 1] * pl[:, j]
@@ -223,185 +175,97 @@ def lsh_topk(
     """Approximate top-k: score only corpus vectors whose signature is
     within `max_probe_hamming` bits of the query signature.
 
-    Candidate generation is a banded EQUI-join, not a nested-loop scan:
-    the signature splits into ``max_probe_hamming + 1`` disjoint blocks,
-    and by pigeonhole any pair within the hamming budget shares at least
-    one identical block — so joining on (block index, block value) produces
-    exactly the pairs the exhaustive signature comparison would, at a
-    hash-join's cost. The hamming verify then filters to the same final
-    set. At 100 TB this is the difference between a shuffle-partitioned
-    hash join and |corpus| x |queries| signature tests.
+    The band join in cross mode (corpus x queries): the signature splits
+    into ``max_probe_hamming + 1`` disjoint bands, and by pigeonhole any
+    pair within the hamming budget shares one identical band, so the
+    equi-join plus the hamming verify yields exactly the exhaustive
+    comparison's pairs at a hash join's cost.
     """
     n_bands = max_probe_hamming + 1
     bounds = [round(i * planes / n_bands) for i in range(n_bands + 1)]
-
-    def banded(df: DataFrame, sig_col: str) -> DataFrame:
-        blocks = []
-        for b in range(n_bands):
-            lo, hi = bounds[b], bounds[b + 1]
-            mask = (1 << (hi - lo)) - 1
-            blocks.append(
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.shiftrightunsigned(F.col(sig_col), lo)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("key"),
-                )
-            )
-        return df.select(
-            "*", F.explode(F.array(*blocks)).alias("bb")
-        ).select(*df.columns, F.col("bb.band").alias("band"), F.col("bb.key").alias("key"))
-
-    # localCheckpoint the signature table: banding reads it narrow (no
-    # vectors through the explode) and the verify fetches vectors back from
-    # the checkpoint — so the signature kernel runs once AND each stage
-    # carries exactly ONE Python eval. (Fusing the signature and scoring
-    # kernels into one stage — two chained Python evals per task — measured
-    # 6–13 s on the gate in a long-lived session vs 1.6 s fresh: every
-    # task needs two simultaneous Python workers, and the doubled pool
-    # demand stalls cold-forked workers behind pandas imports.)
-    # Checkpoint, not persist: the returned frame is lazy, so a persist
-    # would leak cached blocks across calls and let a repeat invocation hit
-    # the previous run's cache via CacheManager plan-matching.
-    sigs = lsh_signatures(corpus, id_col, vec_col, planes, dim).localCheckpoint(
-        eager=True
-    )
-    c = banded(sigs.drop("v"), "sig")
-    # The query side is the small side by contract and scoring already
-    # collects it — so ONE driver pass now serves both: raw vectors are
-    # collected once, signatures computed with the kernel's exact numpy
-    # arithmetic (_lsh_bits, bit-identical), the banded (band, key) rows
-    # shipped back as a broadcast local relation, and the normalized
-    # scoring matrix falls out of the same collect. This replaces a
-    # second queries scan + a signature kernel pass + its banding explode
-    # with zero extra jobs.
-    pl = _lsh_planes(planes, dim, seed=42)
+    keys = [
+        f"shiftrightunsigned(sig, {lo}) & {(1 << (hi - lo)) - 1}"
+        for lo, hi in zip(bounds, bounds[1:])
+    ]
+    # Banding reads the signature table narrow and the verify fetches
+    # vectors back from it: the kernel runs once AND each stage carries
+    # ONE Python eval (two chained evals per task measured 6–13 s on the
+    # gate in a long-lived session vs 1.6 s fresh: the doubled worker
+    # demand stalls cold-forked workers behind pandas imports).
+    sigs = signature_table(lsh_signatures(corpus, id_col, vec_col, planes, dim))
+    # The query side is small by contract and scoring collects it anyway,
+    # so ONE driver pass serves both: signatures come from the kernel's
+    # exact numpy arithmetic (_lsh_bits, bit-identical) and go back as a
+    # literal relation, banded by the same keys as the corpus.
     q_pdf = _collect_query_side(queries, [id_col, vec_col])
     q_ids = q_pdf[id_col].to_numpy()
     if len(q_pdf):
         q_raw = np.array([np.asarray(v, dtype=np.float64) for v in q_pdf[vec_col]])
-        qsigs = _lsh_bits(q_raw, pl)
+        q_unit = unit_rows(q_raw)
     else:
-        q_raw, qsigs = np.zeros((0, dim)), np.array([], dtype=np.int64)
-    q_rows = []
-    for qid, sig in zip(q_ids, qsigs):
-        for b in range(n_bands):
-            lo, hi = bounds[b], bounds[b + 1]
-            q_rows.append(
-                (int(qid), int(sig), b, (int(sig) >> lo) & ((1 << (hi - lo)) - 1))
-            )
+        q_raw = q_unit = np.zeros((0, dim))
+    q_bits = _lsh_bits(q_raw, _lsh_planes(planes, dim, seed=42))
+    q_sigs = list(zip(q_ids.tolist(), q_bits.tolist()))
     spark = queries.sparkSession
-    if 0 < len(q_rows) <= 4096:
-        # Ship the banded rows as a pure-JVM literal relation. A
-        # createDataFrame local frame is a PYTHON-RDD scan with
-        # defaultParallelism partitions — executed inside the broadcast
-        # it launches one pickle-worker task per core, and in a
-        # long-lived session whose plain-pickle worker pool has gone
-        # cold that measured as ~2.4 s of blocked (zero-CPU) time per
-        # task: 9.6 s on the gate vs 1.6 s fresh. The literal explode is
-        # one JVM task, no Python boundary at all (guide §4). One
-        # selectExpr: a Column per literal is a py4j round trip each.
-        rows_expr = ", ".join(
-            f"struct({qid}L AS query_id, {sig}L AS qsig, {b} AS band, {key}L AS key)"
-            for qid, sig, b, key in q_rows
-        )
-        q_local = spark.range(1).selectExpr(
-            f"inline(array({rows_expr})) AS (query_id, qsig, band, key)"
-        )
+    if 0 < len(q_sigs) * n_bands <= 4096:
+        # a pure-JVM literal relation: a createDataFrame frame is a
+        # Python-RDD scan whose cold pickle workers measured 9.6 s on the
+        # gate inside the broadcast (1.6 s fresh)
+        rows = ", ".join(f"struct({q}L AS query_id, {g}L AS sig)" for q, g in q_sigs)
+        q_local = spark.range(1).selectExpr(f"inline(array({rows})) AS (query_id, sig)")
     else:  # very wide query batches: literal plan size would dominate
-        q_local = spark.createDataFrame(
-            q_rows, "query_id long, qsig long, band int, key long"
-        )
-    q = F.broadcast(q_local)
-    # Dedup the candidate PAIRS while they are narrow (query_id, id)
-    # longs — a map-side-combinable HashAggregate — then fetch each
-    # candidate's vector from the signature cache. The r10 form
-    # deduplicated rows already carrying the full `v` arrays (a
-    # SortAggregate over vectors).
+        q_local = spark.createDataFrame(q_sigs, "query_id long, sig long")
+    q = F.broadcast(band_rows(q_local, keys, "query_id", "sig AS qsig"))
+    # Dedup the candidate PAIRS while they are narrow (query_id, id) longs
+    # (a map-side-combinable HashAggregate), then fetch each candidate's
+    # vector from the signature table.
+    _, dist = hamming("sig", "qsig")
     cand = (
-        c.join(q, ["band", "key"])
-        .where(
-            (F.bit_count(F.col("sig").bitwiseXOR(F.col("qsig"))) <= max_probe_hamming)
-            & (F.col("id") != F.col("query_id"))
-        )
+        band_join(band_rows(sigs, keys, "id", "sig"), q, "r.query_id", "l.id", "l.sig", "r.qsig")
+        .where((dist <= max_probe_hamming) & (F.col("id") != F.col("query_id")))
         .select("query_id", "id")
         .dropDuplicates(["query_id", "id"])
         .join(sigs.select("id", "v"), "id")
     )
-    # Exact scoring of the banded candidates runs through the same
-    # Arrow-GEMM shape as `brute_force_topk`: one float64 vectorized dot
-    # per Arrow batch instead of a Catalyst per-element fold per pair
-    # (~100x — see module docstring).
-    norms = np.linalg.norm(q_raw, axis=1, keepdims=True) if len(q_raw) else q_raw
-    if len(q_raw):
-        norms[norms == 0] = 1.0
-        q_mat = q_raw / norms
-    else:
-        q_mat = q_raw
-    q_index = {int(qid): i for i, qid in enumerate(q_ids)}
+    q_index = {qid: i for i, qid in enumerate(q_ids.tolist())}
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def score(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            qrows = q_mat[[q_index[int(qid)] for qid in pdf["query_id"]]]
-            sims = np.einsum("ij,ij->i", mat / norms, qrows)
+            qrows = q_unit[[q_index[int(qid)] for qid in pdf["query_id"]]]
+            sims = np.einsum("ij,ij->i", unit_rows(pdf["v"]), qrows)
             if round_digits is not None:
                 sims = np.round(sims, round_digits)
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].astype("int64"),
-                    "neighbor_id": pdf["id"].astype("int64"),
-                    "sim": sims,
-                }
-            )
+            yield pd.DataFrame({
+                "query_id": pdf["query_id"].astype("int64"),
+                "neighbor_id": pdf["id"].astype("int64"),
+                "sim": sims,
+            })
 
-    scored = cand.select("query_id", "id", "v").mapInPandas(score, schema=_SIM_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    scored = cand.select("query_id", "id", "v").mapInPandas(score, schema=SIM_SCHEMA)
+    return rank(scored, "query_id", "neighbor_id", k)
 
 
 def _spherical_plusplus_seed(
     df: DataFrame, nlist: int, id_col: str, vec_col: str
 ) -> np.ndarray:
     """Deterministic spherical k-means++ seeding for the IVF quantizer
-    (opt-in via ``ivf_assignments(init="plusplus")``).
-
-    The angular analogue of `clustering._plusplus_seed`: each next
-    centroid is a D-proportional draw with D = 1 - max cosine sim to the
-    chosen set, derandomized by the md5-keyed exponential race (pick the
-    row minimizing -ln(u)/D). u is built EXACTLY as in
-    `clustering._plusplus_seed`: the first 15 hex chars of
-    md5("<id>:<draw_index>") scaled by 16^15 and clamped strictly below
-    1.0 — fresh per draw (decorrelated) and identical across engines.
-    One Arrow scan per added centroid — each batch emits only its local
-    best candidate by lexicographic (key, cid) (the same tie-break the
-    driver applies across batches, so the winner is
-    partitioning-independent even on duplicate vectors), the driver
-    reduces — so seeding costs nlist-1 passes; worth it when low ids are
-    clustered and lowest-id seeding would stack several lists in one
-    region (unbalanced lists = one hot partition at probe time). Rows
-    already indistinguishable from a chosen centroid (D <= 1e-12) can
-    never win; if everything is, the remaining seeds pad from the
-    lowest-id vectors (the default recipe)."""
+    (``ivf_assignments(init="plusplus")``): the angular analogue of
+    `clustering._plusplus_seed`, D = 1 - max cosine sim to the chosen
+    set, derandomized by the same md5-keyed exponential race. One Arrow
+    scan per added centroid; each batch emits its best (key, cid) and the
+    driver reduces with the same tie-break, so the winner does not depend
+    on partitioning. Rows with D <= 1e-12 never win; if every row is
+    such, the remaining seeds pad from the lowest-id vectors."""
     import hashlib
-
-    def _norm_rows(m: np.ndarray) -> np.ndarray:
-        n = np.linalg.norm(m, axis=1, keepdims=True)
-        n[n == 0] = 1.0
-        return m / n
 
     first = (
         df.select(id_col, vec_col).orderBy(F.col(id_col).asc()).limit(1).toPandas()
     )
     if not len(first):
         raise ValueError("ivf_assignments: empty corpus")
-    cents = _norm_rows(
-        np.array([np.asarray(first[vec_col][0], dtype=np.float64)])
-    )
+    cents = unit_rows([first[vec_col][0]])
     cand_schema = T.StructType(
         [
             T.StructField("key", T.DoubleType(), False),
@@ -414,16 +278,14 @@ def _spherical_plusplus_seed(
         chosen = cents
         draw = len(cents)  # mixed into the hash: fresh uniform per draw
 
-        def best(
-            batches: Iterator[pd.DataFrame], chosen=chosen, draw=draw
-        ) -> Iterator[pd.DataFrame]:
+        def best(batches, chosen=chosen, draw=draw):
             for pdf in batches:
                 if not len(pdf):
                     continue
                 raw = np.array(
                     [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
                 )
-                d = 1.0 - (_norm_rows(raw) @ chosen.T).max(axis=1)
+                d = 1.0 - (unit_rows(raw) @ chosen.T).max(axis=1)
                 # same u as clustering._plusplus_seed: 15 hex chars of
                 # md5("<id>:<draw>") / 16^15, clamped strictly below 1.0
                 u = np.fromiter(
@@ -468,15 +330,10 @@ def _spherical_plusplus_seed(
                 .limit(nlist)
                 .toPandas()
             )
-            vecs = _norm_rows(
-                np.array([np.asarray(v, dtype=np.float64) for v in pad[vec_col]])
-            )
-            cents = np.vstack([cents, vecs])[:nlist]
+            cents = np.vstack([cents, unit_rows(pad[vec_col])])[:nlist]
             break
         cand = cand.sort_values(["key", "cid"]).iloc[0]
-        cents = np.vstack(
-            [cents, _norm_rows(np.array([np.asarray(cand["v"])]))]
-        )
+        cents = np.vstack([cents, unit_rows([cand["v"]])])
     return cents
 
 
@@ -496,30 +353,18 @@ def ivf_assignments(
     corpus scan per centroid, fine at small nlist), or deterministic
     k-means|| (``init="parallel"``, clustering.parallel_seed with the
     cosine metric — ~10 scans at ANY nlist, the seeding for
-    nlist-in-the-thousands builds), then `iters` Lloyd rounds. Per round: assignment is a distributed
-    Arrow-batched argmax GEMM; the centroid update aggregates per-cluster
-    element sums JVM-side (posexplode -> groupBy(cluster, pos)) so only the
-    (nlist x dim) centroid table ever reaches the driver. Returns
-    (corpus with `cluster` column, normalized centroid matrix).
-
-    At 100 TB the assignment pass is a full scan per round (embarrassingly
-    parallel, no shuffle); the update shuffles (nlist * dim) partial sums —
-    both independent of corpus size in driver memory.
+    nlist-in-the-thousands builds), then `iters` Lloyd rounds. A round
+    is one scan: every Arrow batch assigns its rows by argmax GEMM and
+    emits only its nlist partial (sum, count) rows, reduced on the
+    driver, so a round moves O(batches * nlist * dim) floats whatever the
+    row count. Returns (corpus with `cluster` column, normalized centroid
+    matrix).
     """
     if init not in ("lowest_id", "plusplus", "parallel"):
         raise ValueError(f"ivf_assignments: unknown init {init!r}")
-
-    def _norm_rows(m: np.ndarray) -> np.ndarray:
-        n = np.linalg.norm(m, axis=1, keepdims=True)
-        n[n == 0] = 1.0
-        return m / n
-
     if init == "plusplus":
         cents = _spherical_plusplus_seed(df, nlist, id_col, vec_col)
     elif init == "parallel":
-        # k-means|| (clustering.parallel_seed, cosine metric): O(rounds)
-        # scans instead of plusplus's O(nlist) — the scale-safe seeding
-        # for large nlist builds (VERDICT r6)
         from sneldb_spark.pipeline.clustering import parallel_seed
 
         cents = parallel_seed(df, nlist, id_col, vec_col, metric="cosine")
@@ -530,20 +375,9 @@ def ivf_assignments(
             .limit(nlist)
             .toPandas()
         )
-        cents = _norm_rows(
-            np.array([np.asarray(v, dtype=np.float64) for v in seed_pdf[vec_col]])
-        )
-
-    def _batch_matrix(pdf: pd.DataFrame) -> np.ndarray:
-        mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        return _norm_rows(mat)
+        cents = unit_rows(seed_pdf[vec_col])
 
     base = ensure_min_partitions(df)
-
-    # Lloyd rounds: one scan each; every Arrow batch emits only its nlist
-    # partial (sum, count) rows, reduced on the driver — no join, no
-    # explode shuffle. At 100 TB each round moves O(batches * nlist * dim)
-    # floats to the driver, independent of row count.
     partial_schema = T.StructType(
         [
             T.StructField("cluster", T.IntegerType(), False),
@@ -554,14 +388,12 @@ def ivf_assignments(
     for _ in range(iters):
         centroids = cents
 
-        def partials(
-            batches: Iterator[pd.DataFrame], centroids=centroids
-        ) -> Iterator[pd.DataFrame]:
+        def partials(batches, centroids=centroids):
             for pdf in batches:
                 if not len(pdf):
                     continue
                 raw = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-                asn = (_norm_rows(raw) @ centroids.T).argmax(axis=1)
+                asn = (unit_rows(raw) @ centroids.T).argmax(axis=1)
                 rows = []
                 for cl in np.unique(asn):
                     sel = raw[asn == cl]
@@ -573,21 +405,34 @@ def ivf_assignments(
         for cl, grp in pdf.groupby("cluster"):
             total = np.sum(np.stack([np.asarray(s) for s in grp["s"]]), axis=0)
             new[int(cl)] = total / grp["n"].sum()
-        cents = _norm_rows(new)
+        cents = unit_rows(new)
+    return _tag(base, cents, vec_col, "cluster"), cents
 
-    # Final pass: tag every row with its list id in one Arrow pass-through.
-    out_schema = T.StructType(list(df.schema.fields) + [T.StructField("cluster", T.IntegerType(), False)])
-    centroids = cents
 
-    def tag(batches: Iterator[pd.DataFrame], centroids=centroids) -> Iterator[pd.DataFrame]:
+def _tag(rows: DataFrame, cents: np.ndarray, vec_col: str, out_col: str) -> DataFrame:
+    """`rows` plus `out_col`, the index of each row's nearest centroid, in
+    one Arrow pass-through."""
+    schema = T.StructType(
+        list(rows.schema.fields) + [T.StructField(out_col, T.IntegerType(), False)]
+    )
+
+    def tag(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
             pdf = pdf.copy()
-            pdf["cluster"] = (_batch_matrix(pdf) @ centroids.T).argmax(axis=1).astype("int32")
+            pdf[out_col] = (unit_rows(pdf[vec_col]) @ cents.T).argmax(axis=1).astype("int32")
             yield pdf
 
-    return base.mapInPandas(tag, schema=out_schema), cents
+    return rows.mapInPandas(tag, schema=schema)
+
+
+def _probe_mask(q_unit: np.ndarray, cents: np.ndarray, nprobe: int) -> np.ndarray:
+    """(list, query) mask: each query probes its `nprobe` nearest lists."""
+    order = np.argsort(-(q_unit @ cents.T), axis=1, kind="stable")[:, :nprobe]
+    mask = np.zeros((len(cents), len(q_unit)), dtype=bool)
+    mask[order, np.arange(len(q_unit))[:, None]] = True
+    return mask
 
 
 def ivf_topk(
@@ -605,74 +450,21 @@ def ivf_topk(
     """IVF ANN top-k: probe the `nprobe` nearest inverted lists per query,
     exact-score only those candidates. `nprobe == nlist` degenerates to the
     exact scan (used by the oracle-checked gate query); smaller nprobe is
-    the 100 TB path — each query touches ~nprobe/nlist of the corpus, and
-    the cluster column can be a partition key so probes prune files.
+    the 100 TB path — each query touches ~nprobe/nlist of the corpus.
+
+    One scan, no join: each Arrow batch assigns its rows to lists (argmax
+    GEMM against the centroids) and scores a row only for the queries
+    that probe its list. Persisting the tagged corpus partitioned by list
+    (`ivf_build_index`) turns that mask into file-level pruning.
     """
     _, cents = ivf_assignments(corpus, nlist, iters, id_col, vec_col, init=init)
-    q_ids, q_mat = _normalized_matrix(queries, id_col, vec_col)
-    # probe_mask[cluster, j] = does query j probe this inverted list?
-    probe_order = np.argsort(-(q_mat @ cents.T), axis=1, kind="stable")[:, :nprobe]
-    probe_mask = np.zeros((nlist, len(q_ids)), dtype=bool)
-    for j, row in enumerate(probe_order):
-        probe_mask[row, j] = True
-
-    # One scan, no join: each Arrow batch assigns its rows to lists (argmax
-    # GEMM against the centroid matrix), masks scores to probing queries,
-    # and emits its local top-k per query. Rows in lists no query probes
-    # cost one small GEMM and are dropped — at scale, persisting the tagged
-    # corpus partitioned BY cluster turns that into file-level pruning
-    # (the probe set prunes partitions before the scan).
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            unit = mat / norms
-            asn = (unit @ cents.T).argmax(axis=1)
-            allowed = probe_mask[asn]  # (batch, nq)
-            keep = allowed.any(axis=1)
-            if not keep.any():
-                continue
-            ids, unit, allowed = ids[keep], unit[keep], allowed[keep]
-            sims = unit @ q_mat.T
-            if round_digits is not None:
-                sims = np.round(sims, round_digits)
-            sims[~allowed] = -np.inf
-            take = min(k + 1, len(ids))
-            out = []
-            for j, qid in enumerate(q_ids):
-                col = sims[:, j]
-                kth = np.partition(col, len(col) - take)[len(col) - take]
-                for i in np.nonzero(col >= kth)[0]:
-                    if ids[i] != qid and col[i] != -np.inf:
-                        out.append((qid, ids[i], col[i]))
-            yield pd.DataFrame(out, columns=["query_id", "neighbor_id", "sim"])
-
-    scored = ensure_min_partitions(corpus.select(id_col, vec_col)).mapInPandas(
-        score, schema=_SIM_SCHEMA
+    q_ids, q_unit = _normalized_matrix(queries, id_col, vec_col)
+    mask = _probe_mask(q_unit, cents, nprobe)
+    rows = ensure_min_partitions(corpus.select(id_col, vec_col))
+    return broadcast_topk(
+        rows, q_ids, q_unit, k, id_col, vec_col, round_digits,
+        probe=lambda pdf, unit: mask[(unit @ cents.T).argmax(axis=1)],
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
-
-
-_PAIR_SCHEMA = T.StructType(
-    [
-        T.StructField("id1", T.LongType(), False),
-        T.StructField("id2", T.LongType(), False),
-        T.StructField("sim", T.DoubleType(), True),
-    ]
-)
-
-_KNN_SCHEMA = T.StructType(
-    [
-        T.StructField("src_id", T.LongType(), False),
-        T.StructField("dst_id", T.LongType(), False),
-        T.StructField("sim", T.DoubleType(), True),
-    ]
-)
 
 
 def knn_graph(
@@ -682,7 +474,6 @@ def knn_graph(
     vec_col: str = "embedding",
     round_digits: int | None = 4,
     n_blocks: int = 8,
-    candidates_only: bool = False,
     dtype: str = "float64",
 ) -> DataFrame:
     """Exact k-nearest-neighbor graph over the corpus: for EVERY vector,
@@ -690,114 +481,19 @@ def knn_graph(
     (src_id, dst_id, sim, rank) — the adjacency list semantic clustering,
     diversity analysis, and hard-negative mining start from.
 
-    Unlike `brute_force_topk` (small query set broadcast against the
-    corpus), both sides here are corpus-sized, so nothing is collected or
-    broadcast: rows hash into `n_blocks` blocks, every unordered block
-    pair gets one float64 GEMM (`applyInPandas`, same blocking as
-    `embedding_near_pairs`), and each pair group emits only the per-row
-    LOCAL top-k against the other block (ties at the k-th value kept so
-    the global rank sees every tied candidate). The global window then
-    ranks O(|C| * n_blocks * k) candidate rows — linear in the corpus —
-    instead of the |C|^2 pair matrix.
-
-    Scale accounting: shuffle volume is n_blocks * |C| rows in, ~k *
-    n_blocks * |C| candidate rows out; executor memory is two blocks of
-    vectors per group (pick n_blocks as in `embedding_near_pairs` — the
-    GEMM itself streams source rows in bounded chunks, so the similarity
-    matrix never materializes beyond chunk x block_size ≈ 160 MB and the
-    vector blocks are the real footprint); compute is the inherent
-    O(|C|^2) of an exact graph — swap in the IVF/LSH families when
-    approximate recall suffices at 100 TB. tools/smoke_knn.py verifies
-    the candidate-row bound and times the full graph at 1M x 64-dim.
-
-    `dtype="float32"` halves the GEMM + selection memory traffic (the
-    wall-clock driver at corpus scale); keep the float64 default where
-    results feed a fixed-precision oracle comparison.
+    Both sides are corpus-sized, so nothing is collected or broadcast:
+    the block grid (self mode) with the local top-k emit rule, then one
+    global rank over O(|C| * n_blocks * k) candidate rows instead of the
+    |C|^2 pair matrix. `dtype="float32"` halves the GEMM + selection
+    memory traffic (the wall-clock driver at corpus scale); keep the
+    float64 default where results feed a fixed-precision oracle
+    comparison.
     """
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("b"),
+    schema = pair_schema("src_id", "dst_id")
+    cand = grid_pairs(
+        df, None, topk_emit(k, round_digits), schema, n_blocks, id_col, vec_col, dtype
     )
-    rep = base.select(
-        "id",
-        "v",
-        "b",
-        F.explode(F.array(*[F.lit(i) for i in range(n_blocks)])).alias("o"),
-    ).select(
-        "id",
-        "v",
-        "b",
-        F.least("b", "o").alias("b1"),
-        F.greatest("b", "o").alias("b2"),
-    )
-
-    def _local_topk(src_ids, src_unit, dst_ids, dst_unit, exclude_self: bool):
-        """Per source row, emit candidates >= its k-th best similarity
-        against the dst block (ties included; self dropped when square).
-        Sources stream in chunks so the similarity slab stays
-        chunk x |dst| (~<=160 MB) instead of |block|^2 — at 1M vectors a
-        full 62k x 62k block matrix would be ~31 GB and dominate executor
-        memory, defeating the documented two-blocks-of-vectors sizing.
-        The per-chunk top-k is fully vectorized (row-wise partition +
-        boolean gather): no per-row Python in the hot loop."""
-        m = len(dst_ids)
-        valid = m - 1 if exclude_self else m
-        if valid <= 0:
-            return pd.DataFrame(columns=["src_id", "dst_id", "sim"])
-        take = min(k, valid)
-        out = []
-        chunk = max(64, int(20_000_000 / max(1, m)))
-        for s in range(0, len(src_ids), chunk):
-            chunk_ids = src_ids[s : s + chunk]
-            sims = src_unit[s : s + chunk] @ dst_unit.T
-            if round_digits is not None:
-                sims = np.round(sims, round_digits)
-            if exclude_self:
-                # ids are unique: each row drops exactly its own column
-                sims[dst_ids[None, :] == chunk_ids[:, None]] = -np.inf
-            kth = np.partition(sims, m - take, axis=1)[:, m - take]
-            sel = sims >= kth[:, None]  # -inf self never selected
-            ii, jj = np.nonzero(sel)
-            out.append(
-                pd.DataFrame(
-                    {
-                        "src_id": chunk_ids[ii],
-                        "dst_id": dst_ids[jj],
-                        "sim": sims[ii, jj],
-                    }
-                )
-            )
-        if not out:
-            return pd.DataFrame(columns=["src_id", "dst_id", "sim"])
-        return pd.concat(out, ignore_index=True)
-
-    def score_pair(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        b1, b2 = key
-        ids = pdf["id"].to_numpy()
-        mat = np.array([np.asarray(v, dtype=np.dtype(dtype)) for v in pdf["v"]])
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        unit = (mat / norms).astype(np.dtype(dtype), copy=False)
-        if b1 == b2:
-            return _local_topk(ids, unit, ids, unit, exclude_self=True)
-        lmask = pdf["b"].to_numpy() == b1
-        lids, rids = ids[lmask], ids[~lmask]
-        if not len(lids) or not len(rids):
-            return pd.DataFrame(columns=["src_id", "dst_id", "sim"])
-        lunit, runit = unit[lmask], unit[~lmask]
-        # Each cross block-pair is seen exactly once: emit both directions.
-        fwd = _local_topk(lids, lunit, rids, runit, exclude_self=False)
-        rev = _local_topk(rids, runit, lids, lunit, exclude_self=False)
-        return pd.concat([fwd, rev], ignore_index=True)
-
-    cand = rep.groupBy("b1", "b2").applyInPandas(score_pair, schema=_KNN_SCHEMA)
-    if candidates_only:
-        # pre-window candidate stream — lets the scale smoke verify the
-        # O(|C| * n_blocks * k) bound empirically
-        return cand
-    w = Window.partitionBy("src_id").orderBy(F.col("sim").desc(), F.col("dst_id").asc())
-    return cand.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return rank(cand, "src_id", "dst_id", k)
 
 
 def embedding_near_pairs(
@@ -808,94 +504,12 @@ def embedding_near_pairs(
     round_digits: int | None = 4,
     n_blocks: int = 8,
 ) -> DataFrame:
-    """All pairs (id1 < id2) with cosine >= threshold (exact), blocked.
-
-    Nothing is collected to the driver. Each row hashes into one of
-    `n_blocks` blocks and is replicated to every unordered block pair it
-    participates in; `applyInPandas` then runs one float64 GEMM per block
-    pair and emits only above-threshold pairs. Every (x, y) pair lands in
-    exactly one group — (block(x), block(y)) sorted — so no dedup pass is
-    needed, and the id1 < id2 filter handles self/ordering inside the
-    diagonal groups.
-
-    Scale accounting: shuffle volume is n_blocks * |C| rows (the
-    replication), executor memory is two blocks ≈ 2|C|/n_blocks vectors
-    per group, and compute is the inherent O(|C|^2/2) of *exact* all-pairs
-    — pick n_blocks ≈ 2|C|·dim·8B / executor_mem to bound memory, and use
-    the MinHash/SimHash/LSH families when approximate recall is acceptable
-    at 100 TB.
-    """
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("b"),
-    )
-    rep = base.select(
-        "id",
-        "v",
-        "b",
-        F.explode(F.array(*[F.lit(i) for i in range(n_blocks)])).alias("o"),
-    ).select(
-        "id",
-        "v",
-        "b",
-        F.least("b", "o").alias("b1"),
-        F.greatest("b", "o").alias("b2"),
-    )
-
-    def score_pair(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        b1, b2 = key
-        ids = pdf["id"].to_numpy()
-        mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        unit = mat / norms
-        if b1 == b2:
-            left_ids, left_unit = ids, unit
-            right_ids, right_unit = ids, unit
-        else:
-            lmask = pdf["b"].to_numpy() == b1
-            left_ids, right_ids = ids[lmask], ids[~lmask]
-            if not len(left_ids) or not len(right_ids):
-                return pd.DataFrame(columns=["id1", "id2", "sim"])
-            left_unit, right_unit = unit[lmask], unit[~lmask]
-        # Stream left rows in chunks: the sims slab stays chunk x |right|
-        # (~<=160 MB) instead of |block|^2 — see knn_graph._local_topk.
-        parts = []
-        chunk = max(64, int(20_000_000 / max(1, len(right_ids))))
-        for s in range(0, len(left_ids), chunk):
-            sims = left_unit[s : s + chunk] @ right_unit.T
-            if round_digits is not None:
-                sims = np.round(sims, round_digits)
-            ii, jj = np.nonzero(sims >= threshold)
-            if not len(ii):
-                continue
-            l, r = left_ids[s + ii], right_ids[jj]
-            vals = sims[ii, jj]
-            if b1 == b2:
-                # Symmetric: each pair appears at [i,j] and [j,i];
-                # id1 < id2 keeps one and drops self-matches.
-                keep = l < r
-                l, r, vals = l[keep], r[keep], vals[keep]
-                parts.append(pd.DataFrame({"id1": l, "id2": r, "sim": vals}))
-            else:
-                # Off-diagonal: each cross pair is computed exactly once
-                # here — order the ids rather than filtering, or the
-                # pair is lost.
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "id1": np.minimum(l, r),
-                            "id2": np.maximum(l, r),
-                            "sim": vals,
-                        }
-                    )
-                )
-        if not parts:
-            return pd.DataFrame(columns=["id1", "id2", "sim"])
-        return pd.concat(parts, ignore_index=True)
-
-    return rep.groupBy("b1", "b2").applyInPandas(score_pair, schema=_PAIR_SCHEMA)
+    """All pairs (id1 < id2) with cosine >= threshold (exact): the block
+    grid in self mode with the threshold emit rule. Nothing is collected
+    to the driver and no dedup pass is needed (every pair lands in exactly
+    one group)."""
+    emit = threshold_emit(threshold, False, round_digits)
+    return grid_pairs(df, None, emit, pair_schema("id1", "id2"), n_blocks, id_col, vec_col)
 
 
 def semantic_dedup(
@@ -935,15 +549,6 @@ def semantic_dedup(
     )
 
 
-_CROSS_PAIR_SCHEMA = T.StructType(
-    [
-        T.StructField("new_id", T.LongType()),
-        T.StructField("ref_id", T.LongType()),
-        T.StructField("sim", T.DoubleType()),
-    ]
-)
-
-
 def semantic_cross_pairs(
     new_df: DataFrame,
     ref_df: DataFrame,
@@ -953,73 +558,14 @@ def semantic_cross_pairs(
     round_digits: int | None = 4,
     n_blocks: int = 8,
 ) -> DataFrame:
-    """All NEW x REF pairs with cosine >= threshold (exact, blocked) —
-    the embedding analogue of `minhash_cross_pairs`: incremental
-    semantic dedup checks a new batch against an already-curated corpus
-    WITHOUT re-pairing the reference against itself.
-
-    Each side blocks independently on xxhash64(id); a new row in block
-    i is replicated to every (i, j) group and a ref row in block j to
-    every (i, j) group, so each cross pair meets in exactly ONE group —
-    one float64 GEMM per group, only above-threshold pairs emitted.
-    Shuffle volume is n_blocks * (|new| + |ref|) rows; ref-vs-ref and
-    new-vs-new work is never done (that is the whole point — at 100 TB
-    the reference corpus dominates and re-blocking it quadratically per
-    increment would swamp the delta's own cost).
-    """
-    olist = F.array(*[F.lit(i) for i in range(n_blocks)])
-    new = new_df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("bn"),
-        F.lit(0).alias("side"),
-    ).select("id", "v", "side", "bn", F.explode(olist).alias("br"))
-    ref = ref_df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("br"),
-        F.lit(1).alias("side"),
-    ).select("id", "v", "side", F.explode(olist).alias("bn"), "br")
-    rep = new.unionByName(ref)
-
-    def score_pair(_key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        nmask = pdf["side"].to_numpy() == 0
-        new_ids = pdf["id"].to_numpy()[nmask]
-        ref_ids = pdf["id"].to_numpy()[~nmask]
-        if not len(new_ids) or not len(ref_ids):
-            return pd.DataFrame(columns=["new_id", "ref_id", "sim"])
-        mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf["v"]])
-        norms = np.linalg.norm(mat, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        unit = mat / norms
-        new_unit, ref_unit = unit[nmask], unit[~nmask]
-        parts = []
-        # chunk the new side: the sims slab stays chunk x |ref-block|
-        # (<=160 MB), same accounting as embedding_near_pairs
-        chunk = max(64, int(20_000_000 / max(1, len(ref_ids))))
-        for s in range(0, len(new_ids), chunk):
-            sims = new_unit[s : s + chunk] @ ref_unit.T
-            if round_digits is not None:
-                sims = np.round(sims, round_digits)
-            ii, jj = np.nonzero(sims >= threshold)
-            if not len(ii):
-                continue
-            parts.append(
-                pd.DataFrame(
-                    {
-                        "new_id": new_ids[s + ii],
-                        "ref_id": ref_ids[jj],
-                        "sim": sims[ii, jj],
-                    }
-                )
-            )
-        if not parts:
-            return pd.DataFrame(columns=["new_id", "ref_id", "sim"])
-        return pd.concat(parts, ignore_index=True)
-
-    return rep.groupBy("bn", "br").applyInPandas(
-        score_pair, schema=_CROSS_PAIR_SCHEMA
-    )
+    """All NEW x REF pairs (new_id, ref_id, sim) with cosine >= threshold
+    (exact): the block grid in cross mode, the embedding analogue of
+    `minhash_cross_pairs`. Incremental semantic dedup checks a new batch
+    against an already-curated corpus WITHOUT re-pairing the reference
+    against itself: ref-vs-ref and new-vs-new work is never done."""
+    emit = threshold_emit(threshold, True, round_digits)
+    schema = pair_schema("new_id", "ref_id", nullable=True)
+    return grid_pairs(new_df, ref_df, emit, schema, n_blocks, id_col, vec_col)
 
 
 def semantic_dedup_incremental(
@@ -1059,6 +605,13 @@ def semantic_dedup_incremental(
 # Persisted IVF index: cluster-partitioned Parquet + file-level probe pruning
 # ---------------------------------------------------------------------------
 
+def _centroids(path: str) -> np.ndarray:
+    import json
+
+    with open(f"{path}/centroids.json", encoding="utf-8") as f:
+        return np.array(json.load(f), dtype=np.float64)
+
+
 def ivf_build_index(
     corpus: DataFrame,
     path: str,
@@ -1070,11 +623,11 @@ def ivf_build_index(
 ) -> np.ndarray:
     """Materialize the IVF index: the corpus written as Parquet
     PARTITIONED BY its inverted-list id, plus the centroid matrix as a
-    tiny sidecar table. This is the 100 TB serving path the in-memory
-    `ivf_topk` docstring points at — once the lists are partition
-    directories, a probe of `nprobe` lists is file-level partition
-    pruning: queries never open the other `nlist - nprobe` lists'
-    files at all."""
+    JSON sidecar. A probe of `nprobe` lists is then file-level partition
+    pruning: queries never open the other lists' files."""
+    import json
+    import os
+
     tagged, cents = ivf_assignments(corpus, nlist, iters, id_col, vec_col,
                                     init=init)
     (
@@ -1088,15 +641,10 @@ def ivf_build_index(
         .partitionBy("ivf_cluster")
         .parquet(f"{path}/lists")
     )
-    # Centroids are (nlist x dim) driver metadata — a JSON sidecar, not a
-    # Spark job: saves a write+read job pair per build/serve without
-    # touching the distributed part of the index.
-    import json as _json
-    import os as _os
-
-    _os.makedirs(path, exist_ok=True)
+    # (nlist x dim) driver metadata: a sidecar file, not a Spark job pair
+    os.makedirs(path, exist_ok=True)
     with open(f"{path}/centroids.json", "w", encoding="utf-8") as f:
-        _json.dump([[float(x) for x in row] for row in cents], f)
+        json.dump([[float(x) for x in row] for row in cents], f)
     return cents
 
 
@@ -1114,64 +662,16 @@ def ivf_topk_indexed(
     table, pick each query's `nprobe` nearest lists, and scan ONLY those
     partition directories (`ivf_cluster IN (...)` is a partition filter —
     Catalyst prunes the files before the scan; asserted by plan test).
-    Scoring inside the probed lists reuses the exact batch-GEMM kernel."""
-    import json as _json
-
-    with open(f"{path}/centroids.json", encoding="utf-8") as f:
-        cents = np.array(_json.load(f), dtype=np.float64)
-    q_ids, q_mat = _normalized_matrix(queries, id_col, vec_col)
-    nprobe = min(nprobe, len(cents))
-    probe_order = np.argsort(-(q_mat @ cents.T), axis=1, kind="stable")[:, :nprobe]
-    probed = sorted({int(c) for row in probe_order for c in row})
-
-    lists = spark.read.parquet(f"{path}/lists").where(
-        F.col("ivf_cluster").isin(probed)
-    )
-    # per-query probe mask over the probed subset
-    probe_mask = {int(c): np.zeros(len(q_ids), dtype=bool) for c in probed}
-    for j, row in enumerate(probe_order):
-        for c in row:
-            probe_mask[int(c)][j] = True
-    masks = probe_mask
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            n = np.linalg.norm(mat, axis=1, keepdims=True)
-            n[n == 0] = 1.0
-            sims = (mat / n) @ q_mat.T  # rows x queries
-            # round BEFORE ranking and exclude self-matches — the exact
-            # contract brute_force_topk pins, so nprobe=nlist reproduces it
-            if round_digits is not None:
-                sims = np.round(sims, round_digits)
-            clusters = pdf["ivf_cluster"].to_numpy()
-            out = []
-            for j, qid in enumerate(q_ids):
-                allowed = np.fromiter(
-                    (masks[int(c)][j] for c in clusters), dtype=bool, count=len(clusters)
-                )
-                if not allowed.any():
-                    continue
-                col = np.where(allowed, sims[:, j], -np.inf)
-                take = min(k + 1, int(allowed.sum()))
-                kth = np.partition(col, len(col) - take)[len(col) - take]
-                for i in np.nonzero(col >= kth)[0]:
-                    if ids[i] != qid:
-                        out.append((qid, ids[i], col[i]))
-            yield pd.DataFrame(out, columns=["query_id", "neighbor_id", "sim"])
-
-    from pyspark.sql import Window
-
-    scored = lists.mapInPandas(
-        score, schema="query_id long, neighbor_id long, sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    Scoring inside the probed lists is the broadcast-query top-k kernel,
+    masked to each query's own lists."""
+    cents = _centroids(path)
+    q_ids, q_unit = _normalized_matrix(queries, id_col, vec_col)
+    mask = _probe_mask(q_unit, cents, nprobe)
+    probed = np.nonzero(mask.any(axis=1))[0].tolist()
+    lists = spark.read.parquet(f"{path}/lists").where(F.col("ivf_cluster").isin(probed))
+    return broadcast_topk(
+        lists, q_ids, q_unit, k, id_col, vec_col, round_digits,
+        probe=lambda pdf, unit: mask[pdf["ivf_cluster"].to_numpy()],
     )
 
 
@@ -1187,41 +687,16 @@ def ivf_index_append(
     (`ivf_topk_indexed`) is unchanged: probes still arrive as partition
     filters over the union of old and appended files.
 
-    This is the standard IVF trade: assignments stay exact against the
-    FROZEN centroids (at nprobe = nlist results remain bit-identical to
-    brute force over the grown corpus), while recall at partial probes
-    drifts only as the data distribution drifts from the trained
-    centroids — rebuild with `ivf_build_index` when drift warrants.
-
-    One Arrow pass to tag + one repartition-by-list append; returns the
+    Assignments stay exact against the FROZEN centroids (at nprobe =
+    nlist results remain bit-identical to brute force over the grown
+    corpus); recall at partial probes drifts only as the data drifts from
+    them — rebuild with `ivf_build_index` when it does. Returns the
     number of vectors appended.
     """
-    import json as _json
-
-    with open(f"{path}/centroids.json", encoding="utf-8") as f:
-        cents = np.array(_json.load(f), dtype=np.float64)
-
-    base = new_vectors.select(id_col, vec_col)
-    out_schema = T.StructType(
-        list(base.schema.fields) + [T.StructField("ivf_cluster", T.IntegerType(), False)]
-    )
-
-    def tag(batches: Iterator[pd.DataFrame], centroids=cents) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            norms[norms == 0] = 1.0
-            pdf = pdf.copy()
-            pdf["ivf_cluster"] = ((mat / norms) @ centroids.T).argmax(axis=1).astype(
-                "int32"
-            )
-            yield pdf
-
-    tagged = ensure_min_partitions(base).mapInPandas(tag, schema=out_schema)
+    rows = ensure_min_partitions(new_vectors.select(id_col, vec_col))
     (
-        tagged.repartition("ivf_cluster")
+        _tag(rows, _centroids(path), vec_col, "ivf_cluster")
+        .repartition("ivf_cluster")
         .write.mode("append")
         .partitionBy("ivf_cluster")
         .parquet(f"{path}/lists")

@@ -48,8 +48,23 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    _ship_package()
     _start_python_pool_keepalive(spark)
     return spark
+
+
+def _ship_package() -> None:
+    """Pickle every `sneldb_spark` function BY VALUE into the Python UDFs
+    and Arrow kernels it builds, so workers never import the package: a
+    kernel that calls a module-level helper runs from any working
+    directory and on executors without the repo. One pure-Python switch
+    in the shared cloudpickle, so it holds for classic and Connect
+    sessions alike; repeated calls are no-ops."""
+    from pyspark import cloudpickle
+
+    import sneldb_spark
+
+    cloudpickle.register_pickle_by_value(sneldb_spark)
 
 
 # Spark's PythonWorkerFactory evicts workers idle for > 1 minute

@@ -85,9 +85,6 @@ def streaming_preceded_by(
     With a window, Bs older than the window relative to their link's
     newest event are dropped after the batch."""
 
-    # nested (not module-level) so cloudpickle ships it BY VALUE:
-    # executors never need sneldb_spark importable (the house rule for
-    # every Arrow kernel in this repo)
     def kernel(batch: pd.DataFrame, st: tuple | None) -> tuple:
         st_links, st_ts, st_id = st if st is not None else ((), (), ())
         S = len(st_links)
@@ -220,8 +217,6 @@ def streaming_chain(
         out_fields.append(T.StructField(f"s{i}_event_id", T.LongType()))
         out_fields.append(T.StructField(f"s{i}_timestamp", T.LongType()))
 
-    # nested (not module-level) so cloudpickle ships it BY VALUE — see
-    # streaming_preceded_by
     def kernel(batch: pd.DataFrame, st: tuple | None) -> tuple:
         """Vectorized multi-link chain matching over one sorted micro-batch.
 

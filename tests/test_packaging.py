@@ -132,3 +132,61 @@ def test_editable_install_into_isolated_target(tmp_path):
     )
     assert helped.returncode == 0, helped.stderr[-1000:]
     assert "sneldb-cli" in helped.stdout
+
+
+_WORKER_KERNELS = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import functions as F
+from sneldb_spark.pipeline.multimodal import extract_features, resize_images
+from sneldb_spark.pipeline.similarity import brute_force_topk, ivf_topk, lsh_topk
+from sneldb_spark.pipeline.text import unigram_encode
+from sneldb_spark.session import get_spark
+
+spark = get_spark(master="local[2]", shuffle_partitions=2)
+emb = spark.createDataFrame(
+    [(i, [float((i * 7 + j) % 5) for j in range(8)]) for i in range(20)],
+    "vec_id long, embedding array<double>",
+)
+q = emb.where("vec_id < 3")
+ran = {
+    "lsh_topk": lsh_topk(emb, q, k=2, planes=8, dim=8).count(),
+    "brute_force_topk": brute_force_topk(emb, q, k=2).count(),
+    "ivf_topk": ivf_topk(emb, q, k=2, nlist=2, nprobe=2).count(),
+}
+docs = spark.createDataFrame(
+    [(i, f"spark join{i % 3} hash") for i in range(6)], "doc_id long, text string"
+)
+vocab = [(c, -3.0) for c in "abcdefghijklmnopqrstuvwxyz0123456789"] + [("join", -1.0)]
+ran["unigram_encode"] = unigram_encode(docs, vocab).count()
+media = docs.select(
+    F.col("doc_id").alias("media_id"),
+    F.lit("image/png").alias("mime"),
+    F.encode("text", "UTF-8").alias("data"),
+    (F.lit(100) + F.col("doc_id") * 100).cast("int").alias("meta_width"),
+    F.lit(300).cast("int").alias("meta_height"),
+    F.lit(None).cast("long").alias("meta_duration_ms"),
+)
+ran["extract_features"] = extract_features(media).count()
+ran["resize_images"] = resize_images(media.drop("meta_duration_ms"), 256, 256).count()
+print(sorted(ran.items()))
+assert all(ran.values()), ran
+"""
+
+
+def test_kernels_run_where_workers_cannot_import_the_package(tmp_path):
+    """get_spark ships sneldb_spark to the Python workers: with the repo on
+    the driver's sys.path only (cwd elsewhere, no PYTHONPATH), Arrow
+    kernels that call module-level helpers still run."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SNELDB_DRIVER_MEM="1g", SNELDB_PYTHON_POOL_KEEPALIVE="0")
+    out = subprocess.run(
+        [sys.executable, "-c", _WORKER_KERNELS, REPO],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "ModuleNotFoundError" not in out.stderr

@@ -2750,3 +2750,49 @@ def test_near_pair_builds_take_few_py4j_calls(docs, emb, py4j_calls, op):
         "simhash": lambda: simhash_near_pairs(docs, max_hamming=8),
     }[op]()
     assert py4j_calls[0] - start <= NEAR_PAIR_BUILD_CALLS[op]
+
+
+@pytest.mark.parametrize(
+    "case", ["minhash", "embedding-0.3", "embedding-0.5", "embedding-0.7"]
+)
+def test_cross_mode_over_a_and_a_equals_self_mode(spark, case):
+    """The near-pair core's mode switch: cross mode over (A, A), kept to
+    new_id < ref_id, gives exactly self mode's pairs over A, scores
+    (est_jaccard / sim) included."""
+    import numpy as np
+
+    from sneldb_spark.pipeline.dedup import minhash_cross_pairs, minhash_dedup_pairs
+    from sneldb_spark.pipeline.similarity import (
+        embedding_near_pairs,
+        semantic_cross_pairs,
+    )
+
+    rng = np.random.default_rng(7)
+    if case == "minhash":
+        # 30 base texts, 10 variants each with 0-3 swapped words
+        words = [f"w{i}" for i in range(200)]
+        rows = []
+        for base in range(30):
+            text = [str(w) for w in rng.choice(words, 24)]
+            for v in range(10):
+                t = list(text)
+                for pos in rng.choice(24, v % 4, replace=False):
+                    t[pos] = str(rng.choice(words))
+                rows.append((base * 10 + v, " ".join(t)))
+        a = spark.createDataFrame(rows, "doc_id long, text string")
+        want = minhash_dedup_pairs(a, threshold=0.5)
+        got = minhash_cross_pairs(a, a, threshold=0.5)
+    else:
+        t = float(case.split("-")[1])
+        centers = rng.normal(size=(20, 32))
+        vecs = centers[np.arange(400) % 20] + rng.normal(scale=0.8, size=(400, 32))
+        a = spark.createDataFrame(
+            [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+            "vec_id long, embedding array<double>",
+        )
+        want = embedding_near_pairs(a, t, n_blocks=4)
+        got = semantic_cross_pairs(a, a, t, n_blocks=4)
+    want = sorted(map(tuple, want.collect()))
+    got = sorted(map(tuple, got.where("new_id < ref_id").collect()))
+    assert len(want) > 100
+    assert got == want

@@ -1,10 +1,10 @@
 """Scale smoke for the exact corpus k-NN graph: synthesize N x dim
 vectors, size n_blocks by the documented rule (two blocks of vectors per
 group; the chunked GEMM bounds the similarity slab), then run the
-blocked kernel ONCE, counting the pre-window candidate stream against
-the documented O(|C| * n_blocks * k) bound and windowing those same
-candidates into the final graph (exactly knn_graph's plan, split so the
-O(|C|^2) kernel is not paid twice).
+near-pair core's block-grid candidate stage ONCE, counting its candidate
+stream against the documented O(|C| * n_blocks * k) bound and ranking
+those same candidates into the final graph (exactly knn_graph's plan,
+split so the O(|C|^2) kernel is not paid twice).
 
 Usage: python tools/smoke_knn.py [n_vectors] [dim] [k] [n_blocks] [dtype]
 """
@@ -17,10 +17,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from sneldb_spark.pipeline.similarity import knn_graph
+from sneldb_spark.pipeline.near import grid_pairs, pair_schema, rank, topk_emit
 from sneldb_spark.session import get_spark
 
 
@@ -55,9 +54,9 @@ def main():
     vecs.count()
 
     t0 = time.perf_counter()
-    cand = knn_graph(
-        vecs, k=k, n_blocks=n_blocks, candidates_only=True,
-        round_digits=None, dtype=dtype,
+    cand = grid_pairs(
+        vecs, None, topk_emit(k, None), pair_schema("src_id", "dst_id"),
+        n_blocks, "vec_id", "embedding", dtype,
     ).persist()
     cand_rows = cand.count()
     t1 = time.perf_counter()
@@ -69,17 +68,10 @@ def main():
     )
     assert cand_rows <= bound * 1.5, "candidate bound violated beyond tie slack"
 
-    # the same global window knn_graph applies, over the persisted
+    # the same global rank knn_graph applies, over the persisted
     # candidates — delta cost is one |C|*n_blocks*k-row shuffle
-    w = Window.partitionBy("src_id").orderBy(
-        F.col("sim").desc(), F.col("dst_id").asc()
-    )
     t2 = time.perf_counter()
-    edges = (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .count()
-    )
+    edges = rank(cand, "src_id", "dst_id", k).count()
     t3 = time.perf_counter()
     print(f"graph_edges={edges} expect={n * k} window_pass={t3 - t2:.1f}s")
     assert edges == n * k
